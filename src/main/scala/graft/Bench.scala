@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
 
@@ -17,7 +18,7 @@ object Bench {
     * notices the RDD is unreachable), doubling resident storage blocks and
     * taxing the timed pass with memory pressure + GC. Explicitly unpersist
     * everything, then give the ContextCleaner a GC cycle to finish. */
-  private[graft] def resetStorage(spark: SparkSession): Unit = {
+  private def resetStorage(spark: SparkSession): Unit = {
     SparkEntry.clearPanelCache(spark)
     spark.sqlContext.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach { rdd =>
@@ -29,14 +30,15 @@ object Bench {
 
   /** One ambient-slow canary run: a fixed-cost, data-independent,
     * single-partition xxhash64 fold (allocation-light, codegen'd) whose
-    * quiet steady-state cost is pinned by ProbeCanary (ARCHITECTURE.md).
+    * quiet steady-state cost was calibrated in round 12 (0.46-0.49 s
+    * min-of-3, ARCHITECTURE.md "Ambient-slow canary pinned").
     * Timed as min-of-3 immediately before and after the timed passes:
     * the round-11 official bench's run 3 was ~15% uniformly slow with
     * internally-consistent passes, so load/GC/pass-spread all read
     * "clean" — a calibration job against a pinned budget is the only
     * stamp that catches that regime. The % keeps the ANSI-mode long sum
     * inside range (|sum| ≤ 1e14). */
-  private[graft] def canarySec(spark: SparkSession): Double = {
+  private def canarySec(spark: SparkSession): Double = {
     import org.apache.spark.sql.functions.{col, sum, xxhash64}
     val t0 = System.nanoTime()
     spark.range(0L, 100000000L, 1L, 1)
@@ -44,7 +46,7 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private[graft] def canaryMinOf3(spark: SparkSession): Double =
+  private def canaryMinOf3(spark: SparkSession): Double =
     (1 to 3).map(_ => canarySec(spark)).min
 
   private def gcMillis(): Long = {
@@ -65,16 +67,54 @@ object Bench {
       .split("\\s+").take(3).map(_.toDouble).toSeq
     catch { case _: Throwable => Seq.empty }
 
+  // Round-7 honesty fix: time (and warm) with the "noop" sink, not
+  // `.count()`. Under count, Catalyst prunes the final projection and
+  // ELIMINATES unique-right-side left joins — for queries like
+  // q_gopher_quality_docs / q_repetition_docs whose last step is a
+  // per-doc stats left join, count() measured the scan, not the
+  // operator (the round-7 text-probe anti-lesson, ARCHITECTURE.md). The
+  // noop datasource forces full evaluation of every output column with
+  // zero sink cost.
+  private def exec(df: DataFrame): Unit =
+    df.write.mode("overwrite").format("noop").save()
+
+  /** One pass's successful query times, and the queries that threw. */
+  private[graft] final case class Pass(times: Seq[(String, Double)], failed: Seq[String])
+
+  /** Build and run every query of `queries` on `dir` once, in name order
+    * (alphabetical order pins the suite order across rounds: Map iteration
+    * order reshuffles whenever a query is added). Each query's timed
+    * bracket spans build plus noop write. A query that throws is reported
+    * on stderr with its error and lands in `failed`, never in `times`. */
+  private[graft] def runPass(spark: SparkSession,
+      queries: Map[String, (SparkSession, String) => DataFrame], dir: String): Pass = {
+    val failed = Seq.newBuilder[String]
+    val times = queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val error = try { exec(fn(spark, dir)); None } catch { case NonFatal(e) => Some(e) }
+      val sec = (System.nanoTime() - t0) / 1e9
+      error match {
+        case None => Some(name -> sec)
+        case Some(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed += name
+          None
+      }
+    }
+    Pass(times, failed.result())
+  }
+
+  /** Per-query min over `passes`, in name order, of every query not in
+    * `failed`. A query that threw in any pass is left out. */
+  private[graft] def minOverPasses(passes: Seq[Seq[(String, Double)]],
+      failed: Set[String]): Seq[(String, Double)] =
+    passes.head.map(_._1).filterNot(failed).map { name =>
+      name -> passes.map(_.toMap.apply(name)).min
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Session.local(core.Session.cpus)
     // Round-13 verdict #1 (fourth consecutive load-degraded official
     // artifact): re-rolls AFTER the passes cannot outwait a box that stays
     // loaded, so GATE THE START — spin-wait (bounded, default 5 min) until
@@ -113,19 +153,8 @@ object Bench {
     val warmDir0 = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", sfDir)
     val warmDir = if (warmDir0.isEmpty || new java.io.File(warmDir0).isDirectory) warmDir0 else sfDir
     val gc0 = gcMillis()
-    // Round-7 honesty fix: time (and warm) with the "noop" sink, not
-    // `.count()`. Under count, Catalyst prunes the final projection and
-    // ELIMINATES unique-right-side left joins — for queries like
-    // q_gopher_quality_docs / q_repetition_docs whose last step is a
-    // per-doc stats left join, count() measured the scan, not the
-    // operator (the ProbeText anti-lesson). The noop datasource forces
-    // full evaluation of every output column with zero sink cost.
-    def exec(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    if (warmDir.nonEmpty)
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try exec(fn(spark, warmDir)) catch { case _: Throwable => () }
-      }
+    val warmFailed =
+      if (warmDir.nonEmpty) runPass(spark, SparkEntry.queries, warmDir).failed else Nil
     val gcWarm = gcMillis() - gc0
     // Round-6 fix: the warm pass must not leak storage into the timed pass.
     resetStorage(spark)
@@ -134,11 +163,11 @@ object Bench {
     // hardware): with the JVM fully warm (post warm-pass — the same regime
     // every gated reading runs in; a pre-warm calibration measured ~40%
     // high), take a min-of-3 and pin budget = 1.15 x that floor — the
-    // headroom the old constant encoded (ProbeCanary floor 0.46-0.49 s
-    // x 1.15 ~= 0.55). Later readings against this budget detect the
-    // uniformly-slow-REGIME drift the load/GC/spread stamps miss. If the
-    // load gate timed out the calibration inflates with the loaded box,
-    // but that run is already non-quiet by the load stamp; the raw
+    // headroom the old constant encoded (round-12 canary floor 0.46-0.49 s
+    // x 1.15 ~= 0.55, ARCHITECTURE.md). Later readings against this budget
+    // detect the uniformly-slow-REGIME drift the load/GC/spread stamps
+    // miss. If the load gate timed out the calibration inflates with the
+    // loaded box, but that run is already non-quiet by the load stamp; the raw
     // calibration value and the rule are recorded in the artifact so
     // rounds stay comparable.
     canarySec(spark) // codegen + JIT warm: the budget is steady-state
@@ -148,8 +177,8 @@ object Bench {
     // Round-14 verdict task 4 — the self-calibrated budget's blind spot: a
     // box that is uniformly slow INCLUDING at calibration time earns a loose
     // budget and can stamp itself clean (the ledgered 156.6 s r14 attempt).
-    // Sanity-floor the calibration against the committed ProbeCanary quiet
-    // min-of-3 for this box class (0.46-0.49 s, ARCHITECTURE.md round-12
+    // Sanity-floor the calibration against the round-12 canary quiet
+    // min-of-3 for that box class (0.46-0.49 s, ARCHITECTURE.md round-12
     // measurements; env-overridable for other hardware): a calibration more
     // than 1.3x that quiet floor means the box was already slow when the
     // budget was set, so the clean stamp is suspect. Warn + stamp only —
@@ -162,18 +191,9 @@ object Bench {
       f"[bench] CAL SUSPECT: calibration $canaryCal%.3f s > 1.3x quiet floor " +
       f"$calQuietRef%.2f s - the self-calibrated canary budget is loose; a " +
       "clean stamp from this run may hide a uniformly-slow box")
-    // Alphabetical order pins the suite order across rounds (Map iteration
-    // order reshuffles whenever a query is added, which made round-over-round
-    // per-query comparisons meaningless).
-    def timedPass(): Seq[(String, Double)] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { exec(fn(spark, sfDir)) } catch { case _: Throwable => () }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
     // Min over 2+ timed passes per query: the round-6 driver run flagged
-    // five queries ≥2× slower that the committed 3-repeat protocol could
-    // not reproduce (ProbeRepeat, ARCHITECTURE.md) — single-pass numbers
+    // five queries ≥2× slower that a 3-repeat protocol could not
+    // reproduce (round-7 forensics, ARCHITECTURE.md) — single-pass numbers
     // carry one-off GC/compile/machine-load hits. The min is the
     // steady-state execution estimate; storage is reset between passes so
     // each starts from the driver's timed-pass state.
@@ -189,20 +209,20 @@ object Bench {
     // passes (a slow machine only ever inflates a time, so extra passes
     // can't fabricate a fast number), but the CLEAN stamp is earned
     // only by the quiet agreeing subset.
-    final case class PassRec(times: Seq[(String, Double)], gcMs: Long,
-        load1: Double, canaryBefore: Double, canaryAfter: Double) {
+    final case class PassRec(times: Seq[(String, Double)], failed: Seq[String],
+        gcMs: Long, load1: Double, canaryBefore: Double, canaryAfter: Double) {
       def wall: Double = times.map(_._2).sum
       def quiet: Boolean = load1 <= 2.0 && canaryBefore <= canaryBudget &&
         canaryAfter <= canaryBudget && wall > 0 &&
         gcMs <= 0.05 * wall * 1000.0
     }
-    def runPass(first: Boolean, canaryBefore: Double): PassRec = {
+    def timedPass(first: Boolean, canaryBefore: Double): PassRec = {
       if (!first) resetStorage(spark)
       val l1 = loadAvg().headOption.getOrElse(0.0)
       val g0 = gcMillis()
-      val ts = timedPass()
+      val pass = runPass(spark, SparkEntry.queries, sfDir)
       val g1 = gcMillis()
-      PassRec(ts, g1 - g0, l1, canaryBefore, canaryMinOf3(spark))
+      PassRec(pass.times, pass.failed, g1 - g0, l1, canaryBefore, canaryMinOf3(spark))
     }
     val rerollMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_REROLL", "3").toInt.max(0)
     val neededQuiet = math.min(2, passes)
@@ -262,7 +282,7 @@ object Bench {
       // inherit each other's — gate it too (measured: pass 1 failed quiet
       // on load1=3.77 right after a start-gate exit at 2.08)
       passGate()
-      passRecs = passRecs :+ runPass(passRecs.isEmpty, before)
+      passRecs = passRecs :+ timedPass(passRecs.isEmpty, before)
       // Per-pass quiet forensics (stderr, additions-only): a degraded
       // stamp was previously undiagnosable — the JSON says 0/N quiet but
       // not WHICH gate (load / GC / canary) each pass failed.
@@ -283,9 +303,8 @@ object Bench {
         (if (fails.isEmpty) "" else fails.mkString(" [", ", ", "]")))
     }
     val allPasses = passRecs.map(_.times)
-    val results = allPasses.head.map(_._1).map { name =>
-      name -> allPasses.map(_.toMap.apply(name)).min
-    }
+    val failed = (warmFailed ++ passRecs.flatMap(_.failed)).distinct.sorted
+    val results = minOverPasses(allPasses, failed.toSet)
     val gcTimed = passRecs.map(_.gcMs).sum
     val canaryEnd = passRecs.last.canaryAfter
     val loadEnd = loadAvg()
@@ -330,10 +349,8 @@ object Bench {
     // inflates); only the comparable headline is normalized.
     val quietPasses =
       if (degraded) allPasses else accepted.take(neededQuiet).map(_.times)
-    val totalQuiet = allPasses.head.map(_._1)
-      .filterNot(smokeQueries)
-      .map(name => quietPasses.map(_.toMap.apply(name)).min)
-      .sum
+    val totalQuiet = minOverPasses(quietPasses, failed.toSet)
+      .filterNot { case (n, _) => smokeQueries(n) }.map(_._2).sum
     if (degraded) System.err.println(
       f"[bench] DEGRADED RUN: quiet=${quietIdx.size}/${passRecs.size} " +
       f"(need $neededQuiet agreeing) rerolls=$rerolls " +
@@ -350,8 +367,9 @@ object Bench {
       s""""gc_ms":{"warm":$gcWarm,"timed":$gcTimed},""" +
       s""""pass_totals":${arr(passRecs.map(_.wall))},""" +
       s""""quiet_passes":${quietIdx.mkString("[", ",", "]")},"rerolls":$rerolls"""
+    val failedArr = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${obj(engine)},"smoke":${obj(smoke)},"smoke_total":${fmt(smokeTotal)},"passes":${passRecs.size},$machine,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${obj(engine)},"failed":$failedArr,"smoke":${obj(smoke)},"smoke_total":${fmt(smokeTotal)},"passes":${passRecs.size},$machine,"sf":"$sfDir"}"""
     // Three channels, ordered for the driver's head-truncating tail capture
     // (BENCH_r03/r04/r05 all lost the LONG line's head and parsed null):
     //   1. the full per-query line FIRST on stdout (humans + generous windows),
@@ -384,7 +402,7 @@ object Bench {
       "q_cms_stream_docs", "q_ar1_lineitem", "q_rrf_hybrid_docs")
     val headlined = results.filter { case (n, _) => headline.contains(n) }
     val shortLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${obj(headlined)},"smoke_total":${fmt(smokeTotal)},"n_queries":${engine.size},"passes":${passRecs.size},$machine,"detail":"bench_out.json","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${obj(headlined)},"failed":$failedArr,"smoke_total":${fmt(smokeTotal)},"n_queries":${engine.size},"passes":${passRecs.size},$machine,"detail":"bench_out.json","sf":"$sfDir"}"""
     println(shortLine)
     spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: dump the PRODUCTION inputs the multimodal fixture generator
@@ -17,11 +16,7 @@ import org.apache.spark.sql.functions._
 object DumpMedia {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Session.local(core.Session.cpus)
     val docs = graft.core.Tables.documents(spark, sfDir)
     val media = ext.Multimodal.syntheticMedia(docs, "doc_id", "text")
     media.filter(col("media_id") < 120)

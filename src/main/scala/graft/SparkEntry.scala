@@ -1068,8 +1068,8 @@ object SparkEntry {
     }
     // MEASURED AND REJECTED (r16): pinning the kernel output before the
     // orderBy. The range exchange's sampling pass does re-execute the
-    // shuffle-read + sort + kernel chain (ProbeStages: the 15-task kernel
-    // stage TWICE, 273 + 380 ms; ProbeJobs: the input exchange read twice,
+    // shuffle-read + sort + kernel chain (r16 profile: the 15-task kernel
+    // stage TWICE, 273 + 380 ms; the input exchange read twice,
     // 66.7 vs 48.8 MB shuffle read) — but materializing the corpus-sized
     // output costs MORE than the duplicated narrow pass saves: sf0.1 a
     // wash, sf1 a 36% REGRESSION (3.10 → 4.24 s paired — ~900 MB
@@ -2149,7 +2149,7 @@ object SparkEntry {
     // sort there is NO exchange (the (doc_id, chunk_id) groupBy is
     // satisfied by the doc_id partitioning), so the sort's range-sampling
     // pass re-executed the whole tokenize + KR-hash + window + reassembly
-    // chain (ProbeStages: two ~350 ms 32-task twins → one 259 ms pin +
+    // chain (r16 stage profile: two ~350 ms 32-task twins → one 259 ms pin +
     // a 41 ms sample read; stage walls 911 → 814 ms). The pinned frame is
     // the CHUNK table (≈ the corpus text, no blow-up — unlike the
     // weighted-bins kernel whose pin lost 36% at sf1). Wall-clock is
@@ -5517,7 +5517,7 @@ object SparkEntry {
     * labeling pipeline — fit once per labeling batch, read by every
     * consumer — and the two driver read-outs (posteriors, confusion)
     * would otherwise each pay the pin-heavy 2-round build per call
-    * (ProbeCompile: ~4 s build / ~0 exec — pure compile/build). The
+    * (measured ~4 s build / ~0 exec — pure compile/build). The
     * oracles are unaffected: they replay the EM itself, and the
     * deterministic trainer writes the same frames any session would
     * (the classifierMemo argument, persisted because frames — unlike
@@ -6039,7 +6039,7 @@ object SparkEntry {
     * q_prf_topk_docs: identical parameters, identical results (it shares
     * that query's three-pass oracle), but all three PRF passes probe the
     * standing index instead of re-scanning the corpus (the measured
-    * standing-postings regime, ProbeSearch ~13×). Persisted like the IVF
+    * standing-postings regime, ~13×, ARCHITECTURE.md). Persisted like the IVF
     * cell index — term-clustered, term-sorted parquet plus the 1-row
     * stats frame, built once per corpus generation — NOT a Spark-cache
     * memo: the bench resets all cached storage between passes, and a
@@ -6207,8 +6207,8 @@ object SparkEntry {
   private def windowDedupDocs(s: SparkSession, dir: String): DataFrame =
     // Pin before the orderBy (the cdc_chunks pattern): the per-doc groupBy
     // is satisfied by the window's doc_id exchange, so the range sort's
-    // sampling pass re-ran the coverage window + reassembly (ProbeStages:
-    // twin 255/253 ms stages). The pinned frame is one row per doc.
+    // sampling pass re-ran the coverage window + reassembly (r16 stage
+    // profile: twin 255/253 ms stages). The pinned frame is one row per doc.
     core.Ckpt.pin(
       Dedup.dropDuplicateWindows(fanOut(Tables.documents(s, dir), s), windowTokens = 12,
           hashKeys = true)
@@ -6543,8 +6543,8 @@ object SparkEntry {
   private def phraseBlocklistDocs(s: SparkSession, dir: String): DataFrame =
     // Pin before the orderBy (the cdc_chunks pattern): no exchange between
     // the fan-out and the range sort — its sampling pass re-ran the
-    // tokenize + lead window + semi-join + per-doc aggregate (ProbeStages:
-    // a 175 ms sampling twin of the 290 ms real pass). One row per doc.
+    // tokenize + lead window + semi-join + per-doc aggregate (r16 stage
+    // profile: a 175 ms sampling twin of the 290 ms real pass). One row per doc.
     core.Ckpt.pin(
       ext.TextStats.phraseBlocklistHits(fanOut(Tables.documents(s, dir), s), "doc_id", "text",
           Seq("merge", "slow query", "table scan", "big table")))

@@ -1,29 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. With
+  * `SPARK_GRAFT_ONLY=q_a,q_b` it runs and writes the oracle SQL of just
+  * those queries, so `scripts/check_oracle.py` checks only them:
+  * {{{
+  *   SPARK_GRAFT_ONLY=q_cms_topk_docs sbt "runMain graft.Verify <sf-dir> <out-dir>"
+  *   python3 scripts/check_oracle.py <sf-dir> <out-dir>
+  * }}} */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Session.local(core.Session.cpus)
     new java.io.File(outDir).mkdirs()
-    // dev-loop filter: SPARK_GRAFT_ONLY=q_a,q_b runs just those queries
-    // (unset for the driver's full sweep)
+    // None (variable unset) runs and writes every query
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
+    def selected[V](m: Map[String, V]): Map[String, V] =
+      only.fold(m)(names => m.filter(kv => names(kv._1)))
+    selected(SparkEntry.queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -42,7 +37,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = selected(SparkEntry.oracleSql)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -152,7 +152,7 @@ object Dedup {
     * the duplication lint — that built per-doc gram-string arrays
     * through a transform lambda; the fused expression walks token bytes
     * once per doc inside whole-stage codegen. Measured r14:
-    * ProbeWindowDedup 1.59 → 1.05 s steady-state AND shuffle bytes
+    * window dedup 1.59 → 1.05 s steady-state AND shuffle bytes
     * 10.2 → 7.1 MB — dropping the gram-side sort exchange removes a
     * whole corpus shuffle, the part that compounds at cluster scale.)
     * The exact-string path keeps the k−1 window-`lead` gram

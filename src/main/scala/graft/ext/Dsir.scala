@@ -105,7 +105,7 @@ object Dsir {
     * the common query shape where the TARGET is a row filter of the raw
     * corpus (r16, guide §2.4/§1.2): the generic pair of calls ran the
     * tokenize + Karp–Rabin + bigram-window gram pipeline THREE times
-    * (target counts, raw counts, scoring — ProbeStages r16: three
+    * (target counts, raw counts, scoring — r16 stage profile: three
     * single-task map stages of 130/203/280 ms at sf0.1, 16 sequential
     * jobs). Here the corpus explodes ONCE into a pinned (doc_id,
     * is_target, bucket) frame and the target counts, raw counts and the

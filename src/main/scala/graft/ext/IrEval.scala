@@ -116,14 +116,14 @@ object IrEval {
     // broadcast, and the point-estimate aggregate), so an expensive upstream
     // (a full retrieval run + evalRanking, the q_bootstrap_ci shape) was
     // planned per consumer — 1591 plan lines / 48 parquet scans at sf0.1,
-    // 3 × ~1.3 s duplicated TopKAgg stages in the r16 ProbeStages profile
+    // 3 × ~1.3 s duplicated TopKAgg stages in the r16 stage profile
     // (ReuseExchange dedups identical exchanges but NOT these — the copies'
     // exchange subtrees differ in their projections, so three ~1.3 s
     // duplicated aggregation stages really executed). One eager Q-row pin
     // makes every consumer an ExistingRDD leaf: plan 1591 → 277 lines,
     // Exchange mentions 100 → 22, parquet scans 48 → 1 (the pin job's own),
     // every post-pin stage ≤ 0.2 s, steady-state 2.03 → 1.62 s paired
-    // BenchOne and 8.0 → 1.36 s on like-for-like ProbeStages profiles
+    // BenchOne and 8.0 → 1.36 s on like-for-like stage profiles
     // (r16 ledger). Guide §2.4/§1.2; the same pin class as the r15
     // tfidf/textrank cuts.
     val vals = graft.core.Ckpt.pin(perQuery

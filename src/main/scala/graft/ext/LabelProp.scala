@@ -52,7 +52,7 @@ object LabelProp {
     // re-coalesce an ExistingRDD leaf, so pinning the raw union (both
     // mirrored halves, NO shuffle on top) froze sum-of-input partitions
     // and every downstream round paid one tiny task per frozen partition
-    // (ProbeJobs r15: 405 tasks across 25 jobs for this query). A
+    // (r15 job profile: 405 tasks across 25 jobs for this query). A
     // repartition by the join key lets AQE pick the partition count from
     // the frame's REAL size — one partition at bench scale, many at 100 TB
     // — and lands the pinned frame already keyed by `src` for the

@@ -202,7 +202,7 @@ object Negatives {
     * the broadcast path ([[hardNegatives]]). An epoch is N/batchSize
     * such calls, each aligned with the step that consumes it, so mining
     * cost scales with data CONSUMED rather than data HELD — measured
-    * (ProbeNegatives round-11, 100k vectors, 2048-anchor batches ×
+    * (round 11, ARCHITECTURE.md; 100k vectors, 2048-anchor batches ×
     * 2 epochs): per-batch cost is FLAT across batches and epochs
     * (~25–28 s steady after JIT warm), each call one O(N) ordinal rank
     * + one O(batch·N) broadcast mine.

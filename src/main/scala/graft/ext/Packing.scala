@@ -96,8 +96,8 @@ object Packing {
     * hash is an O(1) BIGINT fold over the `gramTokens` trailing token
     * hashes from lag columns (h ← (h·257 + tokHash) mod 1e9+7) — NOT a
     * per-position re-scan of the gram string, which costs Θ(gram chars)
-    * per position and measured 5× the wall at 10× sf0.1 (ProbeGraph,
-    * ARCHITECTURE.md round-9 ledger). The chunk id is an exclusive
+    * per position and measured 5× the wall at 10× sf0.1
+    * (ARCHITECTURE.md round-9 ledger). The chunk id is an exclusive
     * prefix sum of boundary flags over the same window; reassembly is a
     * (doc, chunk)-keyed aggregate bounded by the doc's own length. All
     * arithmetic is plain BIGINT mul/mod, replayable in ANSI SQL

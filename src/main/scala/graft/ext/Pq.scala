@@ -70,7 +70,7 @@ object Pq {
     * mirrored by the oracle's `ORDER BY dist ASC, c ASC` under DuckDB's
     * NaN-sorts-last total order. Left-to-right accumulation ≡ the SQL
     * list_reduce fold. */
-  private[graft] def encodeUdf(cb: Array[Array[Array[Double]]]): UserDefinedFunction = {
+  private def encodeUdf(cb: Array[Array[Array[Double]]]): UserDefinedFunction = {
     val frozen = cb.map(_.map(_.clone()))
     val m = frozen.length
     val dsub = frozen(0)(0).length
@@ -201,8 +201,8 @@ object Pq {
     * and appending its rows composes trivially (no read-merge-rewrite;
     * the [[graft.ext.Similarity.ivfIndexAddBatch]] story without even
     * the cell-file bookkeeping). The cost is codebook STALENESS:
-    * measured under the ProbePq round-11 distribution-shift protocol
-    * (trained on 80% of mixture centers, corpus grown 20% with unseen
+    * measured under the round-11 distribution-shift protocol
+    * (ARCHITECTURE.md: trained on 80% of mixture centers, corpus grown 20% with unseen
     * centers, fresh-draw corpus so copy artifacts can't mask drift),
     * new-distribution recall@10 reads 0.47 stale vs 0.50 retrained for
     * PQ and 0.46 vs 0.49 for OPQ — a ~3-point decay per 20%
@@ -433,7 +433,7 @@ object Pq {
     * fresh code each round, the [[Similarity.assignUdf]] precedent).
     * Wrong-length / null vectors map to null, matching the other
     * encoders' guards. */
-  private[graft] def rotateUdf(r: Array[Array[Double]]): UserDefinedFunction = {
+  private def rotateUdf(r: Array[Array[Double]]): UserDefinedFunction = {
     val frozen = r.map(_.clone())
     val d = frozen.length
     udf { (v: Seq[Double]) =>
@@ -567,7 +567,7 @@ object Pq {
     * (rotation, codebooks) pair composes exactly like [[pqEncode]]'s —
     * the rotation is global model state with the same staleness
     * exposure; measured 0.46 stale vs 0.49 retrained recall@10 per 20%
-    * unseen-distribution growth (ProbePq round-11, advice in
+    * unseen-distribution growth (round 11, ARCHITECTURE.md; advice in
     * [[pqEncode]]'s scaladoc). */
   def opqEncode(
       embeddings: DataFrame,

@@ -449,8 +449,8 @@ object Search {
     * grows linearly in appends until [[compactPostings]] restores one
     * term-clustered file per hash bucket — recommend compaction at
     * ~8 appends' worth of files (64 at the default partitions=8).
-    * ProbePostings measures the append→threshold→compact→flat-reads
-    * cycle. */
+    * The round-12 append→threshold→compact→flat-reads measurements are
+    * in ARCHITECTURE.md. */
   def postingsStats(spark: org.apache.spark.sql.SparkSession, postingsDir: String,
       compactFileThreshold: Int = 64): DataFrame = {
     require(compactFileThreshold >= 1,

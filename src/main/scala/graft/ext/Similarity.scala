@@ -330,8 +330,9 @@ object Similarity {
     *
     * The trade is quantizer STALENESS, not correctness: centroids stop
     * reflecting the data once the added distribution drifts, so cells
-    * imbalance and recall@k vs brute decays — ProbeIvf's add-batch mode
-    * measures both (cost per add vs rebuild, recall drift vs retrain).
+    * imbalance and recall@k vs brute decays — the round-10 add-batch
+    * measurements (cost per add vs rebuild, recall drift vs retrain) are
+    * in ARCHITECTURE.md.
     * Periodic retrain-and-rebuild is the compaction analogue: cheap
     * appends between rebuilds, a rebuild when the measured recall (or
     * cell-population skew) crosses the caller's floor. Appends also

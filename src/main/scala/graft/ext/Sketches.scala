@@ -132,7 +132,7 @@ object Sketches {
     * filter, where the nested split-multiply duplicates its base subtree
     * ~3^rounds times and the oversized interpreted condition evaluates the
     * duplicates per row — measured ~7 µs/row (4.2 s on 600k rows) vs
-    * 0.33 s for this shape (ProbeKmv).
+    * 0.33 s for this shape (round-7 KMV measurement, ARCHITECTURE.md).
     */
   def kmvDistinct(df: DataFrame, valueCol: String, k: Int): DataFrame = {
     val kmin = udaf(new KMinAgg(k))

@@ -98,7 +98,7 @@ object TextRank {
       .withColumn("rank_score", lit(1.0))
     // Pin every FOURTH round, never the last: each eager localCheckpoint
     // is a sequential driver job (~50-90 ms of pure scheduling at bench
-    // scale — ProbeJobs r15), while the unrolled plan between pins grows
+    // scale — r15 job profile), while the unrolled plan between pins grows
     // only LINEARLY (scores appears once per round), so a 4-round segment
     // stays small and AQE picks the broadcast join from the real runtime
     // size of each round's aggregate. Values are bit-identical — pinning

@@ -119,7 +119,8 @@ object Lags {
     * not into one aggregate column per combination. The wide form carries
     * O(pairs·maxLag) aggregate expressions (3 per safeCorr + a count — 144
     * here), and Catalyst analysis/optimization/codegen of that plan costs
-    * ~1.3 s per call while its execution takes 0.16 s (ProbeLagCorr); it
+    * ~1.3 s per call while its execution takes 0.16 s (round-7 lagged-corr
+    * measurement, ARCHITECTURE.md); it
     * also stops scaling in the pair-set axis long before the data axis.
     * The long form multiplies the panel (dates × groups — already
     * aggregate-sized, not fact-sized) by pairs·(maxLag+1) rows but keeps a

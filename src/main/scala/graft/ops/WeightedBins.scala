@@ -132,8 +132,9 @@ object WeightedBins {
     private val ptr = new Array[Int](maxBins + 1) // absolute edge pointers, monotone
     private val bound = binSize * maxBins
     private var peak = 0
-    /** High-water mark of the pending buffer — the probe's evidence that a
-      * viral key's task memory is bin-span-bounded, not group-size-bounded. */
+    /** High-water mark of the pending buffer — WeightedBinsSpec's evidence
+      * that a viral key's task memory is bin-span-bounded, not
+      * group-size-bounded. */
     def peakPending: Int = peak
 
     private def navail: Int = firstAbs + pend.size
@@ -267,7 +268,7 @@ object WeightedBins {
     // contiguous and time-ordered, and BoundedKernel holds only the rows
     // spanning binSize·maxBins of q1 mass — task memory is bounded by the
     // bin span, not the group size, so a viral key streams instead of
-    // OOMing (round-5 scale audit; hot-key probe in ProbeWb).
+    // OOMing (round-5 scale audit; the hot-key spec in WeightedBinsSpec).
     val result = ds
       .repartition(col("id1"), col("id2"))
       .sortWithinPartitions("id1", "id2", "ts", "tie")

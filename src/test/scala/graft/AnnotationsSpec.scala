@@ -338,6 +338,34 @@ class AnnotationsSpec extends SparkSpec {
     assert(e.getMessage != null)
   }
 
+  test("bradleyTerry: top thetas recover the strongest planted decile") {
+    // deterministic league: item i has strength i+1; game g pairs (i, j)
+    // by hash striping and awards the win by a hash draw proportional to
+    // s(i)/(s(i)+s(j)) — the BT generative model itself, derandomized
+    import org.apache.spark.sql.functions._
+    val items = 50
+    val games = 50000L
+    val comps = spark.range(games)
+      .withColumn("h1", abs(xxhash64(col("id"))))
+      .withColumn("h2", abs(xxhash64(col("id") + lit(games))))
+      .withColumn("i", (col("h1") % items).cast("int"))
+      .withColumn("j",
+        ((col("i") + lit(1) + col("h2") % lit(items - 1)) % items).cast("int"))
+      .withColumn("draw", abs(xxhash64(col("id") * 31)) % (col("i") + col("j") + lit(2)))
+      .select(col("i").cast("string").as("a"), col("j").cast("string").as("b"),
+        when(col("draw") < col("i") + lit(1), col("i")).otherwise(col("j"))
+          .cast("string").as("winner"))
+    val top = Annotations.bradleyTerry(comps, rounds = 4)
+      .collect().map(_.getAs[String]("item").toInt).toSeq
+    assert(top.size == items)
+    // ~2,000 games per item leave adjacent strengths (about 2 % apart in
+    // win rate) inside sampling noise, so one of the top 5 may come from
+    // just below the decile; the planted order must still dominate
+    val recovered = top.take(5).count(_ >= items - 5)
+    assert(recovered >= 4,
+      s"planted-order recovery failed: $recovered/5 from the top decile, top=${top.take(10)}")
+  }
+
   test("majority vote is deterministic under re-evaluation and input order") {
     val shuffled = votes.orderBy(org.apache.spark.sql.functions.rand(7))
     val a = Annotations.majorityVote(votes).orderBy("doc_id")

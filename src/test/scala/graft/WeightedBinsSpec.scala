@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.ops.WeightedBins
+import graft.ops.{WbRow, WeightedBins}
 
 /** Parity with the reference implementation executed as a black-box oracle
   * on its own fixtures (scripts/make_wb_golden.py): full-output compare on
@@ -84,6 +84,27 @@ class WeightedBinsSpec extends SparkSpec {
           s"trial=$trial n=$n binSize=$binSize maxBins=$maxBins row=$i bin=$b: full=$x bounded=$y")
       }
     }
+  }
+
+  test("hot key: one 200k-row group streams in bin-span-bounded memory") {
+    // One giant group straight through the bounded kernel, no Spark: the
+    // pending buffer must hold only the rows spanning binSize·maxBins of
+    // q1 mass (plus the straddler and the row just read), never the group.
+    val n = 200000
+    val (binSize, maxBins) = (100.0, 10)
+    val q1 = Array.tabulate(n)(i => ((i.toLong * 2654435761L) % 100 + 1).toDouble)
+    val kernel = new WeightedBins.BoundedKernel(binSize, maxBins)
+    val ts = java.lang.Long.valueOf(0L)
+    var emitted = 0L
+    q1.indices.foreach { i =>
+      emitted += kernel.push(WbRow("g", "x", ts, q1(i), (i % 5000) / 100.0, i.toLong)).size
+    }
+    emitted += kernel.finish().size
+    assert(emitted == n - 1L, s"emitted $emitted rows for a group of $n")
+    assert(q1.min == 1.0 && q1.max == 100.0)
+    val bound = binSize * maxBins / q1.min + 2
+    assert(kernel.peakPending <= bound,
+      s"peak pending ${kernel.peakPending} rows exceeds the bin-span bound $bound")
   }
 
   test("timestamps round-trip the long-micros kernel exactly (sub-second, pre-epoch, null)") {
