@@ -2447,10 +2447,10 @@ object SparkEntry {
     * pipeline is pinned (not just its output shape). */
   private def repetitionDocs(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    // hashKeys: zero-shuffle per-doc stats via native gram-hash arrays
-    // (r14) — fractions identical to the string path (relabeling), so
-    // the exact-string oracle is untouched
-    TextStats.repetitionStats(docs, hashKeys = true)
+    // zero-shuffle per-doc stats via native gram-hash arrays (r14) —
+    // fractions identical to string grams (relabeling), so the
+    // exact-string oracle is untouched
+    TextStats.repetitionStats(docs)
       .join(docs.select("doc_id", "lang"), "doc_id")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
@@ -4349,12 +4349,10 @@ object SparkEntry {
     * streams from the shared tokenizer convention and replays the exact
     * distinct/total counts and the canonized ratio. */
   private def distinctNgramsDocs(s: SparkSession, dir: String): DataFrame =
-    // The zero-window twin of distinctNgramRatio: the same (n, gram)
-    // STRING stream — and therefore identical counts and ratios — from
-    // ONE TokenNGrams walk per doc, with no posexplode → sort →
-    // lead-window → concat_ws chain (TextExtSpec pins row-equality
-    // against that path).
-    ext.TextStats.distinctNgramRatioFused(fanOut(Tables.documents(s, dir), s))
+    // the (n, gram) STRING stream comes from ONE TokenNGrams walk per doc
+    // (TextExtSpec pins row-equality against the retired lead-window
+    // gram strings)
+    ext.TextStats.distinctNgramRatio(fanOut(Tables.documents(s, dir), s))
       .select(col("group").as("lang"), col("n"),
         col("total_ngrams"), col("distinct_ngrams"), round6("distinct_ratio"))
       .orderBy("lang", "n")
@@ -4379,11 +4377,10 @@ object SparkEntry {
 
   /** The HLL tier of corpus diversity
     * ([[graft.ext.TextStats.distinctNgramRatioApprox]], the round-14
-    * 100 TB escape hatch) promoted to a HARD oracle via the gramHash
-    * injection seam — the simhashCore move applied to a sketch: the
-    * per-gram surrogate is [[graft.ext.TextStats.rollingHash]]'s
-    * Karp–Rabin fold instead of xxhash64, and DuckDB then replays the
-    * ENTIRE sketch — every gram hash, the Knuth+fmix32 mix, bucket
+    * 100 TB escape hatch) as a HARD oracle: the per-gram surrogate is
+    * [[graft.ext.TextStats.rollingHash]]'s replayable Karp–Rabin fold,
+    * so DuckDB replays the ENTIRE sketch — every gram hash, the
+    * Knuth+fmix32 mix, bucket
     * routing, bin()-bitlen zero-run ranks, the (group, n, bucket) register
     * maxima AND their live count, the harmonic-mean estimator, and the
     * linear-counting branch — bit-for-bit. The exact path
@@ -4393,12 +4390,10 @@ object SparkEntry {
     * sketch occupancy (it also drives the linear-counting CASE, so the
     * oracle locks the branch decision, not just the value). */
   private def distinctNgramsApproxDocs(s: SparkSession, dir: String): DataFrame =
-    // The KR-fused twin of distinctNgramRatioApprox(gramHash = rollingHash):
-    // an identical (n, gram-hash) stream — and therefore identical
-    // registers and estimates — from ONE KarpRabinNGramHashes walk per
-    // doc, with no posexplode → sort → lead-window → concat_ws → per-char
-    // re-hash chain (TextExtSpec pins bit-equality against that path).
-    ext.TextStats.distinctNgramRatioApproxKR(fanOut(Tables.documents(s, dir), s))
+    // the (n, gram-hash) stream comes from ONE KarpRabinNGramHashes walk
+    // per doc (TextExtSpec pins bit-equality against the retired
+    // lead-window gram strings folded through rollingHash)
+    ext.TextStats.distinctNgramRatioApprox(fanOut(Tables.documents(s, dir), s))
       .select(col("group").as("lang"), col("n"), col("total_ngrams"),
         col("n_registers"), r6(col("est_distinct")).as("est_distinct"),
         r6(col("est_ratio")).as("est_ratio"))
@@ -4488,10 +4483,10 @@ object SparkEntry {
     * vocabulary, both out-of-model branches, and the per-doc mean. */
   private def kneserneyQualityDocs(s: SparkSession, dir: String): DataFrame = {
     val all = Tables.documents(s, dir)
+    // 64-bit token-hash model keys; the scorer reads the key kind off the model
     val model = TextStats.trainKneserNeyModel(
       all.filter(col("doc_id") % 2 === 0), hashKeys = true)
-    TextStats.kneserNeyLogLikelihood(all.filter(col("doc_id") < 50), model,
-        hashKeys = true)
+    TextStats.kneserNeyLogLikelihood(all.filter(col("doc_id") < 50), model)
       .select(col("doc_id"), round6("kn_loglik"), col("n_bigrams"))
       .orderBy("doc_id")
   }
@@ -4546,10 +4541,10 @@ object SparkEntry {
     * the engines carry the identical IEEE product. */
   private def stupidBackoffDocs(s: SparkSession, dir: String): DataFrame = {
     val all = Tables.documents(s, dir)
+    // 64-bit token-hash model keys; the scorer reads the key kind off the model
     val model = TextStats.trainStupidBackoff(
       all.filter(col("doc_id") % 2 === 0), hashKeys = true)
-    TextStats.stupidBackoffScore(all.filter(col("doc_id") < 50), model,
-        hashKeys = true)
+    TextStats.stupidBackoffScore(all.filter(col("doc_id") < 50), model)
       .select(col("doc_id"), round6("sb_loglik"), col("n_trigrams"))
       .orderBy("doc_id")
   }
@@ -4593,10 +4588,11 @@ object SparkEntry {
     * tercile rule. */
   private def ccnetBucketsDocs(s: SparkSession, dir: String): DataFrame = {
     val all = Tables.documents(s, dir)
+    // 64-bit token-hash model keys; the scorer reads the key kind off the model
     val model = TextStats.trainKneserNeyModel(
       all.filter(col("doc_id") % 2 === 0), hashKeys = true)
     val scored = TextStats.kneserNeyLogLikelihood(
-      all.filter(col("doc_id") < 50), model, hashKeys = true)
+      all.filter(col("doc_id") < 50), model)
       .select(col("doc_id"), round6("kn_loglik"))
       .join(all.select("doc_id", "lang"), "doc_id")
     TextStats.qualityTerciles(scored, "lang", "kn_loglik")
@@ -5322,11 +5318,11 @@ object SparkEntry {
     val pairs = d.select(col("doc_id").as("pair_id"), col("text").as("candidate"))
       .join(d.select((col("doc_id") - 1).as("pair_id"), col("text").as("reference")),
         "pair_id")
-    // hashKeys: native gram-hash keys (r14) — no (pair, pos) sort
-    // exchange, 8-byte keys through the count/clip shuffles; pure
-    // relabeling of the clip groups, so the exact-string oracle below
-    // is untouched (the dropDuplicateWindows contract)
-    ext.Rouge.rougeN(pairs, n = 2, hashKeys = true).orderBy("pair_id")
+    // native gram-hash keys (r14) — no (pair, pos) sort exchange, 8-byte
+    // keys through the count/clip shuffles; pure relabeling of the clip
+    // groups, so the exact-string oracle below is untouched (the
+    // dropDuplicateWindows contract)
+    ext.Rouge.rougeN(pairs, n = 2).orderBy("pair_id")
   }
 
   private def rouge2PairsSql: String =
@@ -5640,9 +5636,9 @@ object SparkEntry {
     val pairs = d.select(col("doc_id").as("pair_id"), col("text").as("candidate"))
       .join(d.select((col("doc_id") - 1).as("pair_id"), col("text").as("reference")),
         "pair_id")
-    // hashKeys: native gram-hash keys (r14, the rougeN note) — same
-    // scores, exact-string oracle untouched
-    ext.Bleu.bleu2(pairs, hashKeys = true).orderBy("pair_id")
+    // native gram-hash keys (r14, the rougeN note) — same scores,
+    // exact-string oracle untouched
+    ext.Bleu.bleu2(pairs).orderBy("pair_id")
   }
 
   private def bleuPairsSql: String =
@@ -6186,9 +6182,9 @@ object SparkEntry {
 
   /** ExactSubstr-style sliding-window dedup probe ([[graft.ext.Dedup
     * .dropDuplicateWindows]], Lee et al. 2022 §3.1) at 12-token windows
-    * over the full documents table, with `hashKeys = true` — the
-    * corpus-scale default (8-byte xxhash64 gram keys instead of ~96-byte
-    * strings through the widest shuffle; round-9 verdict task). The
+    * over the full documents table, with the operator's 8-byte FNV-1a
+    * gram keys instead of ~96-byte strings through the widest shuffle
+    * (round-9 verdict task). The
     * exact-string DuckDB oracle stays valid UNCHANGED because hashing
     * only relabels the winner-rule groups: absent a 2⁻⁶⁴ collision the
     * admitted/removed sets are identical, and `DedupSpec` pins
@@ -6210,8 +6206,7 @@ object SparkEntry {
     // sampling pass re-ran the coverage window + reassembly (r16 stage
     // profile: twin 255/253 ms stages). The pinned frame is one row per doc.
     core.Ckpt.pin(
-      Dedup.dropDuplicateWindows(fanOut(Tables.documents(s, dir), s), windowTokens = 12,
-          hashKeys = true)
+      Dedup.dropDuplicateWindows(fanOut(Tables.documents(s, dir), s), windowTokens = 12)
         .select(col("doc_id"), col("n_tokens_kept"), col("text")))
       .orderBy("doc_id")
 

@@ -13,7 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `aggregate(split(s, ""), ...)` higher-order tree.
   *
   * Arithmetic is BIT-IDENTICAL to the expression form it replaces
-  * (retained as `TextStats.rollingHashExpr`, the spec's reference) and
+  * (retained as the spec reference `GramReference.rollingHashExpr` in
+  * `src/test`) and
   * to the DuckDB replay used by every oracle that regenerates the hash
   * (`ascii(substring(t, c, 1))` folds — code points). Empty string → 0
   * (the split→[""]→ascii("")=0 convention); null propagates.

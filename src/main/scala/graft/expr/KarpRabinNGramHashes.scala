@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * of an `array<string>` column in ONE code-point walk — the
   * [[TokenGramHashes]] move applied to the REPLAYABLE hash family, for
   * the oracled HLL distinct-n surrogate
-  * (`TextStats.distinctNgramRatioApproxKR`).
+  * (`TextStats.distinctNgramRatioApprox`).
   *
   * Each emitted value is BIT-IDENTICAL to
   * `KarpRabinHash.compute(gram tokens joined by a single space)` — the
@@ -23,14 +23,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   *
   * so one walk per token yields (h_t = KR(t), p_t = 257^cp(t) mod P) and
   * every gram hash is O(1) modular arithmetic from those (all operands
-  * < P ≈ 2^30, so products fit a signed 64-bit long). The old shape —
-  * posexplode → doc-keyed sort → lead window → concat_ws → per-char
-  * re-hash (chars walked 1+2+3 = 6× for maxN = 3) — collapses to a
-  * map-only projection with ONE char walk and no window exchange/sort.
+  * < P ≈ 2^30, so products fit a signed 64-bit long). The retired shape
+  * — posexplode → doc-keyed sort → lead window → concat_ws → per-char
+  * re-hash (chars walked 1+2+3 = 6× for maxN = 3), kept as the spec
+  * reference in `src/test` — collapses to a map-only projection with ONE
+  * char walk and no window exchange/sort.
   *
-  * Token conventions mirror the window path exactly: zero-length tokens
-  * are skipped (the posexplode path's `length(t) > 0` filter — grams
-  * slide over the SUBSEQUENCE of non-empty tokens), a null element is
+  * Token conventions mirror that reference exactly: zero-length tokens
+  * are skipped (its `length(t) > 0` filter — grams slide over the
+  * SUBSEQUENCE of non-empty tokens), a null element is
   * treated as empty (tokenizers here never produce one, but an
   * expression must not crash), a null array propagates null (explode
   * then emits nothing, like posexplode of null), and for L surviving

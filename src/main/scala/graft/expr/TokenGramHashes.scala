@@ -45,8 +45,24 @@ case class TokenGramHashes(child: Expression, k: Int) extends UnaryExpression {
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    TokenGramHashes.compute(input.asInstanceOf[ArrayData], k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.expr.TokenGramHashes.compute($c, $k);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object TokenGramHashes {
+  private val FnvOffset = 0xcbf29ce484222325L
+  private val FnvPrime = 0x100000001b3L
+
+  /** The gram kernel. Public static so generated code calls the same
+    * body the interpreter does (the [[KarpRabinHash]] pattern). */
+  def compute(arr: ArrayData, k: Int): ArrayData = {
     val n = arr.numElements()
     val m = n - k + 1
     if (m <= 0) return new GenericArrayData(Array.empty[Long])
@@ -62,14 +78,14 @@ case class TokenGramHashes(child: Expression, k: Int) extends UnaryExpression {
     val out = new Array[Long](m)
     var i = 0
     while (i < m) {
-      var h = TokenGramHashes.FnvOffset
+      var h = FnvOffset
       var j = 0
       while (j < k) {
         val b = toks(i + j)
         var c = 0
-        while (c < b.length) { h ^= (b(c) & 0xff).toLong; h *= TokenGramHashes.FnvPrime; c += 1 }
+        while (c < b.length) { h ^= (b(c) & 0xff).toLong; h *= FnvPrime; c += 1 }
         h ^= 0x1fL
-        h *= TokenGramHashes.FnvPrime
+        h *= FnvPrime
         j += 1
       }
       out(i) = h
@@ -77,56 +93,6 @@ case class TokenGramHashes(child: Expression, k: Int) extends UnaryExpression {
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val toks = ctx.freshName("toks")
-      val out = ctx.freshName("out")
-      val t = ctx.freshName("t")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val cc = ctx.freshName("cc")
-      val h = ctx.freshName("h")
-      val b = ctx.freshName("b")
-      s"""
-         |int $n = $c.numElements();
-         |int $m = $n - $k + 1;
-         |if ($m <= 0) {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new long[0]);
-         |} else {
-         |  byte[][] $toks = new byte[$n][];
-         |  for (int $t = 0; $t < $n; $t++) {
-         |    $toks[$t] = $c.isNullAt($t)
-         |      ? new byte[0] : $c.getUTF8String($t).getBytes();
-         |  }
-         |  long[] $out = new long[$m];
-         |  for (int $i = 0; $i < $m; $i++) {
-         |    long $h = ${TokenGramHashes.FnvOffset}L;
-         |    for (int $j = 0; $j < $k; $j++) {
-         |      byte[] $b = $toks[$i + $j];
-         |      for (int $cc = 0; $cc < $b.length; $cc++) {
-         |        $h ^= (long) ($b[$cc] & 0xff);
-         |        $h *= ${TokenGramHashes.FnvPrime}L;
-         |      }
-         |      $h ^= 0x1fL;
-         |      $h *= ${TokenGramHashes.FnvPrime}L;
-         |    }
-         |    $out[$i] = $h;
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object TokenGramHashes {
-  private[expr] val FnvOffset = 0xcbf29ce484222325L
-  private[expr] val FnvPrime = 0x100000001b3L
 
   /** Column API: sliding k-token-gram FNV-1a hashes of an `array<string>`
     * column. */

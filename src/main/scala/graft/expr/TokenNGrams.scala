@@ -15,10 +15,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * hash surrogate) is the aggregation key, so the corpus-wide
   * distinct-count contract demands the actual string.
   *
-  * Each emitted gram is BIT-IDENTICAL to the lead-window path's
-  * `concat_ws(" ", t, t1, …)`: the single-space join of n consecutive
-  * non-empty tokens. Token conventions mirror that path exactly —
-  * zero-length tokens are skipped (its `length(t) > 0` filter; grams
+  * Each emitted gram is BIT-IDENTICAL to the retired lead-window path's
+  * `concat_ws(" ", t, t1, …)` (kept as the spec reference in `src/test`):
+  * the single-space join of n consecutive non-empty tokens. Token
+  * conventions mirror that path exactly — zero-length tokens are
+  * skipped (its `length(t) > 0` filter; grams
   * slide over the SUBSEQUENCE of survivors), a null element is treated
   * as empty (tokenizers here never produce one, but an expression must
   * not crash), a null array propagates null (explode then emits

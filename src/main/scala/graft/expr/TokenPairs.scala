@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the bigram zip-shift for the STRING-keyed LM/collocation paths
   * (`TextStats.trainBigramModel` / `bigramLogLikelihood` /
   * `collocations`), where the word itself is the model key, so the
-  * hashKeys TokenGramHashes relabeling does not apply.
+  * TokenGramHashes key relabeling does not apply.
   *
   * Semantics mirror the doc-keyed lead-window shape exactly: for L
   * tokens, L entries are emitted — (t_i, t_(i+1)) for i < L−1 and the

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sentence-level BLEU-2 between paired texts (Papineni et al. 2002):
@@ -16,19 +15,23 @@ import org.apache.spark.sql.functions._
   *   bp   = 1 if c ≥ r else exp(1 − r/c)
   *   bleu = bp · √(p1 · p2)
   *
-  * Fixed at n ≤ 2 by design: bigrams come from ONE `lead` over the
-  * (pair, pos) window — the phrase-blocklist recipe — never from a
-  * `transform` lambda over a derived token array (Catalyst inlines the
-  * array per element; the round-7 quadratic-lambda trap). Tokenization
-  * is the repo-wide whitespace convention with empty tokens dropped
-  * (a whitespace-only side has length 0).
+  * Fixed at n ≤ 2 by design. Gram keys are the native
+  * [[graft.expr.TokenGramHashes]] of each side's token array — no
+  * (pair, pos) sort exchange, no gram strings, never a `transform`
+  * lambda over a derived token array (the round-7 quadratic-lambda
+  * trap). Hashing only relabels the clip groups, so every hit/total
+  * (hence p1/p2/bp/bleu) is identical to string grams absent a
+  * collision, and the SparkEntry query's exact-string oracle stays valid;
+  * BleuSpec pins the equivalence against the string-gram reference.
+  * Tokenization is the repo-wide whitespace convention with empty
+  * tokens dropped (a whitespace-only side has length 0); tokens are
+  * compared whole, so a surrogate pair is never split.
   *
-  * Scale shape: everything is pair-keyed. The hashKeys driver shape
-  * tokenizes both sides in ONE pinned pass and fuses all four gram
-  * counts and both clips into one (pair, n, gram)-keyed map-combinable
-  * aggregate plus a per-pair rollup (a gram viral WITHIN one pair skews
-  * one key — the AQE case); the exact-string path keeps the per-side
-  * counts and (pair, gram) clip equijoin. No corpus-wide state.
+  * Scale shape: everything is pair-keyed. Both sides are tokenized in
+  * ONE pinned pass, and all four gram counts and both clips fuse into
+  * one (pair, n, gram)-keyed map-combinable aggregate plus a per-pair
+  * rollup (a gram viral WITHIN one pair skews one key — the AQE case).
+  * No corpus-wide state.
   *
   * Determinism: p1, p2, bp are 1e-6-canonized, and bleu is computed
   * FROM the canonized factors (multiplication and √ are correctly
@@ -48,105 +51,46 @@ object Bleu {
   def bleu2(pairs: DataFrame,
       idCol: String = "pair_id",
       candCol: String = "candidate",
-      refCol: String = "reference",
-      hashKeys: Boolean = false): DataFrame = {
+      refCol: String = "reference"): DataFrame = {
     val base = pairs.filter(col(candCol).isNotNull && col(refCol).isNotNull)
-    // hashKeys (the corpus-scale driver shape, shared with rougeN r14):
-    // uni/bi gram keys from native TokenGramHashes passes over the token
-    // array — no (pair, pos) sort exchange, no gram strings, 8-byte keys
-    // through the four count shuffles and both clip joins; the lengths
-    // come from size(toks) in the same projection instead of two more
-    // counting aggregates. Hashing only relabels the clip groups, so
-    // every hit/total (hence p1/p2/bp/bleu) is identical absent a
-    // collision; BleuSpec pins the equivalence.
-    def toks(c: String): DataFrame = base
-      .select(col(idCol), posexplode(split(lower(trim(col(c))), "\\s+"))
-        .as(Seq("pos", "w")))
-      .filter(col("w") =!= "")
-    // r16 (§2.3/§2.4): the hashKeys branch used to run FOUR (pair, gram)
-    // count aggregates (uni+bi per side), TWO clip joins, a lens join and
-    // two final left joins — 19 sequential jobs for q_bleu_pairs, each
-    // re-planning the pair join + tokenize subtree. Restructured:
-    // tokenize both sides ONCE into a pinned pair-sized frame, then tag
-    // every gram occurrence with (n, side) and collapse all four counts
-    // AND both clips into ONE gram-keyed aggregate + one per-pair rollup
-    // (a ref-only gram contributes cnt=0 rows whose least()/sum terms are
-    // 0 — exactly the rows the old LEFT clip join never saw, so every
-    // hit/total long is identical and p1/p2/bp/bleu divide the same IEEE
-    // operands; a no-bigram side yields an all-null sum → null p2, the
-    // old missing-row null). Paired same-window BenchOne 2.33 → 1.36 s
-    // steady (−42%), stages 19 → 10, one corpus-sized gram shuffle
-    // instead of four plus two join co-shuffles (r16 ledger).
-    def toksBoth: DataFrame = graft.core.Ckpt.pin(base
+    // One pinned tokenize pass; every gram occurrence, tagged (n, side),
+    // feeds ONE gram-keyed aggregate (all four counts AND both clips) + a
+    // per-pair rollup. r16, against four per-side count aggregates and two
+    // clip joins: q_bleu_pairs 2.33 → 1.36 s steady (−42%), stages
+    // 19 → 10, one corpus-sized gram shuffle instead of four plus two join
+    // co-shuffles.
+    val tk = graft.core.Ckpt.pin(base
       .select(col(idCol),
         filter(split(lower(trim(col(candCol))), "\\s+"), t => length(t) > 0).as("__ctoks"),
         filter(split(lower(trim(col(refCol))), "\\s+"), t => length(t) > 0).as("__rtoks")))
-    def gramCounts(side: DataFrame): (DataFrame, DataFrame) = {
-      val uni = side.groupBy(col(idCol), col("w").as("g"))
-        .agg(count(lit(1)).as("cnt"))
-      val wnd = Window.partitionBy(idCol).orderBy("pos")
-      val bi = side
-        .withColumn("w2", lead("w", 1).over(wnd))
-        .filter(col("w2").isNotNull)
-        .select(col(idCol), concat_ws(" ", col("w"), col("w2")).as("g"))
-        .groupBy(col(idCol), col("g")).agg(count(lit(1)).as("cnt"))
-      (uni, bi)
-    }
-    val pre: DataFrame = if (hashKeys) {
-      val tk = toksBoth
-      // one row per gram OCCURRENCE, tagged (n, side): unionAll is narrow
-      // over the pinned leaf, so all four passes land in one map stage
-      def occ(tokCol: String, k: Int, cand: Boolean): DataFrame = tk
-        .select(col(idCol), lit(k).as("n"),
-          explode(graft.expr.TokenGramHashes.tokenGramHashes(col(tokCol), k)).as("g"),
-          lit(if (cand) 1L else 0L).as("c"), lit(if (cand) 0L else 1L).as("r"))
-      val counts = occ("__ctoks", 1, cand = true)
-        .unionAll(occ("__ctoks", 2, cand = true))
-        .unionAll(occ("__rtoks", 1, cand = false))
-        .unionAll(occ("__rtoks", 2, cand = false))
-        .groupBy(col(idCol), col("n"), col("g"))
-        .agg(sum(col("c")).as("cnt"), sum(col("r")).as("rcnt"))
-      // per-pair rollup: exactly the old clip-join sums (ref-only grams
-      // carry cnt=0 and add 0 to hit and total; a side with no n-grams
-      // leaves an all-null sum → null, the old missing-row null)
-      val pp = counts.groupBy(col(idCol)).agg(
-        sum(when(col("n") === 1, least(col("cnt"), col("rcnt")))).as("hit1"),
-        sum(when(col("n") === 1, col("cnt"))).as("tot1"),
-        sum(when(col("n") === 2, least(col("cnt"), col("rcnt")))).as("hit2"),
-        sum(when(col("n") === 2, col("cnt"))).as("tot2"))
-      tk.select(col(idCol), size(col("__ctoks")).cast("long").as("c_len"),
-          size(col("__rtoks")).cast("long").as("r_len"))
-        .join(pp, Seq(idCol), "left")
-        .select(col(idCol), col("c_len"), col("r_len"),
-          // when-guard: ANSI 0/0 throws; tot=0 was the old clip frame's
-          // missing row, i.e. a null precision
-          when(col("tot1") > 0, quantC(col("hit1") / col("tot1"))).as("p1"),
-          when(col("tot2") > 0, quantC(col("hit2") / col("tot2"))).as("p2"))
-    } else {
-      val cand = toks(candCol)
-      val ref = toks(refCol)
-      val (cu, cb) = gramCounts(cand)
-      val (ru, rb) = gramCounts(ref)
-      val lens0 = base.select(col(idCol))
-        .join(cand.groupBy(col(idCol)).agg(count(lit(1)).as("c_len")), Seq(idCol), "left")
-        .join(ref.groupBy(col(idCol)).agg(count(lit(1)).as("r_len")), Seq(idCol), "left")
-        .select(col(idCol),
-          coalesce(col("c_len"), lit(0L)).as("c_len"),
-          coalesce(col("r_len"), lit(0L)).as("r_len"))
-      def clipped(c: DataFrame, r: DataFrame): DataFrame = c
-        .join(r.withColumnRenamed("cnt", "rcnt"), Seq(idCol, "g"), "left")
-        .groupBy(col(idCol))
-        .agg(sum(least(col("cnt"), coalesce(col("rcnt"), lit(0L)))).as("hit"),
-          sum(col("cnt")).as("total"))
-      val p1 = clipped(cu, ru)
-        .select(col(idCol), quantC(col("hit") / col("total")).as("p1"))
-      val p2 = clipped(cb, rb)
-        .select(col(idCol), quantC(col("hit") / col("total")).as("p2"))
-      lens0
-        .join(p1, Seq(idCol), "left")
-        .join(p2, Seq(idCol), "left")
-    }
-    pre
+    // one row per gram OCCURRENCE, tagged (n, side): unionAll is narrow
+    // over the pinned leaf, so all four passes land in one map stage
+    def occ(tokCol: String, k: Int, cand: Boolean): DataFrame = tk
+      .select(col(idCol), lit(k).as("n"),
+        explode(graft.expr.TokenGramHashes.tokenGramHashes(col(tokCol), k)).as("g"),
+        lit(if (cand) 1L else 0L).as("c"), lit(if (cand) 0L else 1L).as("r"))
+    val counts = occ("__ctoks", 1, cand = true)
+      .unionAll(occ("__ctoks", 2, cand = true))
+      .unionAll(occ("__rtoks", 1, cand = false))
+      .unionAll(occ("__rtoks", 2, cand = false))
+      .groupBy(col(idCol), col("n"), col("g"))
+      .agg(sum(col("c")).as("cnt"), sum(col("r")).as("rcnt"))
+    // per-pair rollup: exactly the clip-join sums (ref-only grams carry
+    // cnt=0 and add 0 to hit and total; a side with no n-grams leaves an
+    // all-null sum → null, the clip join's missing-row null)
+    val pp = counts.groupBy(col(idCol)).agg(
+      sum(when(col("n") === 1, least(col("cnt"), col("rcnt")))).as("hit1"),
+      sum(when(col("n") === 1, col("cnt"))).as("tot1"),
+      sum(when(col("n") === 2, least(col("cnt"), col("rcnt")))).as("hit2"),
+      sum(when(col("n") === 2, col("cnt"))).as("tot2"))
+    tk.select(col(idCol), size(col("__ctoks")).cast("long").as("c_len"),
+        size(col("__rtoks")).cast("long").as("r_len"))
+      .join(pp, Seq(idCol), "left")
+      .select(col(idCol), col("c_len"), col("r_len"),
+        // when-guard: ANSI 0/0 throws; tot=0 is the clip join's missing
+        // row, i.e. a null precision
+        when(col("tot1") > 0, quantC(col("hit1") / col("tot1"))).as("p1"),
+        when(col("tot2") > 0, quantC(col("hit2") / col("tot2"))).as("p2"))
       .withColumn("bp",
         when(col("c_len") === 0, lit(null).cast("double"))
           .when(col("c_len") >= col("r_len"), lit(1.0))

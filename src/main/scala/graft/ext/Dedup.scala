@@ -143,62 +143,45 @@ object Dedup {
     * replaced by the relational form: a gram-keyed winner rule + a
     * per-doc range-window coverage union, both corpus-parallel.
     *
-    * Plan shape: with `hashKeys` (the driver shape) the gram keys come
-    * from ONE pass of the native [[graft.expr.TokenGramHashes]]
-    * expression over each doc's token array — no lead window, no gram
-    * STRING ever built, posexplode yields (pos, key) directly, so the
-    * gram side needs no (doc, pos) sort exchange at all. (This is NOT
-    * the r9 "array-of-shingles" Catalyst form that cost 3× and tripped
-    * the duplication lint — that built per-doc gram-string arrays
-    * through a transform lambda; the fused expression walks token bytes
-    * once per doc inside whole-stage codegen. Measured r14:
+    * Plan shape: the gram keys come from ONE pass of the native
+    * [[graft.expr.TokenGramHashes]] expression over each doc's token
+    * array — no gram STRING is ever built, and posexplode yields
+    * (pos, key) directly, so the gram side needs no (doc, pos) sort
+    * exchange at all. (This is NOT the r9 "array-of-shingles" Catalyst
+    * form that cost 3× and tripped the duplication lint — that built
+    * per-doc gram-string arrays through a transform lambda; the fused
+    * expression walks token bytes once per doc inside whole-stage
+    * codegen. Measured r14 against the retired lead-window gram strings:
     * window dedup 1.59 → 1.05 s steady-state AND shuffle bytes
-    * 10.2 → 7.1 MB — dropping the gram-side sort exchange removes a
-    * whole corpus shuffle, the part that compounds at cluster scale.)
-    * The exact-string path keeps the k−1 window-`lead` gram
-    * assembly over the (doc, pos) exchange. The winner rule is one
-    * gram-keyed rank, coverage is a per-doc RANGE window over loser
-    * starts (no interval explosion), reassembly the shared sort-collect
-    * fold. Shuffles: one by gram key, one by doc. With `hashKeys` the
-    * key is 8 bytes instead of ~8·k on the wire, the right trade at
-    * corpus scale (false-merge odds ~2⁻⁶⁴ per pair — FNV-1a with a
-    * token-separator byte since r14, xxhash64-of-concat before; both
-    * relabelings leave the winner-rule groups identical absent a
-    * collision). The driver query ships hashKeys = true (round 9); its
-    * exact-string oracle stays valid because hashing only relabels the
-    * groups, and DedupSpec pins the equivalence.
+    * 10.2 → 7.1 MB.) The winner rule is one gram-keyed rank, coverage
+    * is a per-doc RANGE window over loser starts (no interval
+    * explosion), reassembly the shared sort-collect fold. Shuffles: one
+    * by gram key (8-byte keys instead of ~8·k bytes of string), one by
+    * doc. Hashing only relabels the winner-rule groups — false-merge odds
+    * ~2⁻⁶⁴ per pair (FNV-1a with a token-separator byte) — so the
+    * SparkEntry query's exact-string oracle stays valid; DedupSpec pins the
+    * equivalence against the string-gram reference.
     *
     * Semantics notes (deterministic, oracle-replayed): a position inside
     * a FIRST-occurrence window is still removed if some OTHER losing
     * window covers it (coverage is a union over losers, not winners);
     * docs shorter than k tokens contribute no windows and survive
     * intact; docs whose every token is covered are absent from the
-    * output (the [[dropRepeatedSpans]] convention). */
+    * output (the [[dropRepeatedSpans]] convention). A null text has no
+    * tokens and yields no row; an empty or whitespace-only text is one
+    * empty token, so it survives as "". Tokens are compared whole, so a
+    * surrogate pair is never split. */
   def dropDuplicateWindows(docs: DataFrame, windowTokens: Int,
-      idCol: String = "doc_id", textCol: String = "text",
-      hashKeys: Boolean = false): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(windowTokens >= 2, s"windowTokens must be >= 2, got $windowTokens")
     import org.apache.spark.sql.expressions.Window
     val k = windowTokens
     val tok = docs.select(col(idCol).as("doc_id"),
       posexplode(tokens(col(textCol))).as(Seq("pos", "w")))
-    val grams = if (hashKeys) {
-      // fused path: per-doc gram hashes in one codegen'd byte walk —
-      // no lead window, no gram string, no (doc, pos) sort exchange
-      docs.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__toks"))
-        .select(col("doc_id"),
-          posexplode(graft.expr.TokenGramHashes.tokenGramHashes(col("__toks"), k))
-            .as(Seq("pos", "key")))
-    } else {
-      val wOrd = Window.partitionBy("doc_id").orderBy("pos")
-      val leads = (1 until k).map(j => lead("w", j).over(wOrd).as(s"__w$j"))
-      val gram = concat_ws(" ", col("w") +: (1 until k).map(j => col(s"__w$j")): _*)
-      tok
-        .select(col("doc_id") +: col("pos") +: col("w") +: leads: _*)
-        // a full k-token window exists iff the furthest lead is defined
-        .filter(col(s"__w${k - 1}").isNotNull)
-        .select(col("doc_id"), col("pos"), gram.as("key"))
-    }
+    val grams = docs.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__toks"))
+      .select(col("doc_id"),
+        posexplode(graft.expr.TokenGramHashes.tokenGramHashes(col("__toks"), k))
+          .as(Seq("pos", "key")))
     val losers = grams
       .withColumn("rn",
         row_number().over(Window.partitionBy("key").orderBy("doc_id", "pos")))

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** ROUGE-L between paired texts (Lin 2004, "ROUGE: A Package for
@@ -72,87 +71,47 @@ object Rouge {
     *   hit = Σ_g min(cnt_cand(g), cnt_ref(g))
     *   R = hit / Σ_g cnt_ref(g),  P = hit / Σ_g cnt_cand(g)
     *
-    * n-grams come from n−1 chained `lead`s over the (pair, pos) window —
-    * the [[Bleu]] lead-window recipe, linear per token, never a
-    * `transform` lambda over a derived array (the round-7 quadratic
-    * trap); n is capped at 4 (the ROUGE-1..4 family) to keep the lead
-    * chain literal. Same pair-keyed scale shape and 1e-6 canon
+    * n-gram keys are the native [[graft.expr.TokenGramHashes]] of each
+    * side's non-empty token array: no (pair, pos) sort exchange, no gram
+    * string, 8-byte keys through the one count shuffle. Hashing only
+    * relabels the count groups, so hit/c_ngrams/r_ngrams are identical
+    * to string grams absent a collision (~2⁻⁶⁴ per pair) and the
+    * SparkEntry query's exact-string oracle stays valid; RougeSpec pins the
+    * equivalence against the string-gram reference. n is capped at 4
+    * (the ROUGE-1..4 family). Same pair-keyed scale shape and 1e-6 canon
     * conventions as [[Bleu.bleu2]]; null-side pairs are dropped, a side
-    * with no n-grams (< n tokens) leaves its ratio (and F) null, zero
-    * overlap scores 0. Output: (idCol, c_ngrams, r_ngrams, hit,
-    * rouge_r, rouge_p, rouge_f). */
+    * with no n-grams (< n tokens, or an empty or whitespace-only text)
+    * leaves its ratio (and F) null, zero overlap scores 0; tokens are
+    * compared whole, so a surrogate pair is never split. Output:
+    * (idCol, c_ngrams, r_ngrams, hit, rouge_r, rouge_p, rouge_f). */
   def rougeN(pairs: DataFrame, n: Int = 2,
       idCol: String = "pair_id",
       candCol: String = "candidate",
-      refCol: String = "reference",
-      hashKeys: Boolean = false): DataFrame = {
+      refCol: String = "reference"): DataFrame = {
     require(n >= 1 && n <= 4, s"n must be in [1, 4], got $n")
     val base = pairs.filter(col(candCol).isNotNull && col(refCol).isNotNull)
-    // hashKeys (the corpus-scale driver shape, the dropDuplicateWindows
-    // r14 move): gram keys from one native TokenGramHashes pass over the
-    // token array — no (pair, pos) sort exchange, no gram string, 8-byte
-    // keys through the count/clip shuffles. Hashing only relabels the
-    // count groups, so hit/c_ngrams/r_ngrams are identical absent a
-    // collision (~2⁻⁶⁴/pair) and the exact-string oracle stays valid;
-    // RougeSpec pins the equivalence.
-    // r16 (§2.3/§2.4, the Bleu.bleu2 fusion note): the hashKeys branch
-    // used to run TWO (pair, gram) count aggregates and a full-outer clip
-    // join, each consumer re-planning the pair join + tokenize subtree.
-    // Restructured: tokenize both sides ONCE into a pinned pair-sized
-    // frame, tag every gram occurrence with its side, and collapse both
-    // counts AND the clip into ONE gram-keyed aggregate + one per-pair
+    // One pinned tokenize pass; every gram occurrence, tagged with its
+    // side, feeds ONE gram-keyed aggregate (counts AND clip) + a per-pair
     // rollup — a side-only gram carries 0 for the other side, exactly the
-    // full-outer coalesce(…, 0) rows, so every hit/c_ngrams/r_ngrams long
-    // is identical. Locally a timing wash (paired steady mins 1.35 vs
-    // 1.33 s — the query is chain-bound at sf0.1); kept for the
-    // structure: stages 11 → 10 and ONE corpus-sized gram shuffle
-    // instead of two plus the full-outer join co-shuffle, plus one
-    // tokenize pass instead of two (r16 ledger).
-    lazy val toksBoth: DataFrame = graft.core.Ckpt.pin(base
+    // full-outer coalesce(…, 0) rows of a clip join. r16: stages 11 → 10,
+    // one corpus-sized gram shuffle instead of two plus the join
+    // co-shuffle (a timing wash at sf0.1, 1.35 vs 1.33 s).
+    val toksBoth = graft.core.Ckpt.pin(base
       .select(col(idCol),
         filter(split(lower(trim(col(candCol))), "\\s+"), t => length(t) > 0).as("__ctoks"),
         filter(split(lower(trim(col(refCol))), "\\s+"), t => length(t) > 0).as("__rtoks")))
-    def grams(c: String): DataFrame = {
-      if (hashKeys)
-        sys.error("unreachable: hashKeys uses the fused occurrence aggregate")
-      else {
-        val side = base
-          .select(col(idCol), posexplode(split(lower(trim(col(c))), "\\s+"))
-            .as(Seq("pos", "w")))
-          .filter(col("w") =!= "")
-        val wnd = Window.partitionBy(idCol).orderBy("pos")
-        val leads = (1 until n).foldLeft(side) { (df, i) =>
-          df.withColumn(s"w$i", lead("w", i).over(wnd))
-        }
-        val gram = concat_ws(" ", (col("w") +: (1 until n).map(i => col(s"w$i"))): _*)
-        val full = if (n == 1) leads else leads.filter(col(s"w${n - 1}").isNotNull)
-        full.select(col(idCol), gram.as("g"))
-          .groupBy(col(idCol), col("g")).agg(count(lit(1)).as("cnt"))
-      }
-    }
-    val joined = if (hashKeys) {
-      def occ(tokCol: String, cand: Boolean): DataFrame = toksBoth
-        .select(col(idCol),
-          explode(graft.expr.TokenGramHashes.tokenGramHashes(col(tokCol), n)).as("g"),
-          lit(if (cand) 1L else 0L).as("c"), lit(if (cand) 0L else 1L).as("r"))
-      occ("__ctoks", cand = true).unionAll(occ("__rtoks", cand = false))
-        .groupBy(col(idCol), col("g"))
-        .agg(sum(col("c")).as("cnt"), sum(col("r")).as("rcnt"))
-        .groupBy(col(idCol))
-        .agg(sum(least(col("cnt"), col("rcnt"))).as("hit"),
-          sum(col("cnt")).as("c_ngrams"),
-          sum(col("rcnt")).as("r_ngrams"))
-    } else {
-      val cg = grams(candCol)
-      val rg = grams(refCol)
-      cg.join(rg.withColumnRenamed("cnt", "rcnt"), Seq(idCol, "g"), "full_outer")
-        .groupBy(col(idCol))
-        .agg(sum(least(coalesce(col("cnt"), lit(0L)), coalesce(col("rcnt"), lit(0L))))
-            .as("hit"),
-          sum(coalesce(col("cnt"), lit(0L))).as("c_ngrams"),
-          sum(coalesce(col("rcnt"), lit(0L))).as("r_ngrams"))
-    }
-    (if (hashKeys) toksBoth.select(col(idCol)) else base.select(col(idCol)))
+    def occ(tokCol: String, cand: Boolean): DataFrame = toksBoth
+      .select(col(idCol),
+        explode(graft.expr.TokenGramHashes.tokenGramHashes(col(tokCol), n)).as("g"),
+        lit(if (cand) 1L else 0L).as("c"), lit(if (cand) 0L else 1L).as("r"))
+    val joined = occ("__ctoks", cand = true).unionAll(occ("__rtoks", cand = false))
+      .groupBy(col(idCol), col("g"))
+      .agg(sum(col("c")).as("cnt"), sum(col("r")).as("rcnt"))
+      .groupBy(col(idCol))
+      .agg(sum(least(col("cnt"), col("rcnt"))).as("hit"),
+        sum(col("cnt")).as("c_ngrams"),
+        sum(col("rcnt")).as("r_ngrams"))
+    toksBoth.select(col(idCol))
       .join(joined, Seq(idCol), "left")
       .select(col(idCol),
         coalesce(col("c_ngrams"), lit(0L)).as("c_ngrams"),

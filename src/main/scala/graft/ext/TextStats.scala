@@ -158,90 +158,52 @@ object TextStats {
     *   - `n_tokens` for downstream thresholds. Both fractions are 0.0 for
     *     docs too short to form the n-gram.
     *
-    * Shape: posexplode → doc-keyed window `lead` builds the grams (NOT a
-    * `transform` lambda over the token array — Catalyst inlines the
-    * derived-array expression per element, going quadratic in doc length;
-    * see the winnowing op), then (doc, gram) partial-agg counts. Every
-    * shuffle is doc/gram-keyed — parallelism scales with the corpus, no
-    * per-doc state beyond the aggregation row. Tokenization is the dedup
-    * family's `split(lower(trim(text)), "\\s+")`, so repetition thresholds
-    * compose with the minhash/simhash pipeline unchanged. */
+    * Out-of-contract input: every input row yields one output row. A null
+    * text gives a null `n_tokens` and both fractions 0.0; an empty or
+    * whitespace-only text splits to one empty token (`n_tokens` 1,
+    * fractions 0.0). Tokens are compared whole, so a surrogate pair is
+    * never split.
+    *
+    * Shape: a projection, no shuffle. Every stat is per-doc, so the native
+    * [[graft.expr.TokenGramHashes]] arrays (k = 2 and 3) carry it: distinct
+    * counts and the top-bigram multiplicity read the hash arrays (a pure
+    * relabeling of the string grams absent a per-doc ~2⁻⁶⁴ collision — the
+    * exact-string oracle stays valid). Max multiplicity = longest run of
+    * the SORTED hash array, a linear fold whose first argument is
+    * evaluated once per row (an argument expression, not the round-7
+    * per-element lambda-capture trap). Projections are staged so the
+    * tokenizer and each gram pass evaluate once (PlanLint). Tokenization
+    * is the dedup family's `split(lower(trim(text)), "\\s+")`, so
+    * repetition thresholds compose with the minhash/simhash pipeline
+    * unchanged. */
   def repetitionStats(
       docs: org.apache.spark.sql.DataFrame,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      hashKeys: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = docs.select(col(idCol).as("doc_id"), Dedup.tokens(col(textCol)).as("toks"))
-    if (hashKeys) {
-      // ZERO-shuffle form (r14, the TokenGramHashes move): every stat is
-      // per-doc, so with native gram-hash arrays the whole computation is
-      // a projection — no posexplode, no (doc, pos) window sort, no
-      // gram-keyed groupBy, no pivot, no join-back. distinct counts and
-      // the top-bigram multiplicity read the hash arrays (a pure
-      // relabeling — values identical to the string grams absent a
-      // per-doc ~2⁻⁶⁴ collision; TextExtSpec pins the equivalence and
-      // the exact-string oracle stays valid). Max multiplicity = longest
-      // run of the SORTED hash array, a linear fold whose first argument
-      // is evaluated once per row (an argument expression, not the
-      // round-7 per-element lambda-capture trap). Projections are staged
-      // so the tokenizer and each gram pass evaluate once (PlanLint).
-      def maxRun(g: Column): Column =
-        aggregate(array_sort(g),
-          struct(lit(0L).as("prev"), lit(0L).as("run"), lit(0L).as("mx")),
-          (acc, x) => {
-            val nrun = when(acc.getField("run") > 0 && x === acc.getField("prev"),
-              acc.getField("run") + lit(1L)).otherwise(lit(1L))
-            struct(x.as("prev"), nrun.as("run"),
-              greatest(acc.getField("mx"), nrun).as("mx"))
-          },
-          acc => acc.getField("mx"))
-      val arr = base.select(col("doc_id"), size(col("toks")).as("n_tokens"),
+      textCol: String = "text"): org.apache.spark.sql.DataFrame = {
+    def maxRun(g: Column): Column =
+      aggregate(array_sort(g),
+        struct(lit(0L).as("prev"), lit(0L).as("run"), lit(0L).as("mx")),
+        (acc, x) => {
+          val nrun = when(acc.getField("run") > 0 && x === acc.getField("prev"),
+            acc.getField("run") + lit(1L)).otherwise(lit(1L))
+          struct(x.as("prev"), nrun.as("run"),
+            greatest(acc.getField("mx"), nrun).as("mx"))
+        },
+        acc => acc.getField("mx"))
+    val arr = docs.select(col(idCol).as("doc_id"), Dedup.tokens(col(textCol)).as("toks"))
+      .select(col("doc_id"), size(col("toks")).as("n_tokens"),
         graft.expr.TokenGramHashes.tokenGramHashes(col("toks"), 2).as("g2"),
         graft.expr.TokenGramHashes.tokenGramHashes(col("toks"), 3).as("g3"))
-      val stats = arr.select(col("doc_id"), col("n_tokens"),
-        size(col("g3")).as("t_n"), size(array_distinct(col("g3"))).as("t_d"),
-        size(col("g2")).as("b_n"), maxRun(col("g2")).as("b_mx"))
-      return stats.select(col("doc_id"), col("n_tokens"),
-        when(col("t_n").isNull || col("t_n") === 0, 0.0)
-          .otherwise((col("t_n") - col("t_d")).cast("double") / col("t_n"))
-          .as("dup_trigram_frac"),
-        when(col("b_n").isNull || col("b_n") === 0, 0.0)
-          .otherwise(col("b_mx").cast("double") / col("b_n"))
-          .as("top_bigram_frac"))
-    }
-    val tok = base.select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "t")))
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    // both gram kinds from ONE window pass: a union of two filtered
-    // branches would duplicate the posexplode+window subtree (plan audit
-    // showed the scan and window evaluated twice); explode a 2-struct
-    // array instead and drop the null (end-of-doc) grams after
-    val g = tok
-      .withColumn("t1", lead("t", 1).over(w))
-      .withColumn("t2", lead("t", 2).over(w))
-      .select(col("doc_id"), explode(array(
-        struct(lit("b").as("k"),
-          when(col("t1").isNotNull, concat_ws(" ", col("t"), col("t1"))).as("gram")),
-        struct(lit("t").as("k"),
-          when(col("t2").isNotNull,
-            concat_ws(" ", col("t"), col("t1"), col("t2"))).as("gram")))).as("kg"))
-      .select(col("doc_id"), col("kg.k").as("k"), col("kg.gram").as("gram"))
-      .filter(col("gram").isNotNull)
-    val per = g
-      .groupBy("doc_id", "k", "gram").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id", "k")
-      .agg(sum("c").as("n"), count(lit(1)).as("d"), max("c").as("mx"))
-    val wide = per.groupBy("doc_id").pivot("k", Seq("b", "t"))
-      .agg(first("n").as("n"), first("d").as("d"), first("mx").as("mx"))
-    base.select(col("doc_id"), size(col("toks")).as("n_tokens"))
-      .join(wide, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tokens"),
-        when(col("t_n").isNull || col("t_n") === 0, 0.0)
-          .otherwise((col("t_n") - col("t_d")).cast("double") / col("t_n"))
-          .as("dup_trigram_frac"),
-        when(col("b_n").isNull || col("b_n") === 0, 0.0)
-          .otherwise(col("b_mx").cast("double") / col("b_n"))
-          .as("top_bigram_frac"))
+    val stats = arr.select(col("doc_id"), col("n_tokens"),
+      size(col("g3")).as("t_n"), size(array_distinct(col("g3"))).as("t_d"),
+      size(col("g2")).as("b_n"), maxRun(col("g2")).as("b_mx"))
+    stats.select(col("doc_id"), col("n_tokens"),
+      when(col("t_n").isNull || col("t_n") === 0, 0.0)
+        .otherwise((col("t_n") - col("t_d")).cast("double") / col("t_n"))
+        .as("dup_trigram_frac"),
+      when(col("b_n").isNull || col("b_n") === 0, 0.0)
+        .otherwise(col("b_mx").cast("double") / col("b_n"))
+        .as("top_bigram_frac"))
   }
 
   /** Corpus diversity: distinct-n ratios (Li et al. 2016's "distinct"
@@ -251,65 +213,22 @@ object TextStats {
     * boilerplate/template dominance in scraped ones; distinct-1 is the
     * classic type–token ratio.
     *
-    * Shape: ONE posexplode + doc-keyed window pass builds all three gram
-    * streams (the repetitionStats recipe — leads, not a `transform`
-    * lambda over the derived token array, which Catalyst inlines per
-    * element and goes quadratic), then a (group, n, gram) partial-agg
-    * count and a (group, n) rollup. The gram-keyed exchange is the one
-    * corpus-wide shuffle — the same shuffle any EXACT distinct pays;
-    * at the 100 TB tier swap the exact count for the mergeable HLL
-    * sketch ([[graft.ext.Sketches]]) when ±2% suffices. Groups with no
+    * Shape: ONE [[graft.expr.TokenNGrams]] walk over each doc's token
+    * array emits its (n, gram) strings — the single-space join of n
+    * consecutive non-empty tokens — so the gram stream is map-only, with
+    * no doc-keyed exchange or per-doc sort, until a (group, n, gram)
+    * partial-agg count and a (group, n) rollup. The gram-keyed exchange
+    * is the one corpus-wide shuffle — the same shuffle any EXACT distinct
+    * pays; at the 100 TB tier swap the exact count for the mergeable HLL
+    * sketch ([[distinctNgramRatioApprox]]) when ±2% suffices.
+    *
+    * Out-of-contract input: empty tokens are skipped, so a null, empty or
+    * whitespace-only text contributes no gram (the rouge/chrF empty-token
+    * convention; mirrored with list_filter in the oracle). Groups with no
     * n-gram of some order (every doc shorter than n tokens) emit no row
-    * for that order. */
+    * for that order. Tokens are compared whole, so a surrogate pair is
+    * never split. */
   def distinctNgramRatio(
-      docs: org.apache.spark.sql.DataFrame,
-      groupCol: String = "lang",
-      idCol: String = "doc_id",
-      textCol: String = "text"): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = docs.select(col(groupCol).cast("string").as("group"),
-      col(idCol).as("doc_id"), Dedup.tokens(col(textCol)).as("toks"))
-    val tok = base.select(col("group"), col("doc_id"),
-      posexplode(col("toks")).as(Seq("pos", "t")))
-      // an empty/whitespace-only doc splits to [""] — drop the phantom ''
-      // unigram so totals count real tokens only (the rouge/chrf empty-token
-      // convention; mirrored with list_filter in the oracle)
-      .filter(length(col("t")) > 0)
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val g = tok
-      .withColumn("t1", lead("t", 1).over(w))
-      .withColumn("t2", lead("t", 2).over(w))
-      .select(col("group"), explode(array(
-        struct(lit(1).as("n"), col("t").as("gram")),
-        struct(lit(2).as("n"),
-          when(col("t1").isNotNull, concat_ws(" ", col("t"), col("t1"))).as("gram")),
-        struct(lit(3).as("n"),
-          when(col("t2").isNotNull,
-            concat_ws(" ", col("t"), col("t1"), col("t2"))).as("gram")))).as("ng"))
-      .select(col("group"), col("ng.n").as("n"), col("ng.gram").as("gram"))
-      .filter(col("gram").isNotNull)
-    g.groupBy("group", "n", "gram").agg(count(lit(1)).as("c"))
-      .groupBy("group", "n")
-      .agg(sum("c").as("total_ngrams"), count(lit(1)).as("distinct_ngrams"))
-      .select(col("group"), col("n"), col("total_ngrams"), col("distinct_ngrams"),
-        (col("distinct_ngrams").cast("double") / col("total_ngrams"))
-          .as("distinct_ratio"))
-      .orderBy("group", "n")
-  }
-
-  /** The zero-window twin of [[distinctNgramRatio]] (a private[graft]
-    * optimization entry point, the distinctNgramRatioApproxKR pattern):
-    * identical output, but the (n, gram) stream comes from ONE
-    * [[graft.expr.TokenNGrams]] walk over each doc's token array instead
-    * of posexplode → doc-keyed sort → lead window → concat_ws. The grams
-    * are the same STRINGS by construction (single-space join of n
-    * consecutive non-empty tokens — TokenGramExprSpec pins the kernel,
-    * TextExtSpec pins this path row-exact against the window path), so
-    * every (group, n, gram) count long, both aggregate longs, and the
-    * long/long ratio division are bit-identical. The doc-keyed window
-    * exchange and per-doc sort disappear: the gram stream is map-only
-    * until the (group, n, gram) aggregate. */
-  private[graft] def distinctNgramRatioFused(
       docs: org.apache.spark.sql.DataFrame,
       groupCol: String = "lang",
       textCol: String = "text"): org.apache.spark.sql.DataFrame = {
@@ -329,7 +248,7 @@ object TextStats {
   }
 
   /** The 100 TB tier of [[distinctNgramRatio]] (round-13 verdict task 5):
-    * identical gram streams, but the per-(group, n) EXACT distinct — a
+    * the same gram streams, but the per-(group, n) EXACT distinct — a
     * gram-keyed shuffle whose state is the full n-gram vocabulary — is
     * replaced by the mergeable HLL register sketch
     * ([[graft.ext.Sketches.hllBucketRank]], the q_hll_distinct machinery).
@@ -340,86 +259,27 @@ object TextStats {
     * stream store does. total_ngrams stays exact (a count rides the same
     * partial aggregate).
     *
+    * Gram surrogates: ONE [[graft.expr.KarpRabinNGramHashes]] walk over
+    * each doc's token array emits, per gram, the Karp–Rabin fold
+    * ([[rollingHash]]) of its space-joined string — no gram string is
+    * built and the stream is map-only until the (group, n, bucket)
+    * partial aggregate. The fold is replayable integer arithmetic, so the
+    * SparkEntry query's DuckDB oracle regenerates the whole sketch —
+    * registers, estimator and all — not just its error.
+    *
     * Accuracy: the standard HLL standard error 1.04/√(2^b) — ±1.6% at the
-    * default b = 12, ±6.5% at b = 8; the exact path stays the oracle and
-    * the default below the sketch's own memory crossover (a vocabulary
-    * under ~2^b grams costs LESS exactly than 2^b registers — use the
-    * exact path there, it is also error-free; the sketch pays off once
-    * per-(group, n) vocabularies outgrow ~10 × 2^b, i.e. web-corpus
-    * scale). TextExtSpec pins the relative error against the exact path
-    * on the fixture corpus.
-    *
-    * `gramHash` is the injection seam (the simhashCore pattern, applied
-    * here r14): everything downstream of the per-gram 64-bit surrogate —
-    * bucket routing, bin()-bitlen ranks, register max/merge, the harmonic
-    * estimator and its linear-counting branch — is shared replayable
-    * arithmetic; only the raw draw varies. Production feeds xxhash64
-    * (engine-specific by construction); the driver query feeds
-    * [[rollingHash]], whose Karp–Rabin fold an ANSI SQL engine
-    * regenerates exactly, which is what lets q_distinct_ngrams_approx_docs
-    * hard-oracle the SKETCH itself — registers, estimator and all — not
-    * just bound its error. */
+    * default b = 12, ±6.5% at b = 8. The surrogates live in [0, 10^9+7),
+    * so distinct grams collide before the sketch sees them: about
+    * n/(2·10^9) relative undercount at n distinct grams per (group, n) —
+    * 0.05% at 10^6, and still inside the 1.6% standard error at b = 12 up
+    * to about 3·10^7 distinct grams. Past that, use [[distinctNgramRatio]].
+    * The exact path stays the accuracy oracle and the better choice below
+    * the sketch's own memory crossover (a vocabulary under ~2^b grams
+    * costs LESS exactly than 2^b registers; the sketch pays off once
+    * per-(group, n) vocabularies outgrow ~10 × 2^b). TextExtSpec pins the
+    * relative error against the exact path on the fixture corpus.
+    * Out-of-contract input is handled as in [[distinctNgramRatio]]. */
   def distinctNgramRatioApprox(
-      docs: org.apache.spark.sql.DataFrame,
-      groupCol: String = "lang",
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      b: Int = 12,
-      gramHash: Column => Column = xxhash64(_)): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(b >= 4 && b <= 16, s"b must be in [4,16], got $b")
-    val base = docs.select(col(groupCol).cast("string").as("group"),
-      col(idCol).as("doc_id"), Dedup.tokens(col(textCol)).as("toks"))
-    val tok = base.select(col("group"), col("doc_id"),
-      posexplode(col("toks")).as(Seq("pos", "t")))
-      .filter(length(col("t")) > 0) // the exact path's empty-token convention
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val g = tok
-      .withColumn("t1", lead("t", 1).over(w))
-      .withColumn("t2", lead("t", 2).over(w))
-      .select(col("group"), explode(array(
-        struct(lit(1).as("n"), col("t").as("gram")),
-        struct(lit(2).as("n"),
-          when(col("t1").isNotNull, concat_ws(" ", col("t"), col("t1"))).as("gram")),
-        struct(lit(3).as("n"),
-          when(col("t2").isNotNull,
-            concat_ws(" ", col("t"), col("t1"), col("t2"))).as("gram")))).as("ng"))
-      .select(col("group"), col("ng.n").as("n"), col("ng.gram").as("gram"))
-      .filter(col("gram").isNotNull)
-    // mixHash is numeric (kept replayable for the oracled sketch queries);
-    // grams enter through the gramHash surrogate — its 2^31 folded space
-    // adds ~n²/2³² phantom collisions (0.02% at a million grams), far
-    // inside the sketch's own 1.04/√2^b error. The EXACT path stays the
-    // accuracy oracle; the injected-hash driver query hard-oracles the
-    // sketch mechanism itself. The surrogate gets its OWN projection
-    // (the simhashCore addHash staging): hllBucketRank references its
-    // input three times (bucket + the two w reads in the rank CASE), and
-    // CollapseProject keeps a non-cheap alias referenced that often
-    // staged — so a per-character fold like the replayable rollingHash
-    // is evaluated once per gram, and only mixHash's O(1) integer
-    // arithmetic is triplicated (the accepted hll/kmv-query shape).
-    val hashed = g.select(col("group"), col("n"), gramHash(col("gram")).as("gh"))
-    hllNgramTail(hashed, b)
-  }
-
-  /** The Karp–Rabin-fused twin of [[distinctNgramRatioApprox]] (a
-    * private[graft] optimization entry point, the dsirScoresSelfTrained
-    * pattern): identical output for `gramHash = rollingHash`, but the
-    * gram surrogates come from ONE
-    * [[graft.expr.KarpRabinNGramHashes]] walk over each doc's token
-    * array instead of posexplode → doc-keyed sort → lead window →
-    * concat_ws → per-char re-hash. Equivalence is compositional modular
-    * arithmetic, machine-checked by TextExtSpec (bit-equality against
-    * the window path on a fixture with empties/unicode/short docs):
-    *
-    *   KR(a ⧺ " " ⧺ b) = (KR(a) · 257^(cp(b)+1) + KR(" " ⧺ b)) mod P
-    *
-    * so every (n, gh) pair — and therefore every bucket, rank, register
-    * and estimator read-out — is identical. The doc-keyed window
-    * exchange disappears: the gram stream is map-only until the
-    * (group, n, bucket) partial aggregate, which is the shape the 100 TB
-    * tier wants (constant sketch state, no corpus-wide sort). */
-  private[graft] def distinctNgramRatioApproxKR(
       docs: org.apache.spark.sql.DataFrame,
       groupCol: String = "lang",
       textCol: String = "text",
@@ -438,10 +298,11 @@ object TextStats {
     hllNgramTail(hashed, b)
   }
 
-  /** Shared HLL register/estimator tail of the approx distinct-n pair:
+  /** HLL register/estimator tail of [[distinctNgramRatioApprox]]:
     * (group, n, gh) → (group, n, bucket) register maxima → harmonic-mean
-    * estimate with the linear-counting branch. */
-  private def hllNgramTail(
+    * estimate with the linear-counting branch. Shared with the spec's
+    * string-gram reference, so equivalence checks compare gram streams. */
+  private[graft] def hllNgramTail(
       hashed: org.apache.spark.sql.DataFrame, b: Int): org.apache.spark.sql.DataFrame = {
     val (bucket, rank) = Sketches.hllBucketRank(col("gh"), b)
     val regs = hashed
@@ -641,7 +502,7 @@ object TextStats {
 
   /** Train the interpolated Kneser–Ney bigram model on a reference
     * corpus. One corpus scan builds the bigram type table (Ckpt-pinned —
-    * four consumers would each replay the token window otherwise); the
+    * four consumers would each replay the token pass otherwise); the
     * context frame (c1 = Σc12, n1fwd = distinct continuations of w1),
     * the continuation frame (n1bwd = distinct contexts preceding w2), and
     * the scalar row (B, n₁, n₂) are all model-sized rollups of it. The
@@ -650,18 +511,11 @@ object TextStats {
     * there); the fallback is replayed as a CASE in the oracle. */
   def trainKneserNeyModel(corpus: DataFrame,
       textCol: String = "text", hashKeys: Boolean = false): KnModel = {
-    // positions frame, one row per token: (w1, w2 = the next token or
-    // null). The string path window-leads over per-doc positions; the
-    // hashKeys path (the corpus-scale driver shape, under the bleu2/
-    // rouge2 r14 relabeling contract: pure key relabeling, identical
-    // counts absent a 64-bit FNV collision, spec-pinned equivalence)
-    // zips one native TokenGramHashes pass against its own 1-shifted
-    // slice — arrays_zip pads the shorter slice with null exactly where
-    // lead(1) is null — so the per-doc window SHUFFLE disappears and
-    // every downstream shuffle carries 8-byte keys instead of token
-    // strings. Train and score must agree on hashKeys: the model frames
-    // are keyed by whichever labels the trainer used.
-    val positions = knPositions(corpus, textCol, hashKeys)
+    // hashKeys keys the model frames by 64-bit token hashes instead of
+    // token strings (identical counts absent a 64-bit FNV collision,
+    // spec-pinned): 8-byte keys through every downstream shuffle. The
+    // scorer reads the key kind back from the model.
+    val positions = gramPositions(corpus, textCol, hashKeys, order = 2)
     val bi = graft.core.Ckpt.pin(
       positions.filter(col("w2").isNotNull)
         .groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
@@ -678,36 +532,37 @@ object TextStats {
     KnModel(bi, ctx, cont, b, vocab, d)
   }
 
-  /** Adjacent-token bigram position stream shared by the Kneser-Ney
-    * trainer and scorer: one row per token with (w1, w2 = successor or
-    * null at the doc tail), plus the passed-through key columns. String
-    * path: posexplode + per-doc window lead. hashKeys path: per-token
-    * 64-bit hashes ([[graft.expr.TokenGramHashes]], k = 1 — one hash per
-    * token INCLUDING empty tokens, preserving the split convention)
-    * zipped against their own shifted slice, no window shuffle. */
-  private def knPositions(src: DataFrame, textCol: String,
-      hashKeys: Boolean, keyCols: Seq[String] = Seq.empty): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  /** Token position stream shared by the Kneser–Ney and Stupid Backoff
+    * trainers and scorers: one row per token with its `order − 1`
+    * successors — (w1, w2[, w3]), null past the doc tail — plus the
+    * passed-through key columns. The labels are the token strings, or
+    * with `hashKeys` their 64-bit hashes ([[graft.expr.TokenGramHashes]],
+    * k = 1 — one hash per token INCLUDING empty tokens, preserving the
+    * split convention). Each successor column is the label array's own
+    * shifted slice, zipped against it — arrays_zip pads the shorter
+    * slices with null exactly at the doc tail — so no per-doc window
+    * shuffle or sort runs. A null text yields no rows. */
+  private def gramPositions(src: DataFrame, textCol: String,
+      hashKeys: Boolean, order: Int, keyCols: Seq[String] = Seq.empty): DataFrame = {
     val keys = keyCols.map(col)
-    if (hashKeys)
-      src.select(keys :+ graft.expr.TokenGramHashes.tokenGramHashes(
-          Dedup.tokens(col(textCol)), 1).as("__hs"): _*)
-        .withColumn("__nx",
-          slice(col("__hs"), lit(2), greatest(size(col("__hs")) - 1, lit(0))))
-        .select(keys :+ explode(arrays_zip(col("__hs"), col("__nx"))).as("__z"): _*)
-        .select(keys :+ col("__z.__hs").as("w1") :+ col("__z.__nx").as("w2"): _*)
-    else {
-      val grain =
-        if (keyCols.nonEmpty) keys
-        else Seq(monotonically_increasing_id().as("__d"))
-      val grainRefs = (if (keyCols.nonEmpty) keyCols else Seq("__d")).map(col)
-      val tok = src.select(grain :+ col(textCol).as("__t"): _*)
-        .select(grainRefs :+ posexplode(Dedup.tokens(col("__t"))).as(Seq("pos", "w")): _*)
-      val w = Window.partitionBy(grainRefs: _*).orderBy("pos")
-      tok.withColumn("w2", lead("w", 1).over(w))
-        .select(keys :+ col("w").as("w1") :+ col("w2"): _*)
+    val toks = Dedup.tokens(col(textCol))
+    val labels =
+      if (hashKeys) graft.expr.TokenGramHashes.tokenGramHashes(toks, 1) else toks
+    val shifted = (2 to order).foldLeft(src.select(keys :+ labels.as("__hs"): _*)) {
+      (df, j) => df.withColumn(s"__n$j",
+        slice(col("__hs"), lit(j), greatest(size(col("__hs")) - (j - 1), lit(0))))
     }
+    val zipped = col("__hs") +: (2 to order).map(j => col(s"__n$j"))
+    shifted
+      .select(keys :+ explode(arrays_zip(zipped: _*)).as("__z"): _*)
+      .select(keys ++ (col("__z.__hs").as("w1") +:
+        (2 to order).map(j => col(s"__z.__n$j").as(s"w$j"))): _*)
   }
+
+  /** Whether a model frame is keyed by 64-bit token hashes (a `w1`
+    * column of LongType) rather than token strings. */
+  private def hashKeyed(frame: DataFrame): Boolean =
+    frame.schema("w1").dataType == org.apache.spark.sql.types.LongType
 
   /** Per-doc mean log-likelihood under interpolated Kneser–Ney:
     *
@@ -726,15 +581,14 @@ object TextStats {
     * join shape as [[bigramLogLikelihood]]: doc bigrams LEFT-join the
     * three model frames on their gram keys. */
   def kneserNeyLogLikelihood(docs: DataFrame, model: KnModel,
-      idCol: String = "doc_id", textCol: String = "text",
-      hashKeys: Boolean = false): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val dCol = lit(model.discount)
     val bCol = lit(model.bigramTypes.toDouble)
     val floorP = lit(1.0 / (model.vocab + 1.0))
-    // hashKeys must match the trainer's: the model frames are keyed by
-    // whichever labels (strings or 64-bit token hashes) the trainer used
-    knPositions(docs.select(col(idCol).as("doc_id"), col(textCol)),
-        textCol, hashKeys, keyCols = Seq("doc_id"))
+    // doc tokens are labelled like the model's keys (strings or 64-bit
+    // token hashes, whichever the trainer used)
+    gramPositions(docs.select(col(idCol).as("doc_id"), col(textCol)),
+        textCol, hashKeyed(model.bi), order = 2, keyCols = Seq("doc_id"))
       .withColumnRenamed("w1", "w")
       .filter(col("w2").isNotNull)
       .join(model.bi.select(col("w1").as("w"), col("w2"), col("c12").as("__c12")),
@@ -772,16 +626,15 @@ object TextStats {
 
   /** Train the Stupid Backoff count frames on a reference corpus. One
     * corpus scan builds the (w, w2, w3) position stream (Ckpt-pinned —
-    * three count rollups would each replay the token window otherwise);
+    * three count rollups would each replay the token pass otherwise);
     * unigram, bigram and trigram counts are independent aggregates of
     * it, and the token total is a sum over the unigram frame. */
   def trainStupidBackoff(corpus: DataFrame, textCol: String = "text",
       hashKeys: Boolean = false): SbModel = {
     // (w1, w2, w3) = each token with its two successors (nulls at the doc
-    // tail). hashKeys trades the per-doc window shuffle for zipped slices
-    // of one TokenGramHashes pass and 8-byte keys through every count
-    // shuffle — the same relabeling contract as the KN trainer above.
-    val seq3 = graft.core.Ckpt.pin(sbPositions(corpus, textCol, hashKeys))
+    // tail). hashKeys puts 8-byte keys through every count shuffle — the
+    // same relabeling contract as the KN trainer above.
+    val seq3 = graft.core.Ckpt.pin(gramPositions(corpus, textCol, hashKeys, order = 3))
     val uni = graft.core.Ckpt.pin(
       seq3.groupBy("w1").agg(count(lit(1)).as("c1")))
     val bi = graft.core.Ckpt.pin(seq3.filter(col("w2").isNotNull)
@@ -790,39 +643,6 @@ object TextStats {
       .groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c123")))
     val total = uni.agg(coalesce(sum("c1"), lit(0L))).head().getLong(0)
     SbModel(tri, bi, uni, total)
-  }
-
-  /** Trigram position stream shared by the Stupid Backoff trainer and
-    * scorer: one row per token with its two successors (null at the doc
-    * tail), plus passed-through key columns — the 3-order sibling of
-    * [[knPositions]]. */
-  private def sbPositions(src: DataFrame, textCol: String,
-      hashKeys: Boolean, keyCols: Seq[String] = Seq.empty): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val keys = keyCols.map(col)
-    if (hashKeys)
-      src.select(keys :+ graft.expr.TokenGramHashes.tokenGramHashes(
-          Dedup.tokens(col(textCol)), 1).as("__hs"): _*)
-        .withColumn("__n2",
-          slice(col("__hs"), lit(2), greatest(size(col("__hs")) - 1, lit(0))))
-        .withColumn("__n3",
-          slice(col("__hs"), lit(3), greatest(size(col("__hs")) - 2, lit(0))))
-        .select(keys :+
-          explode(arrays_zip(col("__hs"), col("__n2"), col("__n3"))).as("__z"): _*)
-        .select(keys :+ col("__z.__hs").as("w1") :+ col("__z.__n2").as("w2") :+
-          col("__z.__n3").as("w3"): _*)
-    else {
-      val grain =
-        if (keyCols.nonEmpty) keys
-        else Seq(monotonically_increasing_id().as("__d"))
-      val grainRefs = (if (keyCols.nonEmpty) keyCols else Seq("__d")).map(col)
-      val tok = src.select(grain :+ col(textCol).as("__t"): _*)
-        .select(grainRefs :+ posexplode(Dedup.tokens(col("__t"))).as(Seq("pos", "w")): _*)
-      val w = Window.partitionBy(grainRefs: _*).orderBy("pos")
-      tok.withColumn("w2", lead("w", 1).over(w))
-        .withColumn("w3", lead("w", 2).over(w))
-        .select(keys :+ col("w").as("w1") :+ col("w2") :+ col("w3"): _*)
-    }
   }
 
   /** Per-doc mean log Stupid Backoff score over trigram positions:
@@ -846,16 +666,14 @@ object TextStats {
     * its context bigram is in the model, and a seen bigram implies its
     * first word is, so the CASE arms never divide by null. */
   def stupidBackoffScore(docs: DataFrame, model: SbModel, alpha: Double = 0.4,
-      idCol: String = "doc_id", textCol: String = "text",
-      hashKeys: Boolean = false): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(alpha > 0.0 && alpha < 1.0, s"alpha must be in (0,1), got $alpha")
     val a = lit(alpha)
     val a2 = lit(alpha * alpha)
     val n = lit(model.total.toDouble)
-    // hashKeys must match the trainer's — the count frames are keyed by
-    // whichever labels the trainer used
-    sbPositions(docs.select(col(idCol).as("doc_id"), col(textCol)),
-        textCol, hashKeys, keyCols = Seq("doc_id"))
+    // doc tokens are labelled like the count frames' keys
+    gramPositions(docs.select(col(idCol).as("doc_id"), col(textCol)),
+        textCol, hashKeyed(model.uni), order = 3, keyCols = Seq("doc_id"))
       .filter(col("w3").isNotNull)
       .join(model.tri.select(col("w1"), col("w2"), col("w3"),
         col("c123").as("__c123")), Seq("w1", "w2", "w3"), "left")
@@ -1393,24 +1211,16 @@ object TextStats {
     *
     * Since r14 this is the fused native expression
     * ([[graft.expr.KarpRabinHash]] — one codegen'd code-point loop); the
-    * original `aggregate(split(s, ""))` higher-order tree is retained
-    * below as [[rollingHashExpr]], the bit-equality reference the spec
-    * pins (the SimHashReplayWord retirement discipline). Corpus-wide
+    * original `aggregate(split(s, ""))` higher-order tree is retained in
+    * `src/test` as `GramReference.rollingHashExpr`, the bit-equality
+    * reference the spec pins (the SimHashReplayWord retirement
+    * discipline). Corpus-wide
     * consumers (DSIR features, hashed classifiers, CDC grams, CMS
     * counters, the HLL gram surrogate) evaluate this once per token
     * occurrence, where the tree form paid a per-char array allocation
     * plus interpreted lambda per element. */
   def rollingHash(s: Column): Column =
     graft.expr.KarpRabinHash.karpRabin(s)
-
-  /** The retired Catalyst higher-order-function form of [[rollingHash]]
-    * — kept (not dead code) as the independent reference implementation
-    * that TokenGramExprSpec pins the native expression against, so the
-    * replayable-arithmetic contract every oracle depends on stays
-    * machine-checked. */
-  private[graft] def rollingHashExpr(s: Column): Column =
-    aggregate(split(s, ""), lit(0L),
-      (h, c) => (h * lit(257L) + ascii(c)) % lit(1000000007L))
 
   /** [[fingerprintRows]] with the [[rollingHash]] gram hash family:
     * identical winnowing selection (same fused kernel, Karp–Rabin values

@@ -43,7 +43,7 @@ class BleuSpec extends SparkSpec {
   }
 
   test("bleu2: hashKeys relabeling is row-exact vs the string-gram path") {
-    // the driver ships hashKeys = true against an exact-string oracle —
+    // bleu2 keys grams by hash against an exact-string SparkEntry oracle —
     // sound iff hashing only relabels the clip groups. Pin row-exact
     // equality on the hand-computed battery plus boundary-sensitive and
     // repeated-gram pairs.
@@ -56,8 +56,8 @@ class BleuSpec extends SparkSpec {
       (6L, "ab c ab c ab", "ab c x ab"),
       (7L, "a bc", "ab c")
     ).toDF("pair_id", "candidate", "reference")
-    val exact = Bleu.bleu2(pairs).orderBy("pair_id").collect().map(_.toString).toSeq
-    val hashed = Bleu.bleu2(pairs, hashKeys = true).orderBy("pair_id")
+    val exact = GramReference.bleu2(pairs).orderBy("pair_id").collect().map(_.toString).toSeq
+    val hashed = Bleu.bleu2(pairs).orderBy("pair_id")
       .collect().map(_.toString).toSeq
     assert(exact == hashed, "hashKeys changed bleu2 output")
   }

@@ -38,10 +38,11 @@ class DedupSpec extends SparkSpec {
   test("window dedup: docs shorter than the window survive intact; hashKeys form agrees") {
     val d = docs((1L, "tiny doc"), (2L, "tiny doc"), (3L, "one two three four five"),
       (4L, "zz one two three four five tail"))
-    val s1 = Dedup.dropDuplicateWindows(d, windowTokens = 5).orderBy("doc_id").collect().toSeq
+    val s1 = GramReference.dropDuplicateWindows(d, windowTokens = 5)
+      .orderBy("doc_id").collect().toSeq
     // both 2-token docs survive whole (no 5-token window exists in them)
     assert(s1.count(r => r.getAs[String]("text") == "tiny doc") == 2)
-    val s2 = Dedup.dropDuplicateWindows(d, windowTokens = 5, hashKeys = true)
+    val s2 = Dedup.dropDuplicateWindows(d, windowTokens = 5)
       .orderBy("doc_id").collect().toSeq
     assert(s1 == s2, "hash-keyed form diverged from exact-string form")
   }

@@ -76,7 +76,7 @@ class RougeSpec extends SparkSpec {
   }
 
   test("rougeN: hashKeys relabeling is row-exact vs the string-gram path") {
-    // the driver ships hashKeys = true; its oracle replays STRING grams,
+    // rougeN keys grams by hash; the SparkEntry oracle replays STRING grams,
     // which is only sound because hashing relabels the count groups
     // without changing any count — pin that, including repeated grams,
     // boundary-sensitive tokens, and empty/whitespace sides
@@ -84,9 +84,9 @@ class RougeSpec extends SparkSpec {
       (7L, "ab c ab c ab", "ab c x ab"),
       (8L, "a bc", "ab c")).toDF("pair_id", "candidate", "reference"))
     for (n <- 1 to 3) {
-      val exact = Rouge.rougeN(p, n = n).orderBy("pair_id")
+      val exact = GramReference.rougeN(p, n = n).orderBy("pair_id")
         .collect().map(_.toString).toSeq
-      val hashed = Rouge.rougeN(p, n = n, hashKeys = true).orderBy("pair_id")
+      val hashed = Rouge.rougeN(p, n = n).orderBy("pair_id")
         .collect().map(_.toString).toSeq
       assert(exact == hashed, s"n=$n: hashKeys changed rougeN output")
     }

@@ -428,7 +428,7 @@ class TextExtSpec extends SparkSpec {
       mH.discount == mS.discount,
       s"KN scalars: (${mH.bigramTypes},${mH.vocab},${mH.discount}) vs " +
         s"(${mS.bigramTypes},${mS.vocab},${mS.discount})")
-    assert(rows(TextStats.kneserNeyLogLikelihood(docs, mH, hashKeys = true)) ==
+    assert(rows(TextStats.kneserNeyLogLikelihood(docs, mH)) ==
       rows(TextStats.kneserNeyLogLikelihood(docs, mS)),
       "KN per-doc scores differ between hash and string keys")
     val sS = TextStats.trainStupidBackoff(ref)
@@ -436,9 +436,21 @@ class TextExtSpec extends SparkSpec {
     assert(sH.total == sS.total, s"SB total ${sH.total} vs ${sS.total}")
     assert(sH.tri.count() == sS.tri.count() && sH.bi.count() == sS.bi.count() &&
       sH.uni.count() == sS.uni.count(), "SB count-frame cardinalities differ")
-    assert(rows(TextStats.stupidBackoffScore(docs, sH, hashKeys = true)) ==
+    assert(rows(TextStats.stupidBackoffScore(docs, sH)) ==
       rows(TextStats.stupidBackoffScore(docs, sS)),
       "SB per-doc scores differ between hash and string keys")
+    // the string-keyed count frames equal counts over the retired
+    // per-doc lead-window position stream
+    def counts(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.toString).toSet
+    val ref2 = GramReference.positions(ref, "text", 2)
+    assert(counts(mS.bi) == counts(ref2.filter(col("w2").isNotNull)
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))), "KN bigram table")
+    val ref3 = GramReference.positions(ref, "text", 3)
+    assert(counts(sS.uni) == counts(ref3.groupBy("w1").agg(count(lit(1)).as("c1"))),
+      "SB unigram table")
+    assert(counts(sS.tri) == counts(ref3.filter(col("w3").isNotNull)
+      .groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c123"))), "SB trigram table")
   }
 
   test("gramDuplicationStats: shared-gram fractions, distinctness, short docs") {
@@ -526,39 +538,24 @@ class TextExtSpec extends SparkSpec {
         ((r.getAs[Long]("total_ngrams"), r.getAs[Long]("distinct_ngrams")))).toMap
     val approx = TextStats.distinctNgramRatioApprox(docs, b = 12).collect()
       .map(r => (r.getAs[String]("group"), r.getAs[Int]("n")) ->
-        ((r.getAs[Long]("total_ngrams"), r.getAs[Double]("est_distinct"),
-          r.getAs[Double]("est_ratio")))).toMap
+        ((r.getAs[Long]("total_ngrams"), r.getAs[Long]("n_registers"),
+          r.getAs[Double]("est_distinct"), r.getAs[Double]("est_ratio")))).toMap
     assert(approx.keySet == exact.keySet)
-    approx.foreach { case (k, (total, est, ratio)) =>
+    approx.foreach { case (k, (total, nreg, est, ratio)) =>
       val (exTotal, exDistinct) = exact(k)
       assert(total == exTotal, s"$k: total $total != exact $exTotal")
+      assert(nreg >= 1L && nreg <= 4096L)
       val rel = math.abs(est - exDistinct) / exDistinct.toDouble
       assert(rel <= 0.05, s"$k: est $est vs exact $exDistinct (rel $rel)")
       assert(math.abs(ratio - est / total) < 1e-12)
     }
-    // the gramHash injection seam (what q_distinct_ngrams_approx_docs
-    // feeds the oracle through): the rollingHash draw must be a sound
-    // HLL input too — same exact totals, same error envelope
-    val inj = TextStats.distinctNgramRatioApprox(docs, b = 12,
-        gramHash = TextStats.rollingHash(_)).collect()
-      .map(r => (r.getAs[String]("group"), r.getAs[Int]("n")) ->
-        ((r.getAs[Long]("total_ngrams"), r.getAs[Long]("n_registers"),
-          r.getAs[Double]("est_distinct")))).toMap
-    assert(inj.keySet == exact.keySet)
-    inj.foreach { case (k, (total, nreg, est)) =>
-      val (exTotal, exDistinct) = exact(k)
-      assert(total == exTotal, s"$k: injected total $total != exact $exTotal")
-      assert(nreg >= 1L && nreg <= 4096L)
-      val rel = math.abs(est - exDistinct) / exDistinct.toDouble
-      assert(rel <= 0.05, s"$k: injected est $est vs exact $exDistinct (rel $rel)")
-    }
   }
 
-  test("distinctNgramRatioApproxKR: fused path ≡ window path, registers and all") {
-    // the q_distinct_ngrams_approx_docs rewrite: ONE KarpRabinNGramHashes
-    // walk must reproduce the posexplode → lead-window → concat_ws →
-    // rollingHash gram stream exactly — same (n, gh) multiset ⇒ same
-    // buckets, ranks, register maxima, totals and estimator branches
+  test("distinctNgramRatioApprox: kernel path ≡ window reference, registers and all") {
+    // ONE KarpRabinNGramHashes walk must reproduce the posexplode →
+    // lead-window → concat_ws → rollingHash gram stream exactly — same
+    // (n, gh) multiset ⇒ same buckets, ranks, register maxima, totals
+    // and estimator branches
     val fixture = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "lang", "text")
     val extra = Seq(
@@ -575,9 +572,8 @@ class TextExtSpec extends SparkSpec {
       .map(r => (r.getAs[String]("group"), r.getAs[Int]("n")) ->
         ((r.getAs[Long]("total_ngrams"), r.getAs[Long]("n_registers"),
           r.getAs[Double]("est_distinct"), r.getAs[Double]("est_ratio")))).toMap
-    val win = snap(TextStats.distinctNgramRatioApprox(docs, b = 12,
-      gramHash = TextStats.rollingHash(_)))
-    val kr = snap(TextStats.distinctNgramRatioApproxKR(docs, b = 12))
+    val win = snap(GramReference.distinctNgramRatioApprox(docs, b = 12))
+    val kr = snap(TextStats.distinctNgramRatioApprox(docs, b = 12))
     assert(kr.keySet == win.keySet)
     kr.foreach { case (k, (total, nreg, est, ratio)) =>
       val (wTotal, wNreg, wEst, wRatio) = win(k)
@@ -589,11 +585,10 @@ class TextExtSpec extends SparkSpec {
     }
   }
 
-  test("distinctNgramRatioFused: zero-window path row-exact vs the window path") {
-    // the q_distinct_ngrams_docs rewrite: ONE TokenNGrams walk must
-    // reproduce the posexplode → lead-window → concat_ws gram STRINGS
-    // exactly — same (group, n, gram) multiset ⇒ same count longs ⇒
-    // bit-identical ratios (long/long division)
+  test("distinctNgramRatio: kernel path row-exact vs the window reference") {
+    // ONE TokenNGrams walk must reproduce the posexplode → lead-window →
+    // concat_ws gram STRINGS exactly — same (group, n, gram) multiset ⇒
+    // same count longs ⇒ bit-identical ratios (long/long division)
     val fixture = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "lang", "text")
     val extra = Seq(
@@ -606,8 +601,8 @@ class TextExtSpec extends SparkSpec {
       (910007L, "yy", "two tokens")
     ).toDF("doc_id", "lang", "text")
     val docs = fixture.union(extra)
-    val win = TextStats.distinctNgramRatio(docs).collect().map(_.toString).toSeq
-    val fused = TextStats.distinctNgramRatioFused(docs).collect().map(_.toString).toSeq
+    val win = GramReference.distinctNgramRatio(docs).collect().map(_.toString).toSeq
+    val fused = TextStats.distinctNgramRatio(docs).collect().map(_.toString).toSeq
     assert(fused == win, "fused gram path changed distinctNgramRatio output")
   }
 
@@ -615,7 +610,6 @@ class TextExtSpec extends SparkSpec {
     // the q_bigram_quality/q_collocations rewrite: the zero-window pair
     // stream must reproduce the per-doc-id → posexplode → sort → lead
     // window shape exactly, null successor marker included
-    import org.apache.spark.sql.expressions.Window
     val fixture = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "lang", "text")
     val extra = Seq(
@@ -628,13 +622,9 @@ class TextExtSpec extends SparkSpec {
       (920007L, "yy", "two tokens")
     ).toDF("doc_id", "lang", "text")
     val docs = fixture.union(extra)
-    // the retired window reference, reconstructed verbatim
-    val tok = docs.select(monotonically_increasing_id().as("__d"),
-        graft.ext.Dedup.tokens(col("text")).as("toks"))
-      .select(col("__d"), posexplode(col("toks")).as(Seq("pos", "w")))
-    val wnd = Window.partitionBy("__d").orderBy("pos")
-    val refPairs = tok.withColumn("w2", lead("w", 1).over(wnd))
-      .groupBy(col("w").as("w1"), col("w2")).agg(count(lit(1)).as("c12"))
+    // the retired window reference
+    val refPairs = GramReference.positions(docs, "text", 2)
+      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val newPairs = docs
       .select(explode(graft.expr.TokenPairs.tokenPairs(
@@ -662,9 +652,9 @@ class TextExtSpec extends SparkSpec {
       (100003L, "solo"), (100004L, "   "), (100005L, "ab c ab c ab"))
       .toDF("doc_id", "text")
     val docs = fixture.union(extra)
-    val a = TextStats.repetitionStats(docs).orderBy("doc_id")
+    val a = GramReference.repetitionStats(docs).orderBy("doc_id")
       .collect().map(_.toString).toSeq
-    val b = TextStats.repetitionStats(docs, hashKeys = true).orderBy("doc_id")
+    val b = TextStats.repetitionStats(docs).orderBy("doc_id")
       .collect().map(_.toString).toSeq
     assert(a == b, "hashKeys changed repetitionStats output")
   }

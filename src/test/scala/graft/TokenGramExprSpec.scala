@@ -1,10 +1,41 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 import graft.expr.TokenGramHashes.tokenGramHashes
 
 class TokenGramExprSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Runs `query` over (id, toks) `rows` and hands its rows to `check`,
+    * once with default codegen and once fully interpreted
+    * (`wholeStage=false` plus `factoryMode=NO_CODEGEN`; without the
+    * latter, projections are still code-generated). The input is an RDD
+    * (a LogicalRDD): over a `Seq.toDF` LocalRelation the optimizer
+    * evaluates the projection itself with an interpreted projection, and
+    * no generated code would run. */
+  private def onBothPaths(rows: Seq[(Long, Seq[String])])(
+      query: DataFrame => DataFrame)(check: Array[Row] => Unit): Unit = {
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("toks", ArrayType(StringType))))
+    val input = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (id, t) => Row(id, t) }, 2), schema)
+    def run(codegen: Boolean): Unit = {
+      val out = query(input)
+      val plan = out.queryExecution.executedPlan
+      assert(plan.exists(_.isInstanceOf[WholeStageCodegenExec]) == codegen, plan)
+      check(out.collect())
+    }
+    run(codegen = true)
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try run(codegen = false)
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 
   /** Reference implementation of the kernel, independent of Catalyst. */
   private def ref(toks: Seq[String], k: Int): Seq[Long] = {
@@ -30,21 +61,13 @@ class TokenGramExprSpec extends SparkSpec {
       val n = rng.nextInt(12)
       (i.toLong, (0 until n).map(_ => rng.alphanumeric.take(1 + rng.nextInt(6)).mkString))
     }
-    val df = rows.toDF("id", "toks")
-    for (k <- Seq(1, 3, 5)) {
-      val got = df.select($"id", tokenGramHashes($"toks", k).as("h"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      rows.foreach { case (id, toks) =>
-        assert(got(id) == ref(toks, k), s"k=$k id=$id toks=$toks")
+    for (k <- Seq(1, 3, 5))
+      onBothPaths(rows)(_.select($"id", tokenGramHashes($"toks", k).as("h"))) { out =>
+        val got = out.map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+        rows.foreach { case (id, toks) =>
+          assert(got(id) == ref(toks, k), s"k=$k id=$id toks=$toks")
+        }
       }
-      // interpreted path (codegen off) agrees
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      try {
-        val gi = df.select($"id", tokenGramHashes($"toks", k).as("h"))
-          .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-        assert(gi == got, s"interpreted != codegen at k=$k")
-      } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    }
   }
 
   test("unicode tokens hash by UTF-8 bytes; boundaries stay distinct") {
@@ -85,7 +108,7 @@ class TokenGramExprSpec extends SparkSpec {
     val df = toks.toDF("tok")
       // rollingHashExpr: the RETIRED Catalyst fold — the reference stays
       // independent of the native KarpRabinHash both fused paths share
-      .withColumn("kr", graft.ext.TextStats.rollingHashExpr(col("tok")))
+      .withColumn("kr", GramReference.rollingHashExpr(col("tok")))
       .withColumn("old", assembled)
       .withColumn("neu", graft.expr.SimHashReplayWord.simhashReplayWord(col("tok")))
     val rows = df.select("tok", "old", "neu").collect()
@@ -107,7 +130,7 @@ class TokenGramExprSpec extends SparkSpec {
       "a b", "two gram", "three gram here", "trailing ") ++
       (0 until 50).map(i => s"tok$i word${i * 7}")
     val rows = toks.toDF("tok")
-      .withColumn("old", graft.ext.TextStats.rollingHashExpr(col("tok")))
+      .withColumn("old", GramReference.rollingHashExpr(col("tok")))
       .withColumn("neu", graft.ext.TextStats.rollingHash(col("tok")))
       .select("tok", "old", "neu").collect()
     rows.foreach { r =>
@@ -174,27 +197,18 @@ class TokenGramExprSpec extends SparkSpec {
       val n = rng.nextInt(9)
       (i.toLong, (0 until n).map(_ => pool(rng.nextInt(pool.length))))
     }
-    val df = rows.toDF("id", "toks")
-    val got = df.select($"id", KarpRabinNGramHashes.krNGramHashes($"toks", 3).as("h"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    rows.foreach { case (id, toks) =>
-      assert(got(id) == krRef(toks, 3), s"id=$id toks=$toks")
-    }
-    // interpreted path agrees with codegen
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
-      val gi = df.select($"id", KarpRabinNGramHashes.krNGramHashes($"toks", 3).as("h"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      assert(gi == got, "interpreted != codegen")
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
     // null array propagates null; null ELEMENTS are treated as empty
-    val edge = Seq((1L, null: Seq[String]), (2L, Seq[String](null, "x", null, "y")))
-      .toDF("id", "toks")
-    val eo = edge.select($"id", KarpRabinNGramHashes.krNGramHashes($"toks", 3).as("h"))
-      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getSeq[Long](1)))
-      .toMap
-    assert(eo(1L) == null)
-    assert(eo(2L) == krRef(Seq("x", "y"), 3))
+    val edge = Seq((100L, null: Seq[String]), (101L, Seq[String](null, "x", null, "y")))
+    onBothPaths(rows ++ edge)(
+        _.select($"id", KarpRabinNGramHashes.krNGramHashes($"toks", 3).as("h"))) { out =>
+      val got = out
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getSeq[Long](1))).toMap
+      rows.foreach { case (id, toks) =>
+        assert(got(id) == krRef(toks, 3), s"id=$id toks=$toks")
+      }
+      assert(got(100L) == null)
+      assert(got(101L) == krRef(Seq("x", "y"), 3))
+    }
   }
 
   test("TokenNGrams equals the space-joined gram strings of surviving tokens") {
@@ -214,30 +228,25 @@ class TokenGramExprSpec extends SparkSpec {
       val n = rng.nextInt(9)
       (i.toLong, (0 until n).map(_ => pool(rng.nextInt(pool.length))))
     }
-    val df = rows.toDF("id", "toks")
-    def run(): Map[Long, Seq[(Int, String)]] = df
-      .select($"id", explode(TokenNGrams.tokenNGrams($"toks", 3)).as("ng"))
-      .select($"id", $"ng.n", $"ng.gram").collect()
-      .groupBy(_.getLong(0))
-      .map { case (id, rs) => id -> rs.toSeq.map(r => (r.getInt(1), r.getString(2))) }
-    val got = run()
-    rows.foreach { case (id, toks) =>
-      val exp = ngRef(toks, 3)
-      // explode drops rows for empty arrays — absent id means zero grams
-      assert(got.getOrElse(id, Seq.empty) == exp, s"id=$id toks=$toks")
+    onBothPaths(rows)(_
+        .select($"id", explode(TokenNGrams.tokenNGrams($"toks", 3)).as("ng"))
+        .select($"id", $"ng.n", $"ng.gram")) { out =>
+      val got = out.groupBy(_.getLong(0))
+        .map { case (id, rs) => id -> rs.toSeq.map(r => (r.getInt(1), r.getString(2))) }
+      rows.foreach { case (id, toks) =>
+        val exp = ngRef(toks, 3)
+        // explode drops rows for empty arrays — absent id means zero grams
+        assert(got.getOrElse(id, Seq.empty) == exp, s"id=$id toks=$toks")
+      }
     }
-    // interpreted path agrees with codegen
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try assert(run() == got, "interpreted != codegen")
-    finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
     // null array propagates null (pre-explode); null ELEMENTS are empty
     val edge = Seq((1L, null: Seq[String]), (2L, Seq[String](null, "x", null, "y")))
-      .toDF("id", "toks")
-      .select($"id", TokenNGrams.tokenNGrams($"toks", 3).as("ngs")).collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getSeq[org.apache.spark.sql.Row](1)))
-      .toMap
-    assert(edge(1L) == null)
-    assert(edge(2L).map(r => (r.getInt(0), r.getString(1))) == ngRef(Seq("x", "y"), 3))
+    onBothPaths(edge)(_.select($"id", TokenNGrams.tokenNGrams($"toks", 3).as("ngs"))) { out =>
+      val got = out
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getSeq[Row](1))).toMap
+      assert(got(1L) == null)
+      assert(got(2L).map(r => (r.getInt(0), r.getString(1))) == ngRef(Seq("x", "y"), 3))
+    }
   }
 
   test("TokenPairs equals the lead-window pair stream, null marker included") {
@@ -255,27 +264,23 @@ class TokenGramExprSpec extends SparkSpec {
       val n = rng.nextInt(7)
       (i.toLong, (0 until n).map(_ => pool(rng.nextInt(pool.length))))
     }
-    val df = rows.toDF("id", "toks")
-    def run(): Map[Long, Seq[(String, String)]] = df
-      .select($"id", explode(TokenPairs.tokenPairs($"toks")).as("p"))
-      .select($"id", $"p.w1", $"p.w2").collect()
-      .groupBy(_.getLong(0))
-      .map { case (id, rs) => id -> rs.toSeq.map(r => (r.getString(1), r.getString(2))) }
-    val got = run()
-    rows.foreach { case (id, toks) =>
-      assert(got.getOrElse(id, Seq.empty) == ref(toks), s"id=$id toks=$toks")
+    onBothPaths(rows)(_
+        .select($"id", explode(TokenPairs.tokenPairs($"toks")).as("p"))
+        .select($"id", $"p.w1", $"p.w2")) { out =>
+      val got = out.groupBy(_.getLong(0))
+        .map { case (id, rs) => id -> rs.toSeq.map(r => (r.getString(1), r.getString(2))) }
+      rows.foreach { case (id, toks) =>
+        assert(got.getOrElse(id, Seq.empty) == ref(toks), s"id=$id toks=$toks")
+      }
     }
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try assert(run() == got, "interpreted != codegen")
-    finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
     // null array propagates null; a null ELEMENT stays a null field
-    val edge2 = Seq((1L, null: Seq[String]), (2L, Seq[String]("x", null, "y")))
-      .toDF("id", "toks")
-      .select($"id", TokenPairs.tokenPairs($"toks").as("ps")).collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getSeq[org.apache.spark.sql.Row](1)))
-      .toMap
-    assert(edge2(1L) == null)
-    assert(edge2(2L).map(r => (r.getString(0), r.getString(1))) ==
-      Seq(("x", null), (null, "y"), ("y", null)))
+    val edge = Seq((1L, null: Seq[String]), (2L, Seq[String]("x", null, "y")))
+    onBothPaths(edge)(_.select($"id", TokenPairs.tokenPairs($"toks").as("ps"))) { out =>
+      val got = out
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getSeq[Row](1))).toMap
+      assert(got(1L) == null)
+      assert(got(2L).map(r => (r.getString(0), r.getString(1))) ==
+        Seq(("x", null), (null, "y"), ("y", null)))
+    }
   }
 }
