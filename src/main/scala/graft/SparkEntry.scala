@@ -1066,15 +1066,6 @@ object SparkEntry {
       val c = col(s"bin_${b}_avg")
       when(isnan(c), lit(null)).otherwise(r6(c)).as(s"bin_${b}_avg")
     }
-    // MEASURED AND REJECTED (r16): pinning the kernel output before the
-    // orderBy. The range exchange's sampling pass does re-execute the
-    // shuffle-read + sort + kernel chain (r16 profile: the 15-task kernel
-    // stage TWICE, 273 + 380 ms; the input exchange read twice,
-    // 66.7 vs 48.8 MB shuffle read) — but materializing the corpus-sized
-    // output costs MORE than the duplicated narrow pass saves: sf0.1 a
-    // wash, sf1 a 36% REGRESSION (3.10 → 4.24 s paired — ~900 MB
-    // checkpointed to save one 18 MB-exchange re-read + kernel recompute).
-    // Guide §1.3 napkin, wrong direction; kept un-pinned on purpose.
     wb.select(Seq(col("ID1"), col("ID2"), col("timestamp"),
         col("tie"), col("quantity1"), col("quantity2")) ++ binCols: _*)
       .orderBy("ID1", "ID2", "timestamp", "tie")

@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 
 /** Column ⇄ Expression bridge. Spark 4 made these conversions
   * `private[sql]`; placing this one-file accessor in an
@@ -13,6 +14,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over a logical plan — how an engine-defined logical node
+    * (e.g. `graft.ops.WeightedBinsNode`) enters the DataFrame API. */
+  def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Names of functions an extensions object would inject (test hook). */
   def injectedFunctionNames(e: org.apache.spark.sql.SparkSessionExtensions): Seq[String] = {

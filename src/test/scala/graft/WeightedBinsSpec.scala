@@ -1,7 +1,11 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import graft.ops.{WbRow, WeightedBins}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.types._
+import graft.ops.{WeightedBins, WeightedBinsStrategy}
 
 /** Parity with the reference implementation executed as a black-box oracle
   * on its own fixtures (scripts/make_wb_golden.py): full-output compare on
@@ -94,12 +98,14 @@ class WeightedBinsSpec extends SparkSpec {
     val (binSize, maxBins) = (100.0, 10)
     val q1 = Array.tabulate(n)(i => ((i.toLong * 2654435761L) % 100 + 1).toDouble)
     val kernel = new WeightedBins.BoundedKernel(binSize, maxBins)
-    val ts = java.lang.Long.valueOf(0L)
     var emitted = 0L
+    def drain(): Unit = while (kernel.ready) { kernel.emit(); emitted += 1 }
     q1.indices.foreach { i =>
-      emitted += kernel.push(WbRow("g", "x", ts, q1(i), (i % 5000) / 100.0, i.toLong)).size
+      kernel.push(q1(i), (i % 5000) / 100.0, 0L, i.toLong, 0)
+      drain()
     }
-    emitted += kernel.finish().size
+    kernel.finish()
+    drain()
     assert(emitted == n - 1L, s"emitted $emitted rows for a group of $n")
     assert(q1.min == 1.0 && q1.max == 100.0)
     val bound = binSize * maxBins / q1.min + 2
@@ -108,12 +114,12 @@ class WeightedBinsSpec extends SparkSpec {
   }
 
   test("timestamps round-trip the long-micros kernel exactly (sub-second, pre-epoch, null)") {
-    // r16 narrowing spec: the kernel carries ts as unix micros and emits
-    // timestamp_micros on the way out. Inputs with microsecond precision,
-    // a pre-epoch instant, two instants inside the SAME second (the sort
-    // must order by micros exactly as it ordered by Timestamp), and a
-    // null (boxed Long — must flow through like the old null Timestamp,
-    // sorted first within its group).
+    // The kernel carries ts as the internal micros of TimestampType and
+    // writes them straight back into its output row. Inputs with
+    // microsecond precision, a pre-epoch instant, two instants inside the
+    // SAME second (the sort must order by micros exactly as it ordered by
+    // Timestamp), and a null (must flow through, sorted first within its
+    // group).
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val micros = Seq[java.lang.Long](-1234567L, 1L, 999999L, 1000001L, 86400000000L, null)
@@ -155,5 +161,155 @@ class WeightedBinsSpec extends SparkSpec {
         (col(s"bin_${b}_avg") < lo || col(s"bin_${b}_avg") > hi)).count()
       assert(bad == 0, s"bin $b out of [$lo,$hi]")
     }
+  }
+
+  // ---- input policy and plan shape ----------------------------------------
+
+  private val evSchema = StructType(Seq(
+    StructField("ID1", StringType), StructField("ID2", StringType),
+    StructField("timestamp", TimestampType),
+    StructField("vol", DoubleType), StructField("px", DoubleType)))
+
+  /** One event: ids, ts in epoch seconds (null = null), q1 `vol`, q2 `px`. */
+  private def ev(id1: String, id2: String, sec: java.lang.Long, q1: java.lang.Double,
+      q2: java.lang.Double): Row =
+    Row(id1, id2, if (sec == null) null else new java.sql.Timestamp(sec * 1000L), q1, q2)
+
+  private def frame(s: SparkSession, rows: Seq[Row]): DataFrame =
+    s.createDataFrame(s.sparkContext.parallelize(rows, 2), evSchema)
+
+  private def bins(s: SparkSession, rows: Seq[Row], binSize: Double, maxBins: Int): DataFrame =
+    WeightedBins.weightedBins(frame(s, rows), q1Col = "vol", q2Col = "px",
+      binSize = binSize, maxBins = maxBins)
+
+  private def messages(t: Throwable): String =
+    if (t == null) "" else s"${t.getMessage} ${messages(t.getCause)}"
+
+  private def sameDouble(a: Double, b: Double): Boolean = (a.isNaN && b.isNaN) || a == b
+
+  test("input policy: each out-of-contract input gets its declared outcome") {
+    val nan = java.lang.Double.NaN
+    // (policy, rows, binSize, maxBins, Left(message parts) = throws | Right(check on sorted output))
+    val table: Seq[(String, Seq[Row], Double, Int, Either[Seq[String], Seq[Row] => Unit])] = Seq(
+      ("null quantity1 throws, naming the operator and the column",
+        Seq(ev("a", "x", 1L, 10.0, 1.0), ev("a", "x", 2L, null, 2.0)), 10.0, 1,
+        Left(Seq("weightedBins", "non-null quantity1", "`vol`"))),
+      ("null quantity2 throws, naming the operator and the column",
+        Seq(ev("a", "x", 1L, 10.0, 1.0), ev("a", "x", 2L, 10.0, null)), 10.0, 1,
+        Left(Seq("weightedBins", "non-null quantity2", "`px`"))),
+      ("NaN quantity1 throws",
+        Seq(ev("a", "x", 1L, 10.0, 1.0), ev("a", "x", 2L, nan, 2.0)), 10.0, 1,
+        Left(Seq("weightedBins", "finite quantity1 >= 0", "`vol`", "NaN"))),
+      ("+Inf quantity1 throws",
+        Seq(ev("a", "x", 1L, Double.PositiveInfinity, 1.0), ev("a", "x", 2L, 10.0, 2.0)), 10.0, 1,
+        Left(Seq("weightedBins", "finite quantity1 >= 0", "`vol`", "Infinity"))),
+      ("-Inf quantity1 throws",
+        Seq(ev("a", "x", 1L, 10.0, 1.0), ev("a", "x", 2L, Double.NegativeInfinity, 2.0)), 10.0, 1,
+        Left(Seq("weightedBins", "finite quantity1 >= 0", "`vol`", "-Infinity"))),
+      ("NaN quantity2 is kept and is NaN only in the bins that consume it",
+        Seq(1.0, 2.0, nan, 4.0, 5.0).zipWithIndex.map { case (q2, i) =>
+          ev("a", "x", i.toLong, 10.0, q2) }, 10.0, 2,
+        Right { out =>
+          val want = Seq((2.0, nan), (nan, 4.0), (4.0, 5.0), (5.0, nan))
+          assert(out.size == want.size, s"got ${out.size} rows")
+          out.zip(want).foreach { case (r, (b1, b2)) =>
+            assert(sameDouble(r.getAs[Double]("bin_1_avg"), b1) &&
+              sameDouble(r.getAs[Double]("bin_2_avg"), b2), s"row $r, want ($b1, $b2)")
+          }
+          assert(out(2).getAs[Double]("px").isNaN, "the NaN row keeps its own quantity2")
+        }),
+      ("null ID1 / ID2 are key values: each null-bearing key is one group",
+        Seq(ev(null, "x", 1L, 10.0, 1.0), ev(null, "x", 2L, 10.0, 2.0),
+          ev("a", null, 1L, 10.0, 3.0), ev("a", null, 2L, 10.0, 4.0),
+          ev("a", "x", 1L, 10.0, 5.0), ev("a", "x", 2L, 10.0, 6.0)), 10.0, 1,
+        Right { out =>
+          assert(out.map(r => (r.getAs[String]("ID1"), r.getAs[String]("ID2"),
+            r.getAs[Double]("bin_1_avg"))) == Seq((null, "x", 2.0), ("a", null, 4.0), ("a", "x", 6.0)))
+        }),
+      ("null timestamp sorts first within its group",
+        Seq(ev("a", "x", 2L, 10.0, 9.0), ev("a", "x", null, 10.0, 7.0), ev("a", "x", 1L, 10.0, 8.0)),
+        10.0, 1,
+        Right { out =>
+          assert(out.map(r => (Option(r.getAs[java.sql.Timestamp]("timestamp")).map(_.getTime),
+            r.getAs[Double]("bin_1_avg"))) == Seq((None, 8.0), (Some(1000L), 9.0)))
+        }),
+      ("empty input gives empty output", Seq(), 10.0, 1,
+        Right(out => assert(out.isEmpty))),
+      ("a single-row group emits no rows",
+        Seq(ev("a", "x", 1L, 10.0, 1.0), ev("b", "x", 1L, 10.0, 2.0), ev("b", "x", 2L, 10.0, 3.0)),
+        10.0, 1,
+        Right(out => assert(out.map(_.getAs[String]("ID1")) == Seq("b")))))
+
+    table.foreach { case (policy, rows, binSize, maxBins, expect) =>
+      val run = () => bins(spark, rows, binSize, maxBins).orderBy("ID1", "ID2", "timestamp").collect().toSeq
+      expect match {
+        case Left(parts) =>
+          val msg = messages(intercept[Exception](run()))
+          parts.foreach(p => assert(msg.contains(p), s"$policy: '$p' not in: $msg"))
+        case Right(check) =>
+          withClue(s"$policy: ")(check(run()))
+      }
+    }
+  }
+
+  /** Every node of an executed plan, through AQE wrappers and query stages. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case other => other.children.flatMap(nodes)
+  })
+
+  private def exchanges(p: SparkPlan): Int = nodes(p).count(_.isInstanceOf[ShuffleExchangeExec])
+  private def globalSorts(p: SparkPlan): Int = nodes(p).count {
+    case s: SortExec => s.global
+    case _ => false
+  }
+
+  /** Four groups (two with a null id) of 30 events, one null timestamp each. */
+  private val orderRows: Seq[Row] = for {
+    (id1, id2) <- Seq((null, "x"), ("a", null), ("a", "x"), ("b", "y"))
+    i <- 0 until 30
+  } yield ev(id1, id2, if (i == 7) null else java.lang.Long.valueOf((i * 37L) % 101),
+    ((i * 13) % 9).toDouble, i.toDouble)
+
+  test("plan shape: orderBy(ID1, ID2, timestamp) adds no exchange and no sort; rows in order") {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try {
+      val sorted = bins(spark, orderRows, 10.0, 3).orderBy("ID1", "ID2", "timestamp")
+      val got = sorted.collect().toSeq
+      val plan = sorted.queryExecution.executedPlan
+      assert(exchanges(plan) == 1, s"want the one range exchange:\n$plan")
+      assert(globalSorts(plan) == 0, s"want no global sort:\n$plan")
+      // the same rows sorted in Scala: ids and timestamp ascending, nulls first
+      def key(r: Row): (Option[String], Option[String], Option[Long]) =
+        (Option(r.getString(0)), Option(r.getString(1)),
+          Option(r.getAs[java.sql.Timestamp](2)).map(_.getTime))
+      val want = bins(spark, orderRows, 10.0, 3).collect().toSeq.sortBy(key)
+      assert(got.size == orderRows.size - 4)
+      assert(got == want)
+
+      // negative control: an order the node does not declare keeps its exchange and sort
+      val byQ1 = bins(spark, orderRows, 10.0, 3).orderBy("vol")
+      byQ1.collect()
+      assert(exchanges(byQ1.queryExecution.executedPlan) == 2)
+      assert(globalSorts(byQ1.queryExecution.executedPlan) == 1)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  test("strategy: attached per session, idempotently; without it planning fails") {
+    val fresh = spark.newSession()
+    assert(!fresh.experimental.extraStrategies.contains(WeightedBinsStrategy))
+    val there = bins(fresh, orderRows, 10.0, 3).orderBy("ID1", "ID2", "timestamp").collect().toSeq
+    val here = bins(spark, orderRows, 10.0, 3).orderBy("ID1", "ID2", "timestamp").collect().toSeq
+    assert(there == here)
+    bins(fresh, orderRows, 10.0, 3)
+    assert(fresh.experimental.extraStrategies.count(_ == WeightedBinsStrategy) == 1)
+
+    val bare = spark.newSession()
+    val df = bins(bare, orderRows, 10.0, 3)
+    bare.experimental.extraStrategies = Nil
+    val msg = messages(intercept[Throwable](df.collect()))
+    assert(msg.contains("No plan for"), msg)
   }
 }
