@@ -119,14 +119,12 @@ class TimeSeriesStudy(
       "mutual_info" -> mi.orderBy("pair", "group_key"))
   }
 
-  /** 8 — Markov regime detection for one feature (K9). nRegimes = 2 keeps
-    * the reference's exact golden-run column set; any k ≥ 2 emits the
-    * k-regime columns dynamically (regime_j_prob, pjj, mu_j). */
-  def regimeDetection(feature: String, nRegimes: Int = 2): DataFrame = {
-    val m = melted.filter(col("feature") === feature)
-    if (nRegimes == 2) Regimes.regimeDetection(m)
-    else Regimes.regimeDetectionK(m, nRegimes)
-  }
+  /** 8 — Markov regime detection for one feature (K9): a k-regime fit per
+    * group, k = `nRegimes` ≥ 2, each series in date order. The columns
+    * (regime_j_prob, pjj, mu_j) follow k; the default k = 2 gives the
+    * reference's golden-run column set. */
+  def regimeDetection(feature: String, nRegimes: Int = 2): DataFrame =
+    Regimes.regimeDetection(melted.filter(col("feature") === feature), nRegimes)
 
   /** 9 — volatility analysis for one feature (K10);
     * modelType ∈ {GARCH, GJR-GARCH, EGARCH} like the reference. */

@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.sql.Timestamp
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -46,6 +47,45 @@ object Panel {
       col(dateCol).cast(TimestampType).as("date"),
       groupKey(groupCols).as("group_key"),
       expr(stackExpr))
+  }
+
+  /** Runs `kernel` once per (group_key, feature) series of a melted
+    * panel: drops null/NaN values, shuffles once on the series key, orders
+    * each series by full-precision `date` (a null date first), then by
+    * value, and skips series with fewer than `minLen` points. The kernel
+    * gets (group_key, feature, values in series order) — a null
+    * group_key is a series of its own — and its rows are encoded with
+    * `enc`. The per-series operators of UnitRoots, Regimes, Garch and
+    * Outliers run through here, so their shuffle geometry and series
+    * order have one owner. */
+  def perSeries[R](melted: DataFrame, minLen: Int, enc: Encoder[R])(
+      kernel: (String, String, Array[Double]) => Iterator[R]): DataFrame = {
+    val ss = melted.sparkSession
+    import ss.implicits._
+    melted
+      .filter(finite(col("value")))
+      .select("group_key", "feature", "date", "value")
+      .as[(String, String, Timestamp, Double)]
+      .groupByKey(r => (r._1, r._2))
+      .flatMapGroups { (key: (String, String), it: Iterator[(String, String, Timestamp, Double)]) =>
+        val y = it.toArray.sorted(SeriesOrder).map(_._4)
+        if (y.length < minLen) Iterator.empty else kernel(key._1, key._2, y)
+      }(enc)
+      .toDF()
+  }
+
+  /** (date, value) order of a series: null date first, then time to the
+    * nanosecond (`Timestamp.compareTo`, unlike `getTime`, keeps the
+    * sub-millisecond digits), then value. The `sortWithinPartitions`
+    * order of Periodogram and WeightedBins. */
+  private object SeriesOrder extends Ordering[(String, String, Timestamp, Double)] {
+    def compare(a: (String, String, Timestamp, Double), b: (String, String, Timestamp, Double)): Int = {
+      val t =
+        if (a._3 == null) { if (b._3 == null) 0 else -1 }
+        else if (b._3 == null) 1
+        else a._3.compareTo(b._3)
+      if (t != 0) t else java.lang.Double.compare(a._4, b._4)
+    }
   }
 
   /** Construct-time schema validation mirroring the reference

@@ -1,5 +1,6 @@
 package graft.ops
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import graft.core.Panel
@@ -148,10 +149,10 @@ object CrossFeature {
         else {
           val (cs, cp) =
             try { val (s, p) = coint(a, b); (Some(s), Some(p)) }
-            catch { case _: Throwable => (None, None) }
+            catch { case NonFatal(_) => (None, None) }
           val gp =
             try Some(grangerMinP(a, b, grangerLags))
-            catch { case _: Throwable => None }
+            catch { case NonFatal(_) => None }
           PairRow(g, pairName, cs, cp, gp)
         }
       }

@@ -2,8 +2,8 @@ package graft.ops
 
 import breeze.linalg.DenseVector
 import breeze.optimize.{DiffFunction, LBFGS}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, Encoders}
 import graft.core.Panel
 
 /** K10 — volatility analysis (time_series_study.py:780-879): the three
@@ -149,7 +149,7 @@ object Garch {
       th: DenseVector[Double]): (Double, DenseVector[Double]) = {
     val (mu, omega, alpha, beta, gamma) =
       try untransform(model, th)
-      catch { case _: Throwable => return penalty(th) }
+      catch { case NonFatal(_) => return penalty(th) }
     val n = y.length
     val e = new Array[Double](n)
     val e2 = new Array[Double](n)
@@ -271,7 +271,7 @@ object Garch {
   private def nll(model: String, y: Array[Double])(th: DenseVector[Double]): Double = {
     val (mu, omega, alpha, beta, gamma) =
       try untransform(model, th)
-      catch { case _: Throwable => return 1e12 }
+      catch { case NonFatal(_) => return 1e12 }
     nllAt(model, y, mu, omega, alpha, beta, gamma)
   }
 
@@ -317,9 +317,6 @@ object Garch {
     GarchFit(model, mu, omega, alpha, beta, gamma, -nll(model, y)(opt), vol)
   }
 
-  /** Backwards-compatible GARCH(1,1) entry. */
-  def fitGarch11(y: Array[Double]): GarchFit = fit(y, "GARCH")
-
   case class GradTraceRow(
       group_key: String, feature: String, round: Int, nll: Double,
       g_mu: Double, g_lnomega: Double, g_logita: Double, g_logitb: Double)
@@ -341,50 +338,36 @@ object Garch {
   def gradTrace(melted: DataFrame, rounds: Int = 2, eta: Double = 0.05,
       minLen: Int = 50): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val ss = melted.sparkSession
-    import ss.implicits._
-    melted
-      .filter(Panel.finite(col("value")))
-      .select("group_key", "feature", "date", "value")
-      .as[(String, String, java.sql.Timestamp, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (String, String), it: Iterator[(String, String, java.sql.Timestamp, Double)]) =>
-        val (g, f) = key
-        val y = it.toArray.sortBy(r => (r._3.getTime, r._4)).map(_._4)
-        val n = y.length
-        if (n < minLen) Iterator.empty
-        else {
-          def q6(v: Double): Double = math.floor(v * 1e6 + 0.5) / 1e6
-          val mean = y.sum / n
-          val varp = y.map(v => (v - mean) * (v - mean)).sum / n
-          // Degenerate constant series (varp = 0): the EWMA backcast seeds
-          // sigma2 = 0 and nllGrad lands in its 1e10 penalty bowl while a
-          // SQL mirror computes ln(0) — skip, the emTrace varp>0 convention.
-          if (varp <= 0.0) Iterator.empty
-          else {
-          val th = DenseVector(
-            q6(mean),
-            q6(math.log(math.max(varp * (1.0 - 0.05 - 0.85), 1e-12))),
-            q6(math.log(0.05 / (1.0 - 0.05 - 0.85))),
-            q6(math.log(0.85 / (1.0 - 0.05 - 0.85))))
-          val out = Array.newBuilder[GradTraceRow]
-          var r = 1
-          while (r <= rounds) {
-            val (nllV, gth) = nllGrad("GARCH", y)(th)
-            out += GradTraceRow(g, f, r, q6(nllV),
-              q6(gth(0)), q6(gth(1)), q6(gth(2)), q6(gth(3)))
-            val m = math.max(math.max(math.max(math.max(1.0,
-              math.abs(gth(0))), math.abs(gth(1))), math.abs(gth(2))), math.abs(gth(3)))
-            var j = 0
-            while (j < 4) { th(j) = q6(th(j) - eta * gth(j) / m); j += 1 }
-            r += 1
-          }
-          out.result().iterator
-          }
+    Panel.perSeries(melted, minLen, Encoders.product[GradTraceRow]) { (g, f, y) =>
+      val n = y.length
+      def q6(v: Double): Double = math.floor(v * 1e6 + 0.5) / 1e6
+      val mean = y.sum / n
+      val varp = y.map(v => (v - mean) * (v - mean)).sum / n
+      // Degenerate constant series (varp = 0): the EWMA backcast seeds
+      // sigma2 = 0 and nllGrad lands in its 1e10 penalty bowl while a
+      // SQL mirror computes ln(0) — skip, the emTrace varp>0 convention.
+      if (varp <= 0.0) Iterator.empty
+      else {
+        val th = DenseVector(
+          q6(mean),
+          q6(math.log(math.max(varp * (1.0 - 0.05 - 0.85), 1e-12))),
+          q6(math.log(0.05 / (1.0 - 0.05 - 0.85))),
+          q6(math.log(0.85 / (1.0 - 0.05 - 0.85))))
+        val out = Array.newBuilder[GradTraceRow]
+        var r = 1
+        while (r <= rounds) {
+          val (nllV, gth) = nllGrad("GARCH", y)(th)
+          out += GradTraceRow(g, f, r, q6(nllV),
+            q6(gth(0)), q6(gth(1)), q6(gth(2)), q6(gth(3)))
+          val m = math.max(math.max(math.max(math.max(1.0,
+            math.abs(gth(0))), math.abs(gth(1))), math.abs(gth(2))), math.abs(gth(3)))
+          var j = 0
+          while (j < 4) { th(j) = q6(th(j) - eta * gth(j) / m); j += 1 }
+          r += 1
         }
+        out.result().iterator
       }
-      .toDF()
-      .orderBy("feature", "group_key", "round")
+    }.orderBy("feature", "group_key", "round")
   }
 
   case class VolRow(
@@ -421,67 +404,37 @@ object Garch {
     * DuckDB oracle can reproduce (the recursions fold via `list_reduce`).
     * The data-dependent optimum itself stays pinned by the parameter-
     * recovery ScalaTests. */
-  def nllCores(melted: DataFrame, minLen: Int = 50): DataFrame = {
-    val ss = melted.sparkSession
-    import ss.implicits._
-    melted
-      .filter(Panel.finite(col("value")))
-      .select("group_key", "feature", "date", "value")
-      .as[(String, String, java.sql.Timestamp, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (String, String), it: Iterator[(String, String, java.sql.Timestamp, Double)]) =>
-        val (g, f) = key
-        val y = it.toArray.sortBy(r => (r._3.getTime, r._4)).map(_._4)
-        val n = y.length
-        if (n < minLen) Iterator.empty
-        else {
-          val mean = y.sum / n
-          val vp = y.map(v => (v - mean) * (v - mean)).sum / n
-          val garch = nllAt("GARCH", y, mean,
-            math.max(0.10 * vp, 1e-12), 0.05, 0.85, 0.0)
-          val gjr = nllAt("GJR-GARCH", y, mean,
-            math.max(0.09 * vp, 1e-12), 0.05, 0.85, 0.02)
-          val eg = nllAt("EGARCH", y, mean,
-            0.1 * math.log(math.max(vp, 1e-12)), 0.1, 0.9, 0.0)
-          Iterator.single(GarchCoreRow(g, f, n.toLong, garch, gjr, eg))
-        }
-      }
-      .toDF()
-      .orderBy("feature", "group_key")
-  }
+  def nllCores(melted: DataFrame, minLen: Int = 50): DataFrame =
+    Panel.perSeries(melted, minLen, Encoders.product[GarchCoreRow]) { (g, f, y) =>
+      val n = y.length
+      val mean = y.sum / n
+      val vp = y.map(v => (v - mean) * (v - mean)).sum / n
+      val garch = nllAt("GARCH", y, mean,
+        math.max(0.10 * vp, 1e-12), 0.05, 0.85, 0.0)
+      val gjr = nllAt("GJR-GARCH", y, mean,
+        math.max(0.09 * vp, 1e-12), 0.05, 0.85, 0.02)
+      val eg = nllAt("EGARCH", y, mean,
+        0.1 * math.log(math.max(vp, 1e-12)), 0.1, 0.9, 0.0)
+      Iterator.single(GarchCoreRow(g, f, n.toLong, garch, gjr, eg))
+    }.orderBy("feature", "group_key")
 
   /** Per-(group × feature) volatility summary for the chosen model type;
     * series < minLen skipped (`:818-820`); failed fits emit null metrics. */
-  def volatilityAnalysis(melted: DataFrame, modelType: String = "GARCH", minLen: Int = 50): DataFrame = {
-    val ss = melted.sparkSession
-    import ss.implicits._
-    melted
-      .filter(Panel.finite(col("value")))
-      .select("group_key", "feature", "date", "value")
-      .as[(String, String, java.sql.Timestamp, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (String, String), it: Iterator[(String, String, java.sql.Timestamp, Double)]) =>
-        val (g, f) = key
-        val y = it.toArray.sortBy(r => (r._3.getTime, r._4)).map(_._4)
-        if (y.length < minLen) Iterator.empty
-        else {
-          try {
-            val ft = fit(y, modelType)
-            val n = y.length
-            val k = ft.nParams
-            val (vm, vs, vsk, vk) = sampleMoments(ft.condVol)
-            Iterator.single(VolRow(g, f, modelType,
-              Some(ft.llf), Some(2.0 * k - 2.0 * ft.llf),
-              Some(math.log(n.toDouble) * k - 2.0 * ft.llf),
-              Some(vm), Some(vs), Some(vsk), Some(vk),
-              Some(ft.persistence)))
-          } catch {
-            case _: Throwable =>
-              Iterator.single(VolRow(g, f, modelType, None, None, None, None, None, None, None, None))
-          }
-        }
+  def volatilityAnalysis(melted: DataFrame, modelType: String = "GARCH", minLen: Int = 50): DataFrame =
+    Panel.perSeries(melted, minLen, Encoders.product[VolRow]) { (g, f, y) =>
+      try {
+        val ft = fit(y, modelType)
+        val n = y.length
+        val k = ft.nParams
+        val (vm, vs, vsk, vk) = sampleMoments(ft.condVol)
+        Iterator.single(VolRow(g, f, modelType,
+          Some(ft.llf), Some(2.0 * k - 2.0 * ft.llf),
+          Some(math.log(n.toDouble) * k - 2.0 * ft.llf),
+          Some(vm), Some(vs), Some(vsk), Some(vk),
+          Some(ft.persistence)))
+      } catch {
+        case NonFatal(_) =>
+          Iterator.single(VolRow(g, f, modelType, None, None, None, None, None, None, None, None))
       }
-      .toDF()
-      .orderBy("feature", "group_key")
-  }
+    }.orderBy("feature", "group_key")
 }

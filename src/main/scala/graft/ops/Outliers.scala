@@ -1,8 +1,7 @@
 package graft.ops
 
 import scala.util.Random
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Encoders}
 import graft.core.Panel
 
 /** K11 — per-(group × feature) outlier detection
@@ -237,37 +236,22 @@ object Outliers {
       melted: DataFrame,
       method: String = "isolation_forest",
       contamination: Double = 0.1,
-      minLen: Int = 10): DataFrame = {
-    val ss = melted.sparkSession
-    import ss.implicits._
-    melted
-      .filter(Panel.finite(col("value")))
-      .select("group_key", "feature", "date", "value")
-      .as[(String, String, java.sql.Timestamp, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (String, String), it: Iterator[(String, String, java.sql.Timestamp, Double)]) =>
-        val (g, f) = key
-        val x = it.toArray.sortBy(r => (r._3.getTime, r._4)).map(_._4)
-        if (x.length < minLen) Iterator.empty
-        else {
-          val (labels, scores) = method match {
-            case "isolation_forest" =>
-              isolationForest(x, contamination, seed = (g + "|" + f).hashCode.toLong ^ 42L)
-            case "isolation_forest_replay" =>
-              isolationForestReplayable(x, contamination)
-            case "local_outlier_factor" =>
-              localOutlierFactor(x, math.min(20, x.length / 2), contamination)
-            case "zscore" => zscore(x)
-            case m => throw new IllegalArgumentException(s"Unknown method: $m")
-          }
-          val out = labels.zip(scores).filter(_._1 == -1).map(_._2)
-          Iterator.single(OutlierRow(
-            g, f, method, x.length, out.length, out.length.toDouble / x.length,
-            if (out.nonEmpty) out.sum / out.length else 0.0,
-            scores.max, scores.min))
-        }
+      minLen: Int = 10): DataFrame =
+    Panel.perSeries(melted, minLen, Encoders.product[OutlierRow]) { (g, f, x) =>
+      val (labels, scores) = method match {
+        case "isolation_forest" =>
+          isolationForest(x, contamination, seed = (g + "|" + f).hashCode.toLong ^ 42L)
+        case "isolation_forest_replay" =>
+          isolationForestReplayable(x, contamination)
+        case "local_outlier_factor" =>
+          localOutlierFactor(x, math.min(20, x.length / 2), contamination)
+        case "zscore" => zscore(x)
+        case m => throw new IllegalArgumentException(s"Unknown method: $m")
       }
-      .toDF()
-      .orderBy("feature", "group_key")
-  }
+      val out = labels.zip(scores).filter(_._1 == -1).map(_._2)
+      Iterator.single(OutlierRow(
+        g, f, method, x.length, out.length, out.length.toDouble / x.length,
+        if (out.nonEmpty) out.sum / out.length else 0.0,
+        scores.max, scores.min))
+    }.orderBy("feature", "group_key")
 }

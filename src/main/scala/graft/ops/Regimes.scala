@@ -1,7 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import graft.core.Panel
 
 /** K9 — Markov regime-switching regression (time_series_study.py:686-778):
@@ -342,7 +342,7 @@ object Regimes {
       else new ApproximateGradientFunction[Int, DenseVector[Double]](nll _)
     val opt = try new LBFGS[DenseVector[Double]](
       maxIter = maxIter, m = 7, tolerance = math.min(tol, 1e-8))
-      .minimize(g, start) catch { case _: Throwable => start }
+      .minimize(g, start) catch { case NonFatal(_) => start }
     val (p, mu, s2) = unpack(opt)
     // one E-pass at the optimum refreshes filter/smoother state exactly
     val refreshed = emAt(y, p, mu, s2)
@@ -442,34 +442,19 @@ object Regimes {
     * the data-dependent optimum stays pinned by the golden-parity tests.
     * Emits the filter log-likelihood and the mean filtered probability of
     * regime 0. */
-  def filterCores(melted: DataFrame, minLen: Int = 20): DataFrame = {
-    val ss = melted.sparkSession
-    import ss.implicits._
-    melted
-      .filter(Panel.finite(col("value")))
-      .select("group_key", "feature", "date", "value")
-      .as[(String, String, java.sql.Timestamp, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (String, String), it: Iterator[(String, String, java.sql.Timestamp, Double)]) =>
-        val (g, f) = key
-        val y = it.toArray.sortBy(r => (r._3.getTime, r._4)).map(_._4)
-        val n = y.length
-        if (n < minLen) Iterator.empty
-        else {
-          val mean = y.sum / n
-          val varp = y.map(v => (v - mean) * (v - mean)).sum / n
-          if (varp <= 0) Iterator.empty
-          else {
-            val sd = math.sqrt(varp)
-            val (llf, meanF0) =
-              hamiltonPass(y, 0.9, 0.9, mean - sd, mean + sd, varp)
-            Iterator.single(RegimeCoreRow(g, f, n.toLong, llf, meanF0))
-          }
-        }
+  def filterCores(melted: DataFrame, minLen: Int = 20): DataFrame =
+    Panel.perSeries(melted, minLen, Encoders.product[RegimeCoreRow]) { (g, f, y) =>
+      val n = y.length
+      val mean = y.sum / n
+      val varp = y.map(v => (v - mean) * (v - mean)).sum / n
+      if (varp <= 0) Iterator.empty
+      else {
+        val sd = math.sqrt(varp)
+        val (llf, meanF0) =
+          hamiltonPass(y, 0.9, 0.9, mean - sd, mean + sd, varp)
+        Iterator.single(RegimeCoreRow(g, f, n.toLong, llf, meanF0))
       }
-      .toDF()
-      .orderBy("feature", "group_key")
-  }
+    }.orderBy("feature", "group_key")
 
   /** Forward filter, 2-regime, SINGLE-state form: the filtered pair is
     * normalized so it is carried as f0 alone with f1 ≡ 1 − f0 — exactly
@@ -528,173 +513,111 @@ object Regimes {
     * risk). */
   def emTrace(melted: DataFrame, rounds: Int = 2, minLen: Int = 20): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val ss = melted.sparkSession
-    import ss.implicits._
-    melted
-      .filter(Panel.finite(col("value")))
-      .select("group_key", "feature", "date", "value")
-      .as[(String, String, java.sql.Timestamp, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (String, String), it: Iterator[(String, String, java.sql.Timestamp, Double)]) =>
-        val (g, f) = key
-        val y = it.toArray.sortBy(r => (r._3.getTime, r._4)).map(_._4)
-        val n = y.length
-        if (n < minLen) Iterator.empty
-        else {
-          val mean = y.sum / n
-          val varp = y.map(v => (v - mean) * (v - mean)).sum / n
-          if (varp <= 0) Iterator.empty
-          else {
-            def q6(v: Double): Double = math.floor(v * 1e6 + 0.5) / 1e6
-            val sd = math.sqrt(varp)
-            var mu0 = q6(mean - sd)
-            var mu1 = q6(mean + sd)
-            var s2 = q6(varp)
-            var p00 = 0.9
-            var p11 = 0.9
-            val out = Array.newBuilder[EmTraceRow]
-            var r = 1
-            while (r <= rounds) {
-              val c = math.sqrt(2.0 * math.Pi * s2)
-              val pi0 = (1.0 - p11) / (2.0 - p00 - p11)
-              // forward filter (single-state; both predicted components kept
-              // for the smoother/M-step)
-              val p0s = new Array[Double](n)
-              val p1s = new Array[Double](n)
-              val f0s = new Array[Double](n)
-              var ll = 0.0
-              var f0 = 0.0
-              var t = 0
-              while (t < n) {
-                val pred0 = if (t == 0) pi0 else f0 * p00 + (1.0 - f0) * (1.0 - p11)
-                val pred1 = if (t == 0) 1.0 - pi0 else f0 * (1.0 - p00) + (1.0 - f0) * p11
-                val r0 = pred0 * math.exp(-0.5 * (y(t) - mu0) * (y(t) - mu0) / s2) / c
-                val r1 = pred1 * math.exp(-0.5 * (y(t) - mu1) * (y(t) - mu1) / s2) / c
-                var s = r0 + r1
-                if (s <= 0 || s.isNaN) s = 1e-300
-                ll += math.log(s)
-                f0 = r0 / s
-                p0s(t) = pred0; p1s(t) = pred1; f0s(t) = f0
-                t += 1
-              }
-              // Kim smoother
-              val sm0 = new Array[Double](n)
-              val sm1 = new Array[Double](n)
-              sm0(n - 1) = f0s(n - 1)
-              sm1(n - 1) = 1.0 - f0s(n - 1)
-              t = n - 2
-              while (t >= 0) {
-                val a0 = (if (p0s(t + 1) > 0) p00 * sm0(t + 1) / p0s(t + 1) else 0.0) +
-                  (if (p1s(t + 1) > 0) (1.0 - p00) * sm1(t + 1) / p1s(t + 1) else 0.0)
-                sm0(t) = f0s(t) * a0
-                val a1 = (if (p0s(t + 1) > 0) (1.0 - p11) * sm0(t + 1) / p0s(t + 1) else 0.0) +
-                  (if (p1s(t + 1) > 0) p11 * sm1(t + 1) / p1s(t + 1) else 0.0)
-                sm1(t) = (1.0 - f0s(t)) * a1
-                t -= 1
-              }
-              // M-step
-              var num00 = 0.0; var num11 = 0.0; var den0 = 0.0; var den1 = 0.0
-              t = 0
-              while (t < n - 1) {
-                if (p0s(t + 1) > 0) num00 += f0s(t) * p00 * sm0(t + 1) / p0s(t + 1)
-                if (p1s(t + 1) > 0) num11 += (1.0 - f0s(t)) * p11 * sm1(t + 1) / p1s(t + 1)
-                den0 += sm0(t); den1 += sm1(t)
-                t += 1
-              }
-              val nP00 = if (den0 > 0) num00 / den0 else 1.0
-              val nP11 = if (den1 > 0) num11 / den1 else 1.0
-              var mn0 = 0.0; var md0 = 0.0
-              t = 0
-              while (t < n) { mn0 += sm0(t) * y(t); md0 += sm0(t); t += 1 }
-              var mn1 = 0.0; var md1 = 0.0
-              t = 0
-              while (t < n) { mn1 += sm1(t) * y(t); md1 += sm1(t); t += 1 }
-              val nMu0 = if (md0 > 0) mn0 / md0 else mu0
-              val nMu1 = if (md1 > 0) mn1 / md1 else mu1
-              var ssum = 0.0
-              t = 0
-              while (t < n) {
-                // acc + (term0 + term1): associates exactly like the
-                // oracle's per-t fold element
-                ssum += sm0(t) * (y(t) - nMu0) * (y(t) - nMu0) +
-                  sm1(t) * (y(t) - nMu1) * (y(t) - nMu1)
-                t += 1
-              }
-              val nS2 = math.max(ssum / n, 1e-12)
-              p00 = q6(nP00); p11 = q6(nP11)
-              mu0 = q6(nMu0); mu1 = q6(nMu1); s2 = q6(nS2)
-              out += EmTraceRow(g, f, r, q6(ll), p00, p11, mu0, mu1, s2)
-              r += 1
-            }
-            out.result().iterator
+    Panel.perSeries(melted, minLen, Encoders.product[EmTraceRow]) { (g, f, y) =>
+      val n = y.length
+      val mean = y.sum / n
+      val varp = y.map(v => (v - mean) * (v - mean)).sum / n
+      if (varp <= 0) Iterator.empty
+      else {
+        def q6(v: Double): Double = math.floor(v * 1e6 + 0.5) / 1e6
+        val sd = math.sqrt(varp)
+        var mu0 = q6(mean - sd)
+        var mu1 = q6(mean + sd)
+        var s2 = q6(varp)
+        var p00 = 0.9
+        var p11 = 0.9
+        val out = Array.newBuilder[EmTraceRow]
+        var r = 1
+        while (r <= rounds) {
+          val c = math.sqrt(2.0 * math.Pi * s2)
+          val pi0 = (1.0 - p11) / (2.0 - p00 - p11)
+          // forward filter (single-state; both predicted components kept
+          // for the smoother/M-step)
+          val p0s = new Array[Double](n)
+          val p1s = new Array[Double](n)
+          val f0s = new Array[Double](n)
+          var ll = 0.0
+          var f0 = 0.0
+          var t = 0
+          while (t < n) {
+            val pred0 = if (t == 0) pi0 else f0 * p00 + (1.0 - f0) * (1.0 - p11)
+            val pred1 = if (t == 0) 1.0 - pi0 else f0 * (1.0 - p00) + (1.0 - f0) * p11
+            val r0 = pred0 * math.exp(-0.5 * (y(t) - mu0) * (y(t) - mu0) / s2) / c
+            val r1 = pred1 * math.exp(-0.5 * (y(t) - mu1) * (y(t) - mu1) / s2) / c
+            var s = r0 + r1
+            if (s <= 0 || s.isNaN) s = 1e-300
+            ll += math.log(s)
+            f0 = r0 / s
+            p0s(t) = pred0; p1s(t) = pred1; f0s(t) = f0
+            t += 1
           }
+          // Kim smoother
+          val sm0 = new Array[Double](n)
+          val sm1 = new Array[Double](n)
+          sm0(n - 1) = f0s(n - 1)
+          sm1(n - 1) = 1.0 - f0s(n - 1)
+          t = n - 2
+          while (t >= 0) {
+            val a0 = (if (p0s(t + 1) > 0) p00 * sm0(t + 1) / p0s(t + 1) else 0.0) +
+              (if (p1s(t + 1) > 0) (1.0 - p00) * sm1(t + 1) / p1s(t + 1) else 0.0)
+            sm0(t) = f0s(t) * a0
+            val a1 = (if (p0s(t + 1) > 0) (1.0 - p11) * sm0(t + 1) / p0s(t + 1) else 0.0) +
+              (if (p1s(t + 1) > 0) p11 * sm1(t + 1) / p1s(t + 1) else 0.0)
+            sm1(t) = (1.0 - f0s(t)) * a1
+            t -= 1
+          }
+          // M-step
+          var num00 = 0.0; var num11 = 0.0; var den0 = 0.0; var den1 = 0.0
+          t = 0
+          while (t < n - 1) {
+            if (p0s(t + 1) > 0) num00 += f0s(t) * p00 * sm0(t + 1) / p0s(t + 1)
+            if (p1s(t + 1) > 0) num11 += (1.0 - f0s(t)) * p11 * sm1(t + 1) / p1s(t + 1)
+            den0 += sm0(t); den1 += sm1(t)
+            t += 1
+          }
+          val nP00 = if (den0 > 0) num00 / den0 else 1.0
+          val nP11 = if (den1 > 0) num11 / den1 else 1.0
+          var mn0 = 0.0; var md0 = 0.0
+          t = 0
+          while (t < n) { mn0 += sm0(t) * y(t); md0 += sm0(t); t += 1 }
+          var mn1 = 0.0; var md1 = 0.0
+          t = 0
+          while (t < n) { mn1 += sm1(t) * y(t); md1 += sm1(t); t += 1 }
+          val nMu0 = if (md0 > 0) mn0 / md0 else mu0
+          val nMu1 = if (md1 > 0) mn1 / md1 else mu1
+          var ssum = 0.0
+          t = 0
+          while (t < n) {
+            // acc + (term0 + term1): associates exactly like the
+            // oracle's per-t fold element
+            ssum += sm0(t) * (y(t) - nMu0) * (y(t) - nMu0) +
+              sm1(t) * (y(t) - nMu1) * (y(t) - nMu1)
+            t += 1
+          }
+          val nS2 = math.max(ssum / n, 1e-12)
+          p00 = q6(nP00); p11 = q6(nP11)
+          mu0 = q6(nMu0); mu1 = q6(nMu1); s2 = q6(nS2)
+          out += EmTraceRow(g, f, r, q6(ll), p00, p11, mu0, mu1, s2)
+          r += 1
         }
+        out.result().iterator
       }
-      .toDF()
-      .orderBy("feature", "group_key", "round")
+    }.orderBy("feature", "group_key", "round")
   }
 
-  case class RegimeRow(
-      group_key: String, feature: String,
-      regime_1_prob: Option[Double], regime_2_prob: Option[Double],
-      regime_switches: Option[Int], regime_switches_true: Option[Int],
-      log_likelihood: Option[Double], aic: Option[Double], bic: Option[Double],
-      p00: Option[Double], p11: Option[Double],
-      mu_1: Option[Double], mu_2: Option[Double], sigma2: Option[Double])
-
-  /** Per-(group × feature) 2-regime fit over the melted panel; series with
-    * fewer than `minLen` finite points are skipped (`:724-726`); failed
-    * fits warn-and-skip in the reference — here they emit null metrics. */
-  def regimeDetection(melted: DataFrame, minLen: Int = 20): DataFrame = {
-    val ss = melted.sparkSession
-    import ss.implicits._
-    melted
-      .filter(Panel.finite(col("value")))
-      .select("group_key", "feature", "date", "value")
-      .as[(String, String, java.sql.Timestamp, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (String, String), it: Iterator[(String, String, java.sql.Timestamp, Double)]) =>
-        val (g, f) = key
-        val y = it.toArray.sortBy(r => (r._3.getTime, r._4)).map(_._4)
-        if (y.length < minLen) Iterator.empty
-        else {
-          try {
-            val ft = fit(y)
-            val n = y.length
-            val kParams = 2 * 1 + 2 + 1 // transitions + means + variance
-            val aic = 2.0 * kParams - 2.0 * ft.llf
-            val bic = math.log(n.toDouble) * kParams - 2.0 * ft.llf
-            val probs = Array.tabulate(2)(j => ft.smoothed.map(_(j)).sum / n)
-            // quirk R2: per-regime date-of-max, count of consecutive diffs
-            val tmax = Array.tabulate(2)(j => ft.smoothed.map(_(j)).zipWithIndex.maxBy(v => (v._1, -v._2))._2)
-            val switchesQuirk = (1 until 2).count(i => tmax(i) != tmax(i - 1))
-            val states = ft.smoothed.map(r => if (r(0) >= r(1)) 0 else 1)
-            val switchesTrue = (1 until n).count(t => states(t) != states(t - 1))
-            Iterator.single(RegimeRow(g, f,
-              Some(probs(0)), Some(probs(1)), Some(switchesQuirk), Some(switchesTrue),
-              Some(ft.llf), Some(aic), Some(bic),
-              Some(ft.p(0)(0)), Some(ft.p(1)(1)),
-              Some(ft.mu(0)), Some(ft.mu(1)), Some(ft.sigma2)))
-          } catch {
-            case _: Throwable =>
-              Iterator.single(RegimeRow(g, f, None, None, None, None, None, None, None,
-                None, None, None, None, None))
-          }
-        }
-      }
-      .toDF()
-      .orderBy("feature", "group_key")
-  }
-
-  /** General-k tabular regime detection: same pipeline as the 2-regime
-    * `regimeDetection` with k-dependent columns (`regime_j_prob`, `pjj`,
-    * `mu_j`) built dynamically. The 2-regime method stays as-is for exact
-    * reference column parity; this one serves programmatic k ≥ 2 use
-    * (reference's own tabular output is 2-regime only). */
-  def regimeDetectionK(melted: DataFrame, kRegimes: Int, minLen: Int = 20): DataFrame = {
+  /** Per-(group × feature) k-regime fit over the melted panel, k ≥ 2
+    * (`kRegimes`, default 2 — the reference's golden-run shape, whose
+    * tabular output is 2-regime only). Columns: group_key, feature,
+    * `regime_j_prob` (j = 1..k), regime_switches, regime_switches_true,
+    * log_likelihood, aic, bic, `pjj` (j = 0..k−1), `mu_j` (j = 1..k),
+    * sigma2. Each series is fit in date order (see
+    * [[graft.core.Panel.perSeries]]); series with fewer than `minLen`
+    * finite points are skipped (`:724-726`); failed fits warn-and-skip in
+    * the reference — here they emit null metrics. The smoothed state at t
+    * is the most probable regime, the lowest index on ties. */
+  def regimeDetection(melted: DataFrame, kRegimes: Int = 2, minLen: Int = 20): DataFrame = {
     require(kRegimes >= 2, s"need at least 2 regimes, got $kRegimes")
     import org.apache.spark.sql.types._
-    import org.apache.spark.sql.{Encoders, Row}
     val k = kRegimes
     val schema = StructType(
       Seq(StructField("group_key", StringType), StructField("feature", StringType)) ++
@@ -706,43 +629,29 @@ object Regimes {
         (0 until k).map(j => StructField(s"p$j$j", DoubleType)) ++
         (1 to k).map(j => StructField(s"mu_$j", DoubleType)) :+
         StructField("sigma2", DoubleType))
-    val ss = melted.sparkSession
-    import ss.implicits._
     val nullTail = Seq.fill(schema.length - 2)(null)
-    melted
-      .filter(Panel.finite(col("value")))
-      .select("group_key", "feature", "date", "value")
-      .as[(String, String, java.sql.Timestamp, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (String, String), it: Iterator[(String, String, java.sql.Timestamp, Double)]) =>
-        val (g, f) = key
-        val y = it.toArray.sortBy(r => (r._3.getTime, r._4)).map(_._4)
-        if (y.length < minLen) Iterator.empty
-        else {
-          try {
-            val ft = fit(y, k)
-            val n = y.length
-            val kParams = k * (k - 1) + k + 1 // transitions + means + variance
-            val aic = 2.0 * kParams - 2.0 * ft.llf
-            val bic = math.log(n.toDouble) * kParams - 2.0 * ft.llf
-            val probs = Array.tabulate(k)(j => ft.smoothed.map(_(j)).sum / n)
-            // quirk R2 generalized: per-regime date-of-max, consecutive diffs
-            val tmax = Array.tabulate(k)(j =>
-              ft.smoothed.map(_(j)).zipWithIndex.maxBy(v => (v._1, -v._2))._2)
-            val switchesQuirk = (1 until k).count(i => tmax(i) != tmax(i - 1))
-            val states = ft.smoothed.map(r => r.zipWithIndex.maxBy(v => (v._1, -v._2))._2)
-            val switchesTrue = (1 until n).count(t => states(t) != states(t - 1))
-            val vals: Seq[Any] =
-              Seq[Any](g, f) ++ probs.toSeq ++
-                Seq[Any](switchesQuirk, switchesTrue, ft.llf, aic, bic) ++
-                (0 until k).map(j => ft.p(j)(j)) ++ ft.mu.toSeq :+ ft.sigma2
-            Iterator.single(Row(vals: _*))
-          } catch {
-            case _: Throwable => Iterator.single(Row(Seq[Any](g, f) ++ nullTail: _*))
-          }
-        }
-      }(Encoders.row(schema))
-      .toDF()
-      .orderBy("feature", "group_key")
+    Panel.perSeries(melted, minLen, Encoders.row(schema)) { (g, f, y) =>
+      try {
+        val ft = fit(y, k)
+        val n = y.length
+        val kParams = k * (k - 1) + k + 1 // transitions + means + variance
+        val aic = 2.0 * kParams - 2.0 * ft.llf
+        val bic = math.log(n.toDouble) * kParams - 2.0 * ft.llf
+        val probs = Array.tabulate(k)(j => ft.smoothed.map(_(j)).sum / n)
+        // quirk R2: per-regime date-of-max, count of consecutive diffs
+        val tmax = Array.tabulate(k)(j =>
+          ft.smoothed.map(_(j)).zipWithIndex.maxBy(v => (v._1, -v._2))._2)
+        val switchesQuirk = (1 until k).count(i => tmax(i) != tmax(i - 1))
+        val states = ft.smoothed.map(r => r.zipWithIndex.maxBy(v => (v._1, -v._2))._2)
+        val switchesTrue = (1 until n).count(t => states(t) != states(t - 1))
+        val vals: Seq[Any] =
+          Seq[Any](g, f) ++ probs.toSeq ++
+            Seq[Any](switchesQuirk, switchesTrue, ft.llf, aic, bic) ++
+            (0 until k).map(j => ft.p(j)(j)) ++ ft.mu.toSeq :+ ft.sigma2
+        Iterator.single(Row(vals: _*))
+      } catch {
+        case NonFatal(_) => Iterator.single(Row(Seq[Any](g, f) ++ nullTail: _*))
+      }
+    }.orderBy("feature", "group_key")
   }
 }

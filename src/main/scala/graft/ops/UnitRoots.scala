@@ -1,7 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, Encoders}
 import graft.core.Panel
 import graft.ops.stat.{MacKinnon, Stats}
 
@@ -18,9 +18,11 @@ import graft.ops.stat.{MacKinnon, Stats}
   *     p interpolated in the published critical-value table, naturally
   *     clipped to [0.01, 0.10].
   *
-  * Kernels run per (group × feature) inside `flatMapGroups` after one
-  * shuffle; series are panel-small so local dense OLS is appropriate, and
-  * parallelism scales with group count (the 100 TB axis).
+  * Kernels run per (group × feature) through [[graft.core.Panel.perSeries]]:
+  * one shuffle, then each series in full-precision date order (a null
+  * date first, ties by value). Series are panel-small so local dense OLS
+  * is appropriate, and parallelism scales with group count (the 100 TB
+  * axis).
   */
 object UnitRoots {
 
@@ -144,31 +146,16 @@ object UnitRoots {
     * Bartlett-long-run-variance machinery per round (p-values stay in the
     * kernel: MacKinnon surface / table interpolation are not the risky
     * parts). */
-  def unitRootStats(melted: DataFrame, minLen: Int = 10): DataFrame = {
-    val ss = melted.sparkSession
-    import ss.implicits._
-    melted
-      .filter(Panel.finite(col("value")))
-      .select("group_key", "feature", "date", "value")
-      .as[(String, String, java.sql.Timestamp, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (String, String), it: Iterator[(String, String, java.sql.Timestamp, Double)]) =>
-        val (g, f) = key
-        val x = it.toArray.sortBy(r => (r._3.getTime, r._4)).map(_._4)
-        if (x.length < minLen) Iterator.empty
-        else {
-          val (ks, kl) =
-            try { val (s, _, nl) = kpss(x, "c"); (Some(s), Some(nl)) }
-            catch { case _: Throwable => (None, None) }
-          val as =
-            try { val (s, _, _) = adfuller(x, "c", maxlagOverride = Some(0)); Some(s) }
-            catch { case _: Throwable => None }
-          Iterator.single(UnitRootStatRow(g, f, ks, kl, as))
-        }
-      }
-      .toDF()
-      .orderBy("feature", "group_key")
-  }
+  def unitRootStats(melted: DataFrame, minLen: Int = 10): DataFrame =
+    Panel.perSeries(melted, minLen, Encoders.product[UnitRootStatRow]) { (g, f, x) =>
+      val (ks, kl) =
+        try { val (s, _, nl) = kpss(x, "c"); (Some(s), Some(nl)) }
+        catch { case NonFatal(_) => (None, None) }
+      val as =
+        try { val (s, _, _) = adfuller(x, "c", maxlagOverride = Some(0)); Some(s) }
+        catch { case NonFatal(_) => None }
+      Iterator.single(UnitRootStatRow(g, f, ks, kl, as))
+    }.orderBy("feature", "group_key")
 
   case class KpssCtRow(
       group_key: String,
@@ -186,28 +173,13 @@ object UnitRoots {
     * to [0.01, 0.10]). Runs through the same `kpss` kernel code path via
     * `nlagsOverride`, so greening this row pins the production code.
     * Reference semantics: time_series_study.py:212-214. */
-  def kpssCtStats(melted: DataFrame, nlags: Int = 4, minLen: Int = 10): DataFrame = {
-    val ss = melted.sparkSession
-    import ss.implicits._
-    melted
-      .filter(Panel.finite(col("value")))
-      .select("group_key", "feature", "date", "value")
-      .as[(String, String, java.sql.Timestamp, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (String, String), it: Iterator[(String, String, java.sql.Timestamp, Double)]) =>
-        val (g, f) = key
-        val x = it.toArray.sortBy(r => (r._3.getTime, r._4)).map(_._4)
-        if (x.length < minLen) Iterator.empty
-        else {
-          val (st, p) =
-            try { val (s, pv, _) = kpss(x, "ct", nlagsOverride = Some(nlags)); (Some(s), Some(pv)) }
-            catch { case _: Throwable => (None, None) }
-          Iterator.single(KpssCtRow(g, f, st, p))
-        }
-      }
-      .toDF()
-      .orderBy("feature", "group_key")
-  }
+  def kpssCtStats(melted: DataFrame, nlags: Int = 4, minLen: Int = 10): DataFrame =
+    Panel.perSeries(melted, minLen, Encoders.product[KpssCtRow]) { (g, f, x) =>
+      val (st, p) =
+        try { val (s, pv, _) = kpss(x, "ct", nlagsOverride = Some(nlags)); (Some(s), Some(pv)) }
+        catch { case NonFatal(_) => (None, None) }
+      Iterator.single(KpssCtRow(g, f, st, p))
+    }.orderBy("feature", "group_key")
 
   case class AdfAutolagRow(
       group_key: String,
@@ -222,28 +194,13 @@ object UnitRoots {
     * (`maxlagOverride = Some(1)`), every piece of which (OLS ssr, the
     * Gaussian llf/AIC formula, the augmented-regression t) is closed-form
     * covariance algebra a DuckDB oracle can replay. */
-  def adfAutolag1Stats(melted: DataFrame, minLen: Int = 10): DataFrame = {
-    val ss = melted.sparkSession
-    import ss.implicits._
-    melted
-      .filter(Panel.finite(col("value")))
-      .select("group_key", "feature", "date", "value")
-      .as[(String, String, java.sql.Timestamp, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (String, String), it: Iterator[(String, String, java.sql.Timestamp, Double)]) =>
-        val (g, f) = key
-        val x = it.toArray.sortBy(r => (r._3.getTime, r._4)).map(_._4)
-        if (x.length < minLen) Iterator.empty
-        else {
-          val (st, lg) =
-            try { val (s, _, l) = adfuller(x, "c", maxlagOverride = Some(1)); (Some(s), Some(l)) }
-            catch { case _: Throwable => (None, None) }
-          Iterator.single(AdfAutolagRow(g, f, st, lg))
-        }
-      }
-      .toDF()
-      .orderBy("feature", "group_key")
-  }
+  def adfAutolag1Stats(melted: DataFrame, minLen: Int = 10): DataFrame =
+    Panel.perSeries(melted, minLen, Encoders.product[AdfAutolagRow]) { (g, f, x) =>
+      val (st, lg) =
+        try { val (s, _, l) = adfuller(x, "c", maxlagOverride = Some(1)); (Some(s), Some(l)) }
+        catch { case NonFatal(_) => (None, None) }
+      Iterator.single(AdfAutolagRow(g, f, st, lg))
+    }.orderBy("feature", "group_key")
 
   case class StationarityRow(
       group_key: String,
@@ -264,29 +221,14 @@ object UnitRoots {
     * and DuckDB-replayable, which is how q_stationarity_core_events
     * hash-oracles this full production path per round. */
   def stationarityTests(melted: DataFrame, regression: String = "c", minLen: Int = 10,
-      maxlagOverride: Option[Int] = None): DataFrame = {
-    val ss = melted.sparkSession
-    import ss.implicits._
-    melted
-      .filter(Panel.finite(col("value")))
-      .select("group_key", "feature", "date", "value")
-      .as[(String, String, java.sql.Timestamp, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key: (String, String), it: Iterator[(String, String, java.sql.Timestamp, Double)]) =>
-        val (g, f) = key
-        val x = it.toArray.sortBy(r => (r._3.getTime, r._4)).map(_._4)
-        if (x.length < minLen) Iterator.empty
-        else {
-          val (as, ap) =
-            try { val (s, p, _) = adfuller(x, regression, maxlagOverride); (Some(s), Some(p)) }
-            catch { case _: Throwable => (None, None) }
-          val (ks, kp) =
-            try { val (s, p, _) = kpss(x, regression); (Some(s), Some(p)) }
-            catch { case _: Throwable => (None, None) }
-          Iterator.single(StationarityRow(g, f, as, ap, ks, kp))
-        }
-      }
-      .toDF()
-      .orderBy("feature", "group_key")
-  }
+      maxlagOverride: Option[Int] = None): DataFrame =
+    Panel.perSeries(melted, minLen, Encoders.product[StationarityRow]) { (g, f, x) =>
+      val (as, ap) =
+        try { val (s, p, _) = adfuller(x, regression, maxlagOverride); (Some(s), Some(p)) }
+        catch { case NonFatal(_) => (None, None) }
+      val (ks, kp) =
+        try { val (s, p, _) = kpss(x, regression); (Some(s), Some(p)) }
+        catch { case NonFatal(_) => (None, None) }
+      Iterator.single(StationarityRow(g, f, as, ap, ks, kp))
+    }.orderBy("feature", "group_key")
 }

@@ -69,7 +69,7 @@ class AdvancedSpec extends SparkSpec {
     val df = dates.zip(y).toSeq.toDF("date", "value")
       .select($"date", org.apache.spark.sql.functions.lit("g").as("group_key"),
         org.apache.spark.sql.functions.lit("value").as("feature"), $"value")
-    val out = Regimes.regimeDetectionK(df, 3).collect()
+    val out = Regimes.regimeDetection(df, 3).collect()
     assert(out.length == 1)
     val r = out.head
     val got = Seq(r.getAs[Double]("mu_1"), r.getAs[Double]("mu_2"), r.getAs[Double]("mu_3")).sorted
@@ -95,7 +95,7 @@ class AdvancedSpec extends SparkSpec {
       e = math.sqrt(s2) * rng.nextGaussian()
       y(t) = e
     }
-    val fit = Garch.fitGarch11(y)
+    val fit = Garch.fit(y, "GARCH")
     assert(math.abs(fit.alpha - al) < 0.05, s"alpha ${fit.alpha}")
     assert(math.abs(fit.beta - be) < 0.08, s"beta ${fit.beta}")
     assert(math.abs(fit.mu) < 0.05, s"mu ${fit.mu}")
