@@ -3311,16 +3311,17 @@ object SparkEntry {
       |  floor(rec.recall * 1e6 + 0.5) / 1e6 AS recall_at_k
       |FROM tt JOIN rec USING (query_id) ORDER BY query_id, rank""".stripMargin
 
-  /** Whole-ANN-pipeline probe: [[graft.ext.Similarity.lshTopKReplayable]] —
-    * the production lshTopK pipeline (same bucketing expression, bits+1
-    * multiprobe, no-distinct candidate equijoin, k-capped TopKAgg ranking)
-    * with integer-arithmetic hyperplanes the oracle regenerates from two
-    * loop indices. DuckDB replays bucket assignment (sequential
+  /** Whole-ANN-pipeline probe: [[graft.ext.Similarity.lshTopK]] — the
+    * production pipeline (bucketing expression, bits+1 multiprobe,
+    * no-distinct candidate equijoin, k-capped TopKAgg ranking) under the
+    * pinned [[graft.ext.Similarity.integerPlanes]] (64 dims, 10 bits),
+    * which the oracle regenerates from two loop indices. DuckDB replays bucket assignment (sequential
     * list_reduce fold — the same left-to-right IEEE dot product as the
     * codegen'd DotProduct expression, so every sign decision matches),
     * multiprobe, cosine, and (cos desc, vec_id) ranking. */
   private def lshReplayTopk(s: SparkSession, dir: String): DataFrame =
-    Similarity.lshTopKReplayable(Tables.embeddings(s, dir), similarityQueries(s, dir), k = 5)
+    Similarity.lshTopK(Tables.embeddings(s, dir), similarityQueries(s, dir), k = 5,
+        Similarity.integerPlanes(64, 10))
       .select(col("query_id"), col("rank"), col("vec_id"), round6("cos"))
 
   private def lshReplaySql: String =
@@ -3348,16 +3349,16 @@ object SparkEntry {
       |SELECT query_id, rank, vec_id, floor((cos) * 1e6 + 0.5) / 1e6 AS cos
       |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
-  /** Whole-IVF-pipeline probe: [[graft.ext.Similarity.ivfTopKReplayable]]
-    * — the production ivfTopK search path (codegen'd max-cosine cell
+  /** Whole-IVF-pipeline probe: [[graft.ext.Similarity.ivfTopK]] — the
+    * production search path (codegen'd max-cosine cell
     * assignment, nprobe centroid probing with its (cos desc, idx desc)
     * tie order, cell equijoin, k-capped TopKAgg) with PINNED
     * integer-arithmetic centroids the oracle regenerates from loop
     * indices. DuckDB replays assignment argmax, probe ranking, cosine,
     * and final (cos desc, vec_id) rank. */
   private def ivfReplayTopk(s: SparkSession, dir: String): DataFrame =
-    Similarity.ivfTopKReplayable(Tables.embeddings(s, dir), similarityQueries(s, dir),
-        k = 5, dim = 64, nlist = 8, nprobe = 3)
+    Similarity.ivfTopK(Tables.embeddings(s, dir), similarityQueries(s, dir),
+        k = 5, Similarity.integerPlanes(64, 8), nprobe = 3)
       .select(col("query_id"), col("rank"), col("vec_id"), round6("cos"))
 
   /** Parameterized IVF replay oracle — the ivfReplaySql recipe (pinned
@@ -3402,17 +3403,19 @@ object SparkEntry {
 
   private def ivfReplaySql: String = ivfReplaySqlFor(8, 3)
 
-  /** Whole-PQ-pipeline probe: [[graft.ext.Pq.pqTopKReplayable]] — the
-    * production product-quantization path (per-subspace argmin-L2 encode
+  /** Whole-PQ-pipeline probe: [[graft.ext.Pq.pqEncode]] +
+    * [[graft.ext.Pq.pqTopK]] — the production product-quantization path (per-subspace argmin-L2 encode
     * with its lowest-code tie rule, per-query ADC dot/norm lookup tables,
     * ordered m-term score folds, k-capped TopKAgg rank) with PINNED
     * integer-arithmetic codebooks the oracle regenerates from three loop
     * indices. DuckDB replays encode argmin, both LUTs, the j-ordered
     * score folds, and the final (cos desc, vec_id) rank. */
-  private def pqReplayTopk(s: SparkSession, dir: String): DataFrame =
-    ext.Pq.pqTopKReplayable(Tables.embeddings(s, dir), similarityQueries(s, dir),
-        k = 5, dim = 64, m = 8, ksub = 8)
+  private def pqReplayTopk(s: SparkSession, dir: String): DataFrame = {
+    val cb = ext.Pq.integerCodebooks(8, 8, 8)
+    ext.Pq.pqTopK(ext.Pq.pqEncode(Tables.embeddings(s, dir), cb), similarityQueries(s, dir),
+        cb, k = 5)
       .select(col("query_id"), col("rank"), col("vec_id"), round6("cos"))
+  }
 
   /** PQ replay oracle: regenerate the (j, c) codebook grid with BIGINT
     * arithmetic, encode every vector by argmin L2 (dd asc, c asc — NaN
@@ -3459,14 +3462,18 @@ object SparkEntry {
       |SELECT query_id, rank, vec_id, floor(cos * 1e6 + 0.5) / 1e6 AS cos
       |FROM rr WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
-  /** OPQ replay twin: the production rotate → encode → LUT → ADC → rank
-    * path with a pinned signed-permutation rotation (orthonormal,
-    * regenerable from the mixHash chain + one ORDER BY) and the pinned
-    * integer codebooks. */
-  private def opqReplayTopk(s: SparkSession, dir: String): DataFrame =
-    ext.Pq.opqTopKReplayable(Tables.embeddings(s, dir), similarityQueries(s, dir),
-        k = 5, dim = 64, m = 8, ksub = 8)
+  /** OPQ replay: the production rotate → encode → LUT → ADC → rank path
+    * ([[graft.ext.Pq.opqEncode]] + [[graft.ext.Pq.opqTopK]]) with a pinned
+    * signed-permutation rotation (orthonormal, regenerable from the
+    * mixHash chain + one ORDER BY; the operators fuse it into the encode
+    * loops) and the pinned integer codebooks. */
+  private def opqReplayTopk(s: SparkSession, dir: String): DataFrame = {
+    val rot = ext.Pq.signedPermutationRotation(64)
+    val cb = ext.Pq.integerCodebooks(8, 8, 8)
+    ext.Pq.opqTopK(ext.Pq.opqEncode(Tables.embeddings(s, dir), rot, cb),
+        similarityQueries(s, dir), rot, cb, k = 5)
       .select(col("query_id"), col("rank"), col("vec_id"), round6("cos"))
+  }
 
   /** OPQ oracle = the rotation CTEs prepended to [[pqReplaySql]]'s PQ
     * machinery verbatim (derived by string surgery so the two replay
@@ -3496,15 +3503,15 @@ object SparkEntry {
   }
 
   /** Whole-pipeline semantic-dedup probe: [[graft.ext.SemDedup
-    * .semanticNearDupPairsReplayable]] — the production SemDeDup pipeline
+    * .semanticNearDupPairs]] — the production SemDeDup pipeline
     * (same codegen'd max-cosine cell assignment with its (cos desc, idx
     * asc) tie rule, same within-cell candidate equijoin, same
     * native-cosine threshold cut) with PINNED integer-arithmetic
     * centroids. DuckDB replays quantizer regeneration, assignment argmax,
     * pair generation, and the threshold cut. */
   private def semdedupPairsDocs(s: SparkSession, dir: String): DataFrame =
-    ext.SemDedup.semanticNearDupPairsReplayable(
-        fanOut(Tables.embeddings(s, dir), s), threshold = 0.3, dim = 64, nlist = 8)
+    ext.SemDedup.semanticNearDupPairs(
+        fanOut(Tables.embeddings(s, dir), s), ext.Similarity.integerPlanes(64, 8), threshold = 0.3)
       .select(col("doc_a"), col("doc_b"), round6("cos"))
       .orderBy("doc_a", "doc_b")
 
@@ -3590,8 +3597,8 @@ object SparkEntry {
     * closure, the q_neardup_components recipe) → min-id representative
     * survives. */
   private def semdedupKeepDocs(s: SparkSession, dir: String): DataFrame =
-    ext.SemDedup.semanticDeduplicateReplayable(
-        fanOut(Tables.embeddings(s, dir), s), threshold = 0.3, dim = 64, nlist = 8)
+    ext.SemDedup.semanticDeduplicate(
+        fanOut(Tables.embeddings(s, dir), s), ext.Similarity.integerPlanes(64, 8), threshold = 0.3)
       .select(col("vec_id"), col("label"))
       .orderBy("vec_id")
 
@@ -3609,14 +3616,14 @@ object SparkEntry {
        |WHERE vec_id NOT IN (SELECT v FROM losers) ORDER BY vec_id""".stripMargin
 
   /** Cluster-balanced curation keep set (SSL-prototypes recipe):
-    * [[graft.ext.ClusterCurate.clusterBalancedKeepReplayable]] — pinned
-    * quantizer, per-cluster prototypicality ranking, quota cut via the
+    * [[graft.ext.ClusterCurate.clusterBalancedKeep]] under the pinned
+    * quantizer [[graft.ext.Similarity.integerPlanes]] (64 dims, 8 cells), per-cluster prototypicality ranking, quota cut via the
     * k-capped TopKAgg. The oracle replays centroid regeneration, the
     * max-cosine assignment, the cosine-to-assigned-centroid score, and
     * the (cos desc, vec_id) per-cell rank. */
   private def clusterKeepEmbeddings(s: SparkSession, dir: String): DataFrame =
-    ext.ClusterCurate.clusterBalancedKeepReplayable(
-        Tables.embeddings(s, dir), quota = 20, keepMostPrototypical = true)
+    ext.ClusterCurate.clusterBalancedKeep(Tables.embeddings(s, dir),
+        ext.Similarity.integerPlanes(64, 8), quota = 20, keepMostPrototypical = true)
       .select(col("cell"), col("rank"), col("vec_id"), round6("proto_cos"))
 
   private def clusterKeepSql: String =
@@ -3632,10 +3639,10 @@ object SparkEntry {
        |FROM rk WHERE rank <= 20 ORDER BY cell, rank""".stripMargin
 
   /** PROMOTED to a hard oracle in round 12: the production LSH top-k
-    * pipeline (lshTopKWithPlanes — bucketing, bits+1 multiprobe,
-    * no-distinct candidate equijoin, k-capped TopKAgg) with the PINNED
-    * integer planes of the replay twin, COMPOSED with the recall@k eval
-    * against the exact brute-force top-k — so the driver-tracked
+    * pipeline ([[graft.ext.Similarity.lshTopK]] — bucketing, bits+1
+    * multiprobe, no-distinct candidate equijoin, k-capped TopKAgg) with
+    * the PINNED integer planes of q_lsh_replay_topk, COMPOSED with the
+    * recall@k eval against the exact brute-force top-k — so the driver-tracked
     * approximation-quality number is itself hash-verified (recall was
     * the one un-oracled stage left: q_lsh_replay_topk pins the top-k,
     * q_mrl_topk pins withRecallAtK on exact inputs; this row pins their
@@ -3646,7 +3653,7 @@ object SparkEntry {
     val emb = Tables.embeddings(s, dir)
     val q = similarityQueries(s, dir)
     Similarity.withRecallAtK(
-        Similarity.lshTopKReplayable(emb, q, k = 5),
+        Similarity.lshTopK(emb, q, k = 5, Similarity.integerPlanes(64, 10)),
         Similarity.bruteForceTopK(emb, q, k = 5))
       .select(col("query_id"), col("rank"), col("vec_id"), round6("cos"),
         round6("recall_at_k"))
@@ -6738,14 +6745,14 @@ object SparkEntry {
       |  floor(cov.s / n.n * 1e6 + 0.5) / 1e6 AS cov
       |FROM cov, n ORDER BY i, j""".stripMargin
 
-  /** Composed IVF-PQ probe ([[graft.ext.Pq.ivfPqTopKReplayable]]): the
+  /** Composed IVF-PQ probe ([[graft.ext.Pq.ivfPqTopK]]): the
     * production FAISS-style index — coarse-quantizer cell pruning plus
     * PQ-ADC candidate scoring — with BOTH quantizers pinned, so one
     * DuckDB replay covers assignment, nprobe probing, encode, both
     * LUTs, the ordered score folds, and the final rank. */
   private def ivfpqReplayTopk(s: SparkSession, dir: String): DataFrame =
-    ext.Pq.ivfPqTopKReplayable(Tables.embeddings(s, dir), similarityQueries(s, dir),
-        k = 5, dim = 64, nlist = 8, nprobe = 3, m = 8, ksub = 8)
+    ext.Pq.ivfPqTopK(Tables.embeddings(s, dir), similarityQueries(s, dir), k = 5,
+        ext.Similarity.integerPlanes(64, 8), ext.Pq.integerCodebooks(8, 8, 8), nprobe = 3)
       .select(col("query_id"), col("rank"), col("vec_id"), round6("cos"))
 
   private def ivfpqReplaySql: String =

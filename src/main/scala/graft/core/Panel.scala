@@ -74,16 +74,22 @@ object Panel {
       .toDF()
   }
 
-  /** (date, value) order of a series: null date first, then time to the
+  /** Time order of a series: a null date first, then time to the
     * nanosecond (`Timestamp.compareTo`, unlike `getTime`, keeps the
-    * sub-millisecond digits), then value. The `sortWithinPartitions`
-    * order of Periodogram and WeightedBins. */
+    * sub-millisecond digits). The `sortWithinPartitions` order of
+    * Periodogram and WeightedBins, and the date order of every
+    * per-series and per-pair kernel. */
+  val DateOrder: Ordering[Timestamp] = new Ordering[Timestamp] {
+    def compare(a: Timestamp, b: Timestamp): Int =
+      if (a == null) { if (b == null) 0 else -1 }
+      else if (b == null) 1
+      else a.compareTo(b)
+  }
+
+  /** (date, value) order of a series: [[DateOrder]], then value. */
   private object SeriesOrder extends Ordering[(String, String, Timestamp, Double)] {
     def compare(a: (String, String, Timestamp, Double), b: (String, String, Timestamp, Double)): Int = {
-      val t =
-        if (a._3 == null) { if (b._3 == null) 0 else -1 }
-        else if (b._3 == null) 1
-        else a._3.compareTo(b._3)
+      val t = DateOrder.compare(a._3, b._3)
       if (t != 0) t else java.lang.Double.compare(a._4, b._4)
     }
   }

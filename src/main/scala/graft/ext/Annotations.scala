@@ -174,24 +174,12 @@ object Annotations {
         col("m").as("vote_label"), col("pi"))
   }
 
-  /** One EM fit, both outputs: ([[dawidSkene]]'s posterior grid,
-    * [[dawidSkeneModel]]'s confusion grid) sharing the SAME pinned
-    * per-round state — a caller persisting both (the standing-model
-    * deployment shape: fit once per labeling batch, read many) pays the
-    * EM once instead of twice. Requires rounds ≥ 1 (the model needs an
-    * M-step). */
-  def dawidSkeneFit(votes: DataFrame, rounds: Int = 2, smoothing: Double = 0.01,
-      idCol: String = "doc_id",
-      annotatorCol: String = "annotator",
-      labelCol: String = "label"): (DataFrame, DataFrame) = {
-    val (post, conf, _) =
-      dawidSkeneFitAll(votes, rounds, smoothing, idCol, annotatorCol, labelCol)
-    (post, conf)
-  }
-
-  /** [[dawidSkeneFit]] plus the [[dawidSkeneTrace]] read-out from the
-    * SAME pinned per-round state — one EM pays for all three standing
-    * artifacts (posteriors, confusions, convergence trace). */
+  /** One EM fit, all three outputs: ([[dawidSkene]]'s posterior grid,
+    * [[dawidSkeneModel]]'s confusion grid, the [[dawidSkeneTrace]]
+    * read-out) sharing the SAME pinned per-round state — a caller
+    * persisting them (the standing-model deployment shape: fit once per
+    * labeling batch, read many) pays the EM once instead of three times.
+    * Requires rounds ≥ 1 (the model needs an M-step). */
   def dawidSkeneFitAll(votes: DataFrame, rounds: Int = 2, smoothing: Double = 0.01,
       idCol: String = "doc_id",
       annotatorCol: String = "annotator",

@@ -25,9 +25,10 @@ import org.apache.spark.sql.functions._
   *
   * Determinism: ties on equal prototypicality break by vec_id ascending
   * (the [[TopKAgg]] rule), so the kept set is a pure function of
-  * (centroids, quota, variant) — replayed bit-for-bit by the driver
-  * oracle through the pinned-quantizer twin
-  * ([[clusterBalancedKeepReplayable]]).
+  * (centroids, quota, variant). The centroids are a value the caller
+  * passes: trained ([[Similarity.trainIvfCentroids]]) or pinned
+  * ([[Similarity.integerPlanes]]), with which the driver oracle replays
+  * assignment, score and quota cut bit-for-bit.
   */
 object ClusterCurate {
 
@@ -110,20 +111,4 @@ object ClusterCurate {
         col("sv.vec_id").as("vec_id"), emitted.as("proto_cos"))
       .orderBy("cell", "rank")
   }
-
-  /** Replayable twin: [[clusterBalancedKeep]] against the pinned
-    * [[Similarity.integerPlanes]] quantizer, so a SQL oracle regenerates
-    * the centroids, replays the max-cosine assignment (same (cos desc,
-    * idx asc) tie rule), the prototypicality score, and the per-cluster
-    * quota cut end to end. Training only moves centroid VALUES. */
-  def clusterBalancedKeepReplayable(
-      embeddings: DataFrame,
-      quota: Int,
-      keepMostPrototypical: Boolean = true,
-      dim: Int = 64,
-      nlist: Int = 8,
-      idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame =
-    clusterBalancedKeep(embeddings, Similarity.integerPlanes(dim, nlist),
-      quota, keepMostPrototypical, idCol, embCol)
 }

@@ -287,14 +287,6 @@ object Dedup {
       .otherwise(array(array_join(toks, " ")))
   }
 
-  /** 64-bit k-shingle hashes (Column form): hash of each string shingle.
-    * NOTE: do not build this from nested array lambdas referencing a
-    * derived array — Catalyst inlines the inner array into the outer
-    * lambda and evaluation goes quadratic. The string path is linear; the
-    * bulk pipeline below avoids strings entirely via posexplode + lead. */
-  def shingleHashes(text: Column, k: Int): Column =
-    transform(array_distinct(shingles(text, k)), s => xxhash64(s))
-
   // ---- MinHash + LSH -------------------------------------------------------
 
   /** One row per (doc, shingle-hash): posexplode the token stream, hash
@@ -332,29 +324,6 @@ object Dedup {
       .filter((col("ntok") >= k && col("pos") <= col("ntok") - k) ||
         (col("ntok") < k && col("pos") === 0))
       .select("doc_id", "sh")
-  }
-
-  /** The i-th minhash permutation aggregate: min over xxhash64(shingle, i)
-    * — overflow-free under ANSI mode, one codegen'd min-aggregate per
-    * hash. Used by minhashSignatures; [[lshCore]] inlines the same scheme
-    * via its default xxhash64 `perm`, so the signature and near-dup entry
-    * points agree on permutations. */
-  private def signatureAggs(numHashes: Int): Seq[Column] =
-    (0 until numHashes).map(i => min(xxhash64(col("sh"), lit(i))).as(s"mh_$i"))
-
-  /** Per-doc MinHash signature: explode shingles once, derive `numHashes`
-    * permutations from a single xxhash64 and take the min of each —
-    * `numHashes` cheap codegen'd min-aggregates, one shuffle (groupBy
-    * reuses the window's doc_id partitioning). */
-  def minhashSignatures(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      shingleK: Int = 3,
-      numHashes: Int = 32): DataFrame = {
-    val rows = shingleHashRows(docs, idCol, textCol, shingleK)
-    val aggs = signatureAggs(numHashes)
-    rows.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
   /** Candidate near-duplicate pairs via banded LSH + exact signature-based
@@ -847,8 +816,10 @@ object Dedup {
     dot / (na * nb)
   }
 
-  /** Deterministic random hyperplanes for sign-LSH. */
-  private[ext] def hyperplanes(dim: Int, bits: Int, seed: Long): Array[Array[Double]] = {
+  /** Deterministic random hyperplanes for sign-LSH: `bits` Gaussian
+    * planes of `dim` coordinates drawn from `seed` — the seeded model that
+    * [[Similarity.lshTopK]] takes as its `planes`. */
+  def hyperplanes(dim: Int, bits: Int, seed: Long): Array[Array[Double]] = {
     val rng = new scala.util.Random(seed)
     Array.fill(bits)(Array.fill(dim)(rng.nextGaussian()))
   }

@@ -242,7 +242,8 @@ object Negatives {
       k, marginBand, idCol, embCol, labelCol)
 
   /** Corpus-wide hard-negative mining: EVERY corpus row is an anchor, and
-    * the candidate generator is the IVF cell equijoin instead of a
+    * the candidate generator is the IVF cell equijoin under the quantizer
+    * `cents` (e.g. [[Similarity.trainIvfCentroids]]) instead of a
     * broadcast scan — anchors explode to their `nprobe` nearest cells,
     * candidates sit in their one assigned cell, and the join key is the
     * cell id. Approximate exactly like [[Similarity.ivfTopK]] (a negative
@@ -257,15 +258,12 @@ object Negatives {
   def hardNegativesCelled(
       corpus: DataFrame,
       k: Int,
-      nlist: Int = 16,
-      nprobe: Int = 3,
-      iters: Int = 3,
+      cents: Array[Array[Double]],
+      nprobe: Int,
       idCol: String = "vec_id",
       embCol: String = "embedding",
       labelCol: String = "label"): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val topk = udaf(new TopKAgg(k))
-    val cents = Similarity.trainIvfCentroids(corpus, idCol, embCol, nlist, iters)
     val labels = corpus.select(col(idCol).cast("long").as("vec_id"),
       col(labelCol).as("label"))
     val assigned = Similarity.assignCells(corpus, cents, idCol, embCol)
@@ -274,16 +272,9 @@ object Negatives {
     val anchors = assigned.select(
       col("vec_id").as("query_id"), col("emb").as("qemb"), col("label").as("qlabel"),
       explode(probe(col("emb"))).as("cell"))
-    anchors.join(assigned, "cell")
+    TopK.rank(anchors.join(assigned, "cell")
       .filter(col("label").isNotNull && col("qlabel").isNotNull &&
         col("label") =!= col("qlabel"))
-      .withColumn("cos", Dedup.cosine(col("emb"), col("qemb")))
-      .filter(col("vec_id").isNotNull && col("cos").isNotNull && !isnan(col("cos")))
-      .groupBy("query_id")
-      .agg(topk(col("vec_id"), col("cos")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "sv")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("sv.vec_id").as("vec_id"), col("sv.cos").as("cos"))
-      .orderBy("query_id", "rank")
+      .withColumn("cos", Dedup.cosine(col("emb"), col("qemb"))), k)
   }
 }

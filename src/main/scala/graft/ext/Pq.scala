@@ -38,20 +38,27 @@ import org.apache.spark.sql.functions._
   * precedent: production codebooks (m·ksub·dsub doubles) are far past
   * sane literal embedding, the per-row FLOPs dominate either way, and
   * the while-loop left-to-right accumulation is exactly replayable by a
-  * SQL `list_reduce` fold — which is what makes [[pqTopKReplayable]] a
-  * hard-oracle twin of the full encode→LUT→score→rank pipeline.
+  * SQL `list_reduce` fold.
+  *
+  * Model as value: every operator takes its model (codebooks, IVF
+  * centroids, OPQ rotation) as a plain argument — trained
+  * ([[trainPqCodebooks]], [[trainOpq]], [[Similarity.trainIvfCentroids]])
+  * or pinned ([[integerCodebooks]], [[signedPermutationRotation]],
+  * [[Similarity.integerPlanes]]). With pinned models a SQL oracle
+  * replays the full encode → LUT → score → rank pipeline, so the
+  * driver's replay queries run the same operators a user calls.
   *
   * Id contract matches the other topK variants: numeric unique ids,
   * emitted as `vec_id: bigint`.
   */
 object Pq {
 
-  /** Deterministic INTEGER-coordinate codebooks for the replayable twin
+  /** Deterministic INTEGER-coordinate codebooks, the pinned PQ model
     * (the [[Similarity.integerPlanes]] recipe indexed by (subspace, code,
     * dim)): cb(j)(c)(d) = ((2654435761·((j·ksub+c)·dsub + d + 1) + 97)
     * mod 1000000007) − 500000003 — exact in a double, regenerable from
     * three loop indices with BIGINT arithmetic in any SQL engine. */
-  private[graft] def integerCodebooks(m: Int, ksub: Int, dsub: Int): Array[Array[Array[Double]]] =
+  def integerCodebooks(m: Int, ksub: Int, dsub: Int): Array[Array[Array[Double]]] =
     Array.tabulate(m)(j => Array.tabulate(ksub)(c => Array.tabulate(dsub)(d =>
       ((2654435761L * ((j.toLong * ksub + c) * dsub + d + 1) + 97L) % 1000000007L
         - 500000003L).toDouble)))
@@ -258,38 +265,10 @@ object Pq {
     val recNormSq = aggregate(
       transform(col("codes"), (c, j) => element_at(nsqLit, j * ksub + c + 1)),
       lit(0.0d), (a, v) => a + v)
-    val topk = udaf(new TopKAgg(k))
-    encoded
+    TopK.rank(encoded
       .select(col("vec_id").cast("long").as("vec_id"), col("codes"))
       .crossJoin(broadcast(qBase))
-      .withColumn("cos", adcDot / (col("qnorm") * sqrt(recNormSq)))
-      .filter(col("vec_id").isNotNull && col("cos").isNotNull && !isnan(col("cos")))
-      .groupBy("query_id")
-      .agg(topk(col("vec_id"), col("cos")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "sv")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("sv.vec_id").as("vec_id"), col("sv.cos").as("cos"))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Train + encode + search in one call — the convenience form; real
-    * deployments call [[trainPqCodebooks]] once, persist [[pqEncode]]'s
-    * output, and search with [[pqTopK]]. */
-  def pqTopKTrained(
-      embeddings: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      dim: Int,
-      m: Int = 8,
-      ksub: Int = 256,
-      iters: Int = 3,
-      trainSampleMod: Long = 1L,
-      idCol: String = "vec_id",
-      embCol: String = "embedding",
-      queryIdCol: String = "query_id",
-      queryEmbCol: String = "query_emb"): DataFrame = {
-    val cb = trainPqCodebooks(embeddings, dim, m, ksub, iters, trainSampleMod, idCol, embCol)
-    pqTopK(pqEncode(embeddings, cb, idCol, embCol), queries, cb, k, queryIdCol, queryEmbCol)
+      .withColumn("cos", adcDot / (col("qnorm") * sqrt(recNormSq))), k)
   }
 
   /** IVF-PQ: the composed production ANN index (the public FAISS
@@ -366,64 +345,8 @@ object Pq {
     val recNormSq = aggregate(
       transform(col("codes"), (c, j) => element_at(nsqLit, j * ksub + c + 1)),
       lit(0.0d), (a, v) => a + v)
-    val topk = udaf(new TopKAgg(k))
-    probed.join(index, "cell")
-      .withColumn("cos", adcDot / (col("qnorm") * sqrt(recNormSq)))
-      .filter(col("vec_id").isNotNull && col("cos").isNotNull && !isnan(col("cos")))
-      .groupBy("query_id")
-      .agg(topk(col("vec_id").cast("long"), col("cos")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "sv")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("sv.vec_id").as("vec_id"), col("sv.cos").as("cos"))
-      .orderBy("query_id", "rank")
-  }
-
-  /** SQL-replayable twin of the composed IVF-PQ pipeline: BOTH pinned
-    * quantizers — [[Similarity.integerPlanes]] centroids and
-    * [[integerCodebooks]] — through the production assignment, probing,
-    * encode, and ADC machinery, so one oracle replays cell pruning AND
-    * code scoring end-to-end. */
-  def ivfPqTopKReplayable(
-      embeddings: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      dim: Int = 64,
-      nlist: Int = 8,
-      nprobe: Int = 3,
-      m: Int = 8,
-      ksub: Int = 8,
-      idCol: String = "vec_id",
-      embCol: String = "embedding",
-      queryIdCol: String = "query_id",
-      queryEmbCol: String = "query_emb"): DataFrame = {
-    require(dim % m == 0, s"dim=$dim must divide into m=$m subspaces")
-    ivfPqTopK(embeddings, queries, k,
-      Similarity.integerPlanes(dim, nlist), integerCodebooks(m, ksub, dim / m),
-      nprobe, idCol, embCol, queryIdCol, queryEmbCol)
-  }
-
-  /** SQL-replayable twin of the full PQ pipeline (the [[Similarity
-    * .ivfTopKReplayable]] recipe): the IDENTICAL encode → LUT → ADC score
-    * → k-capped rank path with [[integerCodebooks]] pinned in place of
-    * trained ones, so an oracle regenerates every codebook entry from
-    * three loop indices and replays argmin encoding, both lookup tables,
-    * the ordered score folds, and the final (cos desc, vec_id) rank
-    * bit-for-bit. Training only moves codebook VALUES; the twin pins the
-    * machinery. */
-  def pqTopKReplayable(
-      embeddings: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      dim: Int = 64,
-      m: Int = 8,
-      ksub: Int = 8,
-      idCol: String = "vec_id",
-      embCol: String = "embedding",
-      queryIdCol: String = "query_id",
-      queryEmbCol: String = "query_emb"): DataFrame = {
-    require(dim % m == 0, s"dim=$dim must divide into m=$m subspaces")
-    val cb = integerCodebooks(m, ksub, dim / m)
-    pqTopK(pqEncode(embeddings, cb, idCol, embCol), queries, cb, k, queryIdCol, queryEmbCol)
+    TopK.rank(probed.join(index, "cell")
+      .withColumn("cos", adcDot / (col("qnorm") * sqrt(recNormSq))), k)
   }
 
   // ---- OPQ (Ge et al. 2013, "Optimized Product Quantization") -------------
@@ -433,7 +356,7 @@ object Pq {
     * fresh code each round, the [[Similarity.assignUdf]] precedent).
     * Wrong-length / null vectors map to null, matching the other
     * encoders' guards. */
-  private def rotateUdf(r: Array[Array[Double]]): UserDefinedFunction = {
+  private[graft] def rotateUdf(r: Array[Array[Double]]): UserDefinedFunction = {
     val frozen = r.map(_.clone())
     val d = frozen.length
     udf { (v: Seq[Double]) =>
@@ -512,9 +435,10 @@ object Pq {
     * accumulation (dim²-double partial state per partition); driver
     * parts: the dim×dim SVD (Breeze — model numerics, same policy as the
     * PCA eigendecomposition and the Lloyd argmax). Iterative optimizer ⇒
-    * declared non-oracle; the machinery is pinned by
-    * [[opqTopKReplayable]]. Returns (rotation, codebooks) where rotation
-    * is row-major R with rotated = R·x. */
+    * declared non-oracle; the machinery is pinned by the driver's
+    * q_opq_replay_topk, which runs [[opqTopK]] with a pinned model.
+    * Returns (rotation, codebooks) where rotation is row-major R with
+    * rotated = R·x. */
   def trainOpq(
       embeddings: DataFrame,
       dim: Int,
@@ -562,41 +486,53 @@ object Pq {
     } finally { sample.unpersist(false); () }
   }
 
-  /** Encode a corpus against an OPQ model: rotate, then [[pqEncode]].
+  /** Encode a corpus against an OPQ model: rotate, then encode.
     * Persist-once like the plain PQ index. Add-batch with a retained
     * (rotation, codebooks) pair composes exactly like [[pqEncode]]'s —
     * the rotation is global model state with the same staleness
     * exposure; measured 0.46 stale vs 0.49 retrained recall@10 per 20%
     * unseen-distribution growth (round 11, ARCHITECTURE.md; advice in
-    * [[pqEncode]]'s scaladoc). */
+    * [[pqEncode]]'s scaladoc).
+    *
+    * How the rotation is applied is read off its value: a signed
+    * permutation (every row one ±1, every column hit once — e.g.
+    * [[signedPermutationRotation]] or the identity) is FUSED into the
+    * encode loops ([[encodePermUdf]] — plain-PQ cost, no intermediate
+    * rotated array); any other rotation (e.g. [[trainOpq]]'s) takes the
+    * dense [[rotateUdf]] multiply and then [[pqEncode]]. On finite input
+    * both give the same codes (±1·x is exact). Vectors whose length is
+    * not the rotation's dimension are dropped. */
   def opqEncode(
       embeddings: DataFrame,
       rotation: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]],
       idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame =
-    opqEncodeWith(embeddings, rotation.length, c => rotateUdf(rotation)(c),
-      codebooks, idCol, embCol)
-
-  private def opqEncodeWith(
-      embeddings: DataFrame,
-      d: Int,
-      rotFn: Column => Column,
-      codebooks: Array[Array[Array[Double]]],
-      idCol: String,
-      embCol: String): DataFrame =
-    pqEncode(
-      embeddings
-        .select(col(idCol).cast("long").as("vec_id"),
-          col(embCol).cast("array<double>").as("emb"))
-        .filter(size(col("emb")) === d)
-        .select(col("vec_id"), rotFn(col("emb")).as("emb")),
-      codebooks, "vec_id", "emb")
+      embCol: String = "embedding"): DataFrame = {
+    val d = rotation.length
+    val (m, _, dsub) = requireShape(codebooks)
+    require(m * dsub <= d, s"codebooks span ${m * dsub} dims, the rotation only $d")
+    val sized = embeddings
+      .select(col(idCol).cast("long").as("vec_id"),
+        col(embCol).cast("array<double>").as("emb"))
+      .filter(size(col("emb")) === d)
+    signedPermOf(rotation) match {
+      case Some((perm, signs)) =>
+        sized.select(col("vec_id"), encodePermUdf(codebooks, perm, signs)(col("emb")).as("codes"))
+      case None =>
+        pqEncode(sized.select(col("vec_id"), rotateUdf(rotation)(col("emb")).as("emb")),
+          codebooks, "vec_id", "emb")
+    }
+  }
 
   /** ADC top-k over an OPQ-encoded corpus: queries rotate through the
     * SAME R (model-sized work — the corpus side scans codes only), then
     * [[pqTopK]]. R orthonormal preserves dots and norms, so the ADC
-    * cosine in rotated space estimates the original-space cosine. */
+    * cosine in rotated space estimates the original-space cosine. A
+    * signed-permutation R is applied as the codegen'd element shuffle
+    * [[signedPermColumn]], after dropping queries whose length is not
+    * R's dimension (ANSI `element_at` would throw on them); any other R
+    * goes through the dense [[rotateUdf]], which maps such queries to
+    * null. Either way they score nothing. */
   def opqTopK(
       encoded: DataFrame,
       queries: DataFrame,
@@ -604,22 +540,17 @@ object Pq {
       codebooks: Array[Array[Array[Double]]],
       k: Int,
       queryIdCol: String = "query_id",
-      queryEmbCol: String = "query_emb"): DataFrame =
-    opqTopKWith(encoded, queries, c => rotateUdf(rotation)(c), codebooks, k,
-      queryIdCol, queryEmbCol)
-
-  private def opqTopKWith(
-      encoded: DataFrame,
-      queries: DataFrame,
-      rotFn: Column => Column,
-      codebooks: Array[Array[Array[Double]]],
-      k: Int,
-      queryIdCol: String,
-      queryEmbCol: String): DataFrame =
-    pqTopK(encoded,
-      queries.select(col(queryIdCol).as("query_id"),
-        rotFn(col(queryEmbCol).cast("array<double>")).as("query_emb")),
-      codebooks, k)
+      queryEmbCol: String = "query_emb"): DataFrame = {
+    val qemb = col(queryEmbCol).cast("array<double>")
+    val rotated = signedPermOf(rotation) match {
+      case Some((perm, signs)) =>
+        queries.filter(size(qemb) === rotation.length)
+          .select(col(queryIdCol).as("query_id"), signedPermColumn(qemb, perm, signs).as("query_emb"))
+      case None =>
+        queries.select(col(queryIdCol).as("query_id"), rotateUdf(rotation)(qemb).as("query_emb"))
+    }
+    pqTopK(encoded, rotated, codebooks, k)
+  }
 
   /** Apply a SIGNED-PERMUTATION rotation as a pure codegen expression:
     * output slot r = sign_r · emb[perm(r)] — one `element_at` per slot
@@ -632,11 +563,9 @@ object Pq {
     * cost was Seq boxing + 4096 multiplies per row for what is a 64-way
     * shuffle of the array. Callers guard length (`size(emb) === dim`)
     * before applying, matching the UDF's wrong-length → null contract. */
-  private[graft] def signedPermColumn(emb: Column, rot: Array[Array[Double]]): Column = {
-    val (perm, signs) = signedPermOf(rot)
+  private def signedPermColumn(emb: Column, perm: Array[Int], signs: Array[Double]): Column =
     array(perm.indices.map(r =>
       lit(signs(r)) * element_at(emb, perm(r) + 1)): _*)
-  }
 
   /** [[encodeUdf]] with a signed-permutation rotation FUSED into the
     * argmin loops: slot i of the rotated vector is read as
@@ -645,7 +574,7 @@ object Pq {
     * but the corpus-side cost drops back to plain-PQ shape — the
     * intermediate 64-slot array build + ArrayData→Seq reconversion per
     * row was most of q_opq_replay_topk's 3–4× gap over q_pq_replay_topk. */
-  private[graft] def encodePermUdf(cb: Array[Array[Array[Double]]],
+  private def encodePermUdf(cb: Array[Array[Array[Double]]],
       perm: Array[Int], signs: Array[Double]): UserDefinedFunction = {
     val frozen = cb.map(_.map(_.clone()))
     val m = frozen.length
@@ -680,67 +609,32 @@ object Pq {
     }
   }
 
-  /** (perm, signs) of a signed-permutation rotation matrix: slot r of the
-    * rotated vector = signs(r) · emb(perm(r)). Throws on a non-signed-
-    * permutation input. */
-  private[graft] def signedPermOf(rot: Array[Array[Double]]): (Array[Int], Array[Double]) = {
-    val slots = rot.map { row =>
+  /** (perm, signs) of a signed-permutation rotation matrix — slot r of
+    * the rotated vector = signs(r) · emb(perm(r)) — or None when `rot` is
+    * not one: not square, a row without exactly one ±1 entry, or a
+    * column read twice. */
+  private def signedPermOf(rot: Array[Array[Double]]): Option[(Array[Int], Array[Double])] = {
+    val d = rot.length
+    val perm = rot.map { row =>
       val j = row.indexWhere(_ != 0.0)
-      require(j >= 0 && row.count(_ != 0.0) == 1 && math.abs(row(j)) == 1.0,
-        "not a signed-permutation rotation")
-      (j, row(j))
+      if (row.length == d && j >= 0 && row.count(_ != 0.0) == 1 && math.abs(row(j)) == 1.0) j
+      else -1
     }
-    (slots.map(_._1), slots.map(_._2))
+    if (perm.contains(-1) || perm.distinct.length != d) None
+    else Some((perm, perm.indices.map(r => rot(r)(perm(r))).toArray))
   }
 
-  /** Deterministic SIGNED-PERMUTATION rotation for the replayable twin:
+  /** Deterministic SIGNED-PERMUTATION rotation, the pinned OPQ model:
     * output r reads source index perm(r) (the argsort of (mixHash(i), i)
     * over 0..dim−1) with sign from mixHash(dim + r) parity. A signed
     * permutation IS orthonormal, and both parts regenerate from BIGINT
     * arithmetic + one ORDER BY in SQL. */
-  private[graft] def signedPermutationRotation(dim: Int): Array[Array[Double]] = {
+  def signedPermutationRotation(dim: Int): Array[Array[Double]] = {
     val perm = (0 until dim).sortBy(i => (Sketches.mixHashLocal(i.toLong), i)).toArray
     Array.tabulate(dim, dim) { (r, j) =>
       if (j == perm(r))
         (if (Sketches.mixHashLocal((dim + r).toLong) % 2 == 0) 1.0 else -1.0)
       else 0.0
     }
-  }
-
-  /** SQL-replayable twin of the full OPQ pipeline: the IDENTICAL
-    * rotate → encode → LUT → ADC → rank path with
-    * [[signedPermutationRotation]] + [[integerCodebooks]] pinned in
-    * place of trained ones. Training only moves parameter VALUES; the
-    * twin pins the machinery. */
-  def opqTopKReplayable(
-      embeddings: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      dim: Int = 64,
-      m: Int = 8,
-      ksub: Int = 8,
-      idCol: String = "vec_id",
-      embCol: String = "embedding",
-      queryIdCol: String = "query_id",
-      queryEmbCol: String = "query_emb"): DataFrame = {
-    require(dim % m == 0, s"dim=$dim must divide into m=$m subspaces")
-    val rot = signedPermutationRotation(dim)
-    val cb = integerCodebooks(m, ksub, dim / m)
-    // the pinned rotation is a signed permutation: the corpus side fuses
-    // it into the encode loops ([[encodePermUdf]] — plain-PQ cost, no
-    // intermediate rotated array), the model-sized query side applies the
-    // codegen'd element shuffle, length-guarded explicitly (ANSI
-    // element_at throws on short arrays where the dense UDF returned
-    // null — same survivor set either way, no-emb queries score nothing).
-    val (perm, signs) = signedPermOf(rot)
-    val encPerm = encodePermUdf(cb, perm, signs)
-    val encoded = embeddings
-      .select(col(idCol).cast("long").as("vec_id"),
-        col(embCol).cast("array<double>").as("emb"))
-      .filter(size(col("emb")) === dim)
-      .select(col("vec_id"), encPerm(col("emb")).as("codes"))
-    opqTopKWith(encoded,
-      queries.filter(size(col(queryEmbCol).cast("array<double>")) === dim),
-      c => signedPermColumn(c, rot), cb, k, queryIdCol, queryEmbCol)
   }
 }

@@ -148,21 +148,13 @@ object Quantize {
       .agg(stage1(col("vec_id"), -col("ham").cast("double")).as("top"))
       .select(col("query_id"), explode(col("top")).as("sv"))
       .select(col("query_id"), col("sv.vec_id").as("vec_id"))
-    val stage2 = udaf(new TopKAgg(k))
-    embeddings
+    TopK.rank(embeddings
       .select(col(idCol).cast("long").as("vec_id"),
         col(embCol).cast("array<double>").as("emb"))
       .join(broadcast(cands), Seq("vec_id"))
       .join(broadcast(queries.select(col(queryIdCol).as("query_id"),
         col(queryEmbCol).cast("array<double>").as("qemb"))), Seq("query_id"))
-      .withColumn("cos", Dedup.cosine(col("emb"), col("qemb")))
-      .filter(col("vec_id").isNotNull && col("cos").isNotNull && !isnan(col("cos")))
-      .groupBy("query_id")
-      .agg(stage2(col("vec_id"), col("cos")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "sv")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("sv.vec_id").as("vec_id"), col("sv.cos").as("cos"))
-      .orderBy("query_id", "rank")
+      .withColumn("cos", Dedup.cosine(col("emb"), col("qemb"))), k)
   }
 
   /** Convenience: build the signature index inline and search it. For a

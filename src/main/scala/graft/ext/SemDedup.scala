@@ -17,8 +17,13 @@ import org.apache.spark.sql.functions._
   * the corpus is clustered — the published result is that it removes
   * semantic templates/boilerplate lexical dedup misses.
   *
+  * The quantizer is a value the caller passes (`cents`): trained by
+  * [[Similarity.trainIvfCentroids]] or pinned by
+  * [[Similarity.integerPlanes]].
+  *
   * Scale shape (the 100 TB audit):
-  *   - the quantizer trains on a SAMPLE (`trainSampleMod`), model-sized;
+  *   - the quantizer trains on a SAMPLE (`sampleMod` of
+  *     [[Similarity.trainIvfCentroids]]), model-sized;
   *   - assignment is one map-side pass (the amortized [[Similarity.assignCells]]
   *     path — at a standing corpus, write the assigned frame bucketed by
   *     cell and re-dedup never re-assigns);
@@ -50,40 +55,21 @@ object SemDedup {
       .filter(!isnan(col("cos")) && col("cos") >= lit(threshold))
   }
 
-  /** Production pairs: Lloyd-trained quantizer (sampled), then
-    * [[pairsFromAssigned]]. */
+  /** Near-duplicate pairs under the quantizer `cents`: assign every
+    * vector to its max-cosine cell ([[Similarity.assignCells]], (cos desc,
+    * idx asc) tie rule), then [[pairsFromAssigned]]. `cents` is the model
+    * — [[Similarity.trainIvfCentroids]] on a sample for production, the
+    * pinned [[Similarity.integerPlanes]] for the driver's oracle, which
+    * replays assignment, candidate generation and the threshold cut.
+    * Centroids only move WHERE cell boundaries fall, never the
+    * machinery. */
   def semanticNearDupPairs(
       embeddings: DataFrame,
-      threshold: Double = 0.9,
-      nlist: Int = 64,
-      iters: Int = 3,
-      trainSampleMod: Long = 1L,
-      idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
-    val cents = Similarity.trainIvfCentroids(embeddings, idCol, embCol, nlist, iters,
-      trainSampleMod)
-    pairsFromAssigned(Similarity.assignCells(embeddings, cents, idCol, embCol), threshold)
-  }
-
-  /** SQL-replayable twin (the lsh/ivfTopKReplayable recipe applied to
-    * semantic dedup): the IDENTICAL pipeline — same cell-assignment
-    * expression with its (cos desc, idx asc) tie rule, same within-cell
-    * candidate equijoin, same native-cosine threshold — but with
-    * [[Similarity.integerPlanes]] as PINNED centroids, so an oracle can
-    * regenerate the quantizer from two loop indices and replay
-    * assignment, candidate generation, and the threshold cut exactly.
-    * Trained centroids only change WHERE cell boundaries fall, not the
-    * machinery this twin pins. */
-  def semanticNearDupPairsReplayable(
-      embeddings: DataFrame,
+      cents: Array[Array[Double]],
       threshold: Double,
-      dim: Int = 64,
-      nlist: Int = 8,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame =
-    pairsFromAssigned(
-      Similarity.assignCells(embeddings, Similarity.integerPlanes(dim, nlist), idCol, embCol),
-      threshold)
+    pairsFromAssigned(Similarity.assignCells(embeddings, cents, idCol, embCol), threshold)
 
   /** Cross-corpus semantic contamination pairs: embedding-space analog of
     * the n-gram benchmark decontamination (TextStats.contaminatedDocIds)
@@ -111,37 +97,18 @@ object SemDedup {
       .filter(!isnan(col("cos")) && col("cos") >= lit(threshold))
   }
 
-  /** End-to-end semantic dedup: pairs → connected components → keep each
-    * component's minimum-id vector; vectors in no component pass
-    * through. Returns the surviving rows of `embeddings` unchanged. */
+  /** End-to-end semantic dedup under the quantizer `cents`: pairs →
+    * connected components → keep each component's minimum-id vector;
+    * vectors in no component pass through. Returns the surviving rows of
+    * `embeddings` unchanged. */
   def semanticDeduplicate(
       embeddings: DataFrame,
-      threshold: Double = 0.9,
-      nlist: Int = 64,
-      iters: Int = 3,
-      trainSampleMod: Long = 1L,
+      cents: Array[Array[Double]],
+      threshold: Double,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val pairs = semanticNearDupPairs(embeddings, threshold, nlist, iters, trainSampleMod,
-      idCol, embCol).select("doc_a", "doc_b")
-    dropLosers(embeddings, pairs, idCol)
-  }
-
-  /** Replayable-twin end-to-end form (pinned quantizer) — what the
-    * driver's q_semdedup_keep oracle replays. */
-  def semanticDeduplicateReplayable(
-      embeddings: DataFrame,
-      threshold: Double,
-      dim: Int = 64,
-      nlist: Int = 8,
-      idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame =
-    dropLosers(embeddings,
-      semanticNearDupPairsReplayable(embeddings, threshold, dim, nlist, idCol, embCol)
-        .select("doc_a", "doc_b"),
-      idCol)
-
-  private def dropLosers(embeddings: DataFrame, pairs: DataFrame, idCol: String): DataFrame = {
+    val pairs = semanticNearDupPairs(embeddings, cents, threshold, idCol, embCol)
+      .select("doc_a", "doc_b")
     val losers = Dedup.connectedComponents(pairs)
       .filter(col("id") =!= col("component"))
       .select(col("id").as("__loser_id"))

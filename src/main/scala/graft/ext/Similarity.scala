@@ -9,6 +9,14 @@ import org.apache.spark.sql.functions._
   * plus all 1-bit-flip neighbors — multiprobe — so recall degrades
   * gracefully instead of falling off a bucket boundary).
   *
+  * Model as value: each index has ONE search operator, and it takes its
+  * model as a plain argument — IVF centroids (`cents`) and LSH
+  * hyperplanes (`planes`). Callers pick the model: trained
+  * ([[trainIvfCentroids]]), seeded ([[Dedup.hyperplanes]]) or pinned
+  * ([[integerPlanes]], which a SQL oracle regenerates from loop indices,
+  * so the driver's replay queries run the very operator a user calls).
+  * Every path ranks through the shared [[TopK.rank]] step.
+  *
   * Scale notes: brute force is O(N·Q) with the query side broadcast — right
   * whenever Q is small; the LSH path turns the scan into a bucket-equijoin
   * (one shuffle on bucket id) whose probe fan-out is bits+1 buckets per
@@ -54,19 +62,11 @@ object Similarity {
       queryIdCol: String = "query_id",
       queryEmbCol: String = "query_emb"): DataFrame = {
     requireNumericId(embeddings, idCol)
-    val topk = udaf(new TopKAgg(k))
-    embeddings
+    TopK.rank(embeddings
       .select(col(idCol).cast("long").as("vec_id"), col(embCol).cast("array<double>").as("emb"))
       .crossJoin(broadcast(queries.select(
         col(queryIdCol).as("query_id"), col(queryEmbCol).cast("array<double>").as("qemb"))))
-      .withColumn("cos", Dedup.cosine(col("emb"), col("qemb")))
-      .filter(col("vec_id").isNotNull && col("cos").isNotNull && !isnan(col("cos")))
-      .groupBy("query_id")
-      .agg(topk(col("vec_id"), col("cos")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "sv")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("sv.vec_id").as("vec_id"), col("sv.cos").as("cos"))
-      .orderBy("query_id", "rank")
+      .withColumn("cos", Dedup.cosine(col("emb"), col("qemb"))), k)
   }
 
   /** Matryoshka-truncation retrieval (Kusupati et al. 2022, "Matryoshka
@@ -200,7 +200,7 @@ object Similarity {
         // measured ~2 s/iteration of pure compilation. The UDF costs
         // nothing to plan, and training runs on a sample by design; the
         // one-time full-corpus assignment in ivfTopK uses codegen only
-        // while the quantizer is small (see ivfTopKWithCentroids).
+        // while the quantizer is small (see assignCells).
         val assign = assignUdf(cents)
         // assign BEFORE exploding: a projection inside the generate's select
         // list is re-evaluated once per exploded row (64× per vector); the
@@ -224,51 +224,26 @@ object Similarity {
   }
 
   /** IVF top-k: brute-force cosine restricted to the `nprobe` cells whose
-    * centroids are nearest the query. Same k-capped aggregation as the
+    * centroids `cents` are nearest the query. Same k-capped ranking as the
     * other paths; the candidate set is the probed cells' contents —
     * N·nprobe/nlist expected, independent of the query count, and the
     * cell equijoin shuffles on cell id exactly like the LSH bucket join.
-    * Recall vs brute force is validated in DedupSpec. */
+    * `cents` is the model: [[trainIvfCentroids]] for a trained quantizer,
+    * [[integerPlanes]] for the pinned one the driver's oracle replays
+    * (assignment, probing, cosine and rank). Recall vs brute force is
+    * validated in DedupSpec. */
   def ivfTopK(
       embeddings: DataFrame,
       queries: DataFrame,
       k: Int,
-      nlist: Int = 16,
-      nprobe: Int = 3,
-      iters: Int = 3,
-      trainSampleMod: Long = 1L,
-      idCol: String = "vec_id",
-      embCol: String = "embedding",
-      queryIdCol: String = "query_id",
-      queryEmbCol: String = "query_emb"): DataFrame = {
-    val cents = trainIvfCentroids(embeddings, idCol, embCol, nlist, iters, trainSampleMod)
-    ivfTopKWithCentroids(embeddings, queries, k, cents, nprobe,
-      idCol, embCol, queryIdCol, queryEmbCol)
-  }
-
-  /** SQL-replayable twin of [[ivfTopK]] (the lshTopKReplayable recipe on
-    * the IVF path): the IDENTICAL search pipeline — same codegen'd cell
-    * assignment, same nprobe centroid probing with its (cos desc, idx
-    * desc) tie order, same cell equijoin and k-capped [[TopKAgg]] ranking
-    * — through [[ivfTopKWithCentroids]], but with [[integerPlanes]] as
-    * PINNED centroids instead of Lloyd-trained ones, so an oracle can
-    * regenerate the quantizer from two loop indices and replay
-    * assignment, probing, cosine, and rank exactly. Trained centroids can
-    * only improve recall over these fixed random directions; the twin
-    * pins the search machinery, which training does not change. */
-  def ivfTopKReplayable(
-      embeddings: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      dim: Int = 64,
-      nlist: Int = 8,
-      nprobe: Int = 3,
+      cents: Array[Array[Double]],
+      nprobe: Int,
       idCol: String = "vec_id",
       embCol: String = "embedding",
       queryIdCol: String = "query_id",
       queryEmbCol: String = "query_emb"): DataFrame =
-    ivfTopKWithCentroids(embeddings, queries, k, integerPlanes(dim, nlist), nprobe,
-      idCol, embCol, queryIdCol, queryEmbCol)
+    ivfTopKPreAssigned(assignCells(embeddings, cents, idCol, embCol),
+      queries, k, cents, nprobe, queryIdCol, queryEmbCol)
 
   /** IVF cell assignment as a standalone frame `(vec_id, emb, cell)` —
     * the materializable half of the index. At large nlist the per-vector
@@ -361,30 +336,7 @@ object Similarity {
       cents: Array[Array[Double]],
       nprobe: Int,
       queryIdCol: String = "query_id",
-      queryEmbCol: String = "query_emb"): DataFrame =
-    searchCells(assigned, queries, k, cents, nprobe, queryIdCol, queryEmbCol)
-
-  private[graft] def ivfTopKWithCentroids(
-      embeddings: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      cents: Array[Array[Double]],
-      nprobe: Int,
-      idCol: String,
-      embCol: String,
-      queryIdCol: String,
-      queryEmbCol: String): DataFrame =
-    searchCells(assignCells(embeddings, cents, idCol, embCol),
-      queries, k, cents, nprobe, queryIdCol, queryEmbCol)
-
-  private def searchCells(
-      data: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      cents: Array[Array[Double]],
-      nprobe: Int,
-      queryIdCol: String,
-      queryEmbCol: String): DataFrame = {
+      queryEmbCol: String = "query_emb"): DataFrame = {
     // nprobe nearest centroids per query: scored struct array, sorted
     // descending by (cos, idx), sliced — queries are small by contract.
     // Same nlist-proportional-codegen concern as assignment: large
@@ -407,16 +359,8 @@ object Similarity {
     val probed = qBase
       .withColumn("probe", probeCells)
       .select(col("query_id"), col("qemb"), explode(col("probe")).as("cell"))
-    val topk = udaf(new TopKAgg(k))
-    probed.join(data, "cell")
-      .withColumn("cos", Dedup.cosine(col("emb"), col("qemb")))
-      .filter(col("vec_id").isNotNull && col("cos").isNotNull && !isnan(col("cos")))
-      .groupBy("query_id")
-      .agg(topk(col("vec_id"), col("cos")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "sv")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("sv.vec_id").as("vec_id"), col("sv.cos").as("cos"))
-      .orderBy("query_id", "rank")
+    TopK.rank(probed.join(assigned, "cell")
+      .withColumn("cos", Dedup.cosine(col("emb"), col("qemb"))), k)
   }
 
   /** Mean-pool groups of vectors into one vector per group — e.g. chunk
@@ -460,8 +404,11 @@ object Similarity {
     approx.join(broadcast(recall), "query_id")
   }
 
-  /** Approximate top-k: sign-LSH buckets with 1-bit multiprobe. Recall is
-    * validated against the brute-force baseline in SimilaritySpec.
+  /** Approximate top-k: sign-LSH buckets with 1-bit multiprobe, one bit
+    * per hyperplane in `planes` (the model: [[Dedup.hyperplanes]] for
+    * seeded Gaussian planes, [[integerPlanes]] for the pinned planes whose
+    * bucket assignment, cosine and rank a SQL oracle replays). Recall is
+    * validated against the brute-force baseline in DedupSpec.
     *
     * Precondition: `idCol` values must be unique in `embeddings` — the
     * no-distinct candidate generation below counts on each vector living
@@ -471,58 +418,11 @@ object Similarity {
       embeddings: DataFrame,
       queries: DataFrame,
       k: Int,
-      dim: Int = 64,
-      bits: Int = 10,
-      seed: Long = 42L,
-      idCol: String = "vec_id",
-      embCol: String = "embedding",
-      queryIdCol: String = "query_id",
-      queryEmbCol: String = "query_emb"): DataFrame =
-    lshTopKWithPlanes(embeddings, queries, k, Dedup.hyperplanes(dim, bits, seed),
-      idCol, embCol, queryIdCol, queryEmbCol)
-
-  /** Deterministic INTEGER-coordinate hyperplanes for the replayable twin:
-    * plane(j)(i) = ((2654435761·(j·dim + i + 1) + 97) mod 1000000007) −
-    * 500000003, exact in a double (< 2^53), so a SQL engine can regenerate
-    * the planes from two loop indices with BIGINT arithmetic and every
-    * sign decision replays bit-for-bit (the dot product is the same
-    * left-to-right IEEE double fold on both sides). Quality-wise the
-    * coordinates are uniform on [−5e8, 5e8] — random-projection LSH only
-    * needs symmetric direction sampling, not Gaussian coordinates. */
-  private[graft] def integerPlanes(dim: Int, bits: Int): Array[Array[Double]] =
-    Array.tabulate(bits)(j => Array.tabulate(dim)(i =>
-      ((2654435761L * (j.toLong * dim + i + 1) + 97L) % 1000000007L - 500000003L).toDouble))
-
-  /** SQL-replayable twin of [[lshTopK]] (the minhash/simhash twin recipe
-    * applied to ANN): the IDENTICAL pipeline — same bucketing expression,
-    * same bits+1 multiprobe, same no-distinct candidate equijoin, same
-    * k-capped [[TopKAgg]] ranking — through [[lshTopKWithPlanes]], with
-    * [[integerPlanes]] instead of seeded Gaussian planes so an oracle can
-    * replay bucket assignment, cosine, and rank exactly. A structural
-    * regression in the production path (bucketing, probing, ranking)
-    * breaks this query's green row. */
-  def lshTopKReplayable(
-      embeddings: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      dim: Int = 64,
-      bits: Int = 10,
-      idCol: String = "vec_id",
-      embCol: String = "embedding",
-      queryIdCol: String = "query_id",
-      queryEmbCol: String = "query_emb"): DataFrame =
-    lshTopKWithPlanes(embeddings, queries, k, integerPlanes(dim, bits),
-      idCol, embCol, queryIdCol, queryEmbCol)
-
-  private def lshTopKWithPlanes(
-      embeddings: DataFrame,
-      queries: DataFrame,
-      k: Int,
       planes: Array[Array[Double]],
-      idCol: String,
-      embCol: String,
-      queryIdCol: String,
-      queryEmbCol: String): DataFrame = {
+      idCol: String = "vec_id",
+      embCol: String = "embedding",
+      queryIdCol: String = "query_id",
+      queryEmbCol: String = "query_emb"): DataFrame = {
     requireNumericId(embeddings, idCol)
     val bits = planes.length
     val data = embeddings.select(
@@ -543,15 +443,22 @@ object Similarity {
     // here would only add a full extra exchange of the candidate set.
     // Ranking via the k-capped aggregator (see bruteForceTopK) keeps the
     // per-query state bounded regardless of candidate count.
-    val topk = udaf(new TopKAgg(k))
-    probed.join(data, "bucket")
-      .withColumn("cos", Dedup.cosine(col("emb"), col("qemb")))
-      .filter(col("vec_id").isNotNull && col("cos").isNotNull && !isnan(col("cos")))
-      .groupBy("query_id")
-      .agg(topk(col("vec_id").cast("long"), col("cos")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "sv")))
-      .select(col("query_id"), (col("pos") + 1).as("rank"),
-        col("sv.vec_id").as("vec_id"), col("sv.cos").as("cos"))
-      .orderBy("query_id", "rank")
+    TopK.rank(probed.join(data, "bucket")
+      .withColumn("cos", Dedup.cosine(col("emb"), col("qemb"))), k)
   }
+
+  /** Deterministic INTEGER-coordinate hyperplanes — a pinned model for
+    * [[lshTopK]] (as planes) and for [[ivfTopK]], [[SemDedup]] and
+    * [[ClusterCurate]] (as centroids): plane(j)(i) =
+    * ((2654435761·(j·dim + i + 1) + 97) mod 1000000007) − 500000003,
+    * exact in a double (< 2^53), so a SQL engine can regenerate the
+    * planes from two loop indices with BIGINT arithmetic and every sign
+    * decision and argmax replays bit-for-bit (the dot product is the
+    * same left-to-right IEEE double fold on both sides). Quality-wise the
+    * coordinates are uniform on [−5e8, 5e8] — random-projection LSH only
+    * needs symmetric direction sampling, not Gaussian coordinates; a
+    * trained quantizer can only improve recall over these directions. */
+  def integerPlanes(dim: Int, bits: Int): Array[Array[Double]] =
+    Array.tabulate(bits)(j => Array.tabulate(dim)(i =>
+      ((2654435761L * (j.toLong * dim + i + 1) + 97L) % 1000000007L - 500000003L).toDouble))
 }

@@ -31,22 +31,9 @@ object TextStats {
     (length(text) - length(regexp_replace(text, "[0-9]", ""))).cast("double") /
       greatest(length(text), lit(1))
 
-  def upperRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[A-Z]", ""))).cast("double") /
-      greatest(length(text), lit(1))
-
   def meanWordLen(text: Column): Column =
     length(regexp_replace(trim(text), "\\s+", "")).cast("double") /
       greatest(wsTokenCount(text), lit(1))
-
-  private val EnStopwords = Seq("the", "a", "an", "and", "or", "of", "to", "in",
-    "is", "it", "for", "on", "with", "as", "at", "by", "be", "this", "that", "are")
-
-  def stopwordRatio(text: Column): Column = {
-    val toks = Dedup.tokens(text)
-    size(filter(toks, t => t.isInCollection(EnStopwords))).cast("double") /
-      greatest(size(toks), lit(1))
-  }
 
   /** Heuristic [0,1] quality score: length in a sane band, low digit/punct
     * noise, plausible word lengths. Weights are documented constants, not
@@ -1337,12 +1324,6 @@ object TextStats {
       .otherwise(array(array_min(grams)))
     array_distinct(windows)
   }
-
-  /** One 64-bit document fingerprint (stable content hash of the winnowed
-    * set). */
-  def docFingerprint(text: Column, k: Int = 8, w: Int = 4): Column =
-    xxhash64(array_join(transform(array_sort(winnowingFingerprints(text, k, w)),
-      v => v.cast("string")), ","))
 
   /** URL matcher shared by the domain stats and the blocklist filter.
     * RE2-compatible (no lookaround), scheme-anchored, host = dotted

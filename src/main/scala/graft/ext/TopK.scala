@@ -2,7 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.{DataFrame, Encoder}
+import org.apache.spark.sql.functions._
 
 /** One scored candidate. Top-level (not nested/private) so Catalyst's
   * generated serializers can reach it. */
@@ -25,8 +26,8 @@ case class ScoredVec(vec_id: Long, cos: Double)
   *
   * Contract: callers must pre-filter null ids / null or NaN scores — the
   * typed input deserializer asserts non-null primitives, and `better`'s
-  * strict comparisons would silently drop NaN rows (every Similarity path
-  * filters `cos IS NOT NULL AND NOT isnan(cos)`, mirrored in the oracle).
+  * strict comparisons would silently drop NaN rows ([[TopK.rank]] filters
+  * `cos IS NOT NULL AND NOT isnan(cos)`, mirrored in the oracle).
   */
 class TopKAgg(k: Int) extends Aggregator[ScoredVec, Array[ScoredVec], Array[ScoredVec]] {
   require(k > 0, "k must be positive")
@@ -73,4 +74,27 @@ class TopKAgg(k: Int) extends Aggregator[ScoredVec, Array[ScoredVec], Array[Scor
   // shuffles move packed rows rather than serialized Java objects.
   def bufferEncoder: Encoder[Array[ScoredVec]] = ExpressionEncoder[Array[ScoredVec]]()
   def outputEncoder: Encoder[Array[ScoredVec]] = ExpressionEncoder[Array[ScoredVec]]()
+}
+
+/** The exact top-k step every search method shares. */
+object TopK {
+
+  /** Rank a scored candidate frame `(query_id, vec_id, cos, …)` into
+    * `(query_id, rank, vec_id: bigint, cos)`, at most `k` rows per query,
+    * ordered by (query_id, rank). Rows with a null id or a null/NaN score
+    * are dropped first (the [[TopKAgg]] contract); ties break by vec_id
+    * ascending; rank starts at 1. The candidate generator (broadcast
+    * scan, bucket or cell equijoin, ADC lookup) is the caller's; this
+    * ranking is identical for all of them. */
+  def rank(scored: DataFrame, k: Int): DataFrame = {
+    val topk = udaf(new TopKAgg(k))
+    scored
+      .filter(col("vec_id").isNotNull && col("cos").isNotNull && !isnan(col("cos")))
+      .groupBy("query_id")
+      .agg(topk(col("vec_id").cast("long"), col("cos")).as("top"))
+      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "sv")))
+      .select(col("query_id"), (col("pos") + 1).as("rank"),
+        col("sv.vec_id").as("vec_id"), col("sv.cos").as("cos"))
+      .orderBy("query_id", "rank")
+  }
 }

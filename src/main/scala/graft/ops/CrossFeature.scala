@@ -63,6 +63,12 @@ object CrossFeature {
     minP
   }
 
+  /** Row order of a pair series: [[Panel.DateOrder]] (null date first,
+    * sub-millisecond digits kept), then the two values. */
+  private val PairOrder: Ordering[(String, java.sql.Timestamp, Double, Double)] =
+    Ordering.by((r: (String, java.sql.Timestamp, Double, Double)) => (r._2, r._3, r._4))(
+      Ordering.Tuple3(Panel.DateOrder, Ordering.Double.TotalOrdering, Ordering.Double.TotalOrdering))
+
   case class PairRow(
       group_key: String,
       pair: String,
@@ -102,7 +108,7 @@ object CrossFeature {
       .as[(String, java.sql.Timestamp, Double, Double)]
       .groupByKey(_._1)
       .mapGroups { (g: String, it: Iterator[(String, java.sql.Timestamp, Double, Double)]) =>
-        val rows = it.toArray.sortBy(r => (r._2.getTime, r._3, r._4))
+        val rows = it.toArray.sorted(PairOrder)
         val a = rows.map(_._3)
         val b = rows.map(_._4)
         if (a.length < minLen) CoreRow(g, pairName, None, None, None, None, None)
@@ -142,7 +148,7 @@ object CrossFeature {
       .as[(String, java.sql.Timestamp, Double, Double)]
       .groupByKey(_._1)
       .mapGroups { (g: String, it: Iterator[(String, java.sql.Timestamp, Double, Double)]) =>
-        val rows = it.toArray.sortBy(r => (r._2.getTime, r._3, r._4))
+        val rows = it.toArray.sorted(PairOrder)
         val a = rows.map(_._3)
         val b = rows.map(_._4)
         if (a.length < minLen) PairRow(g, pairName, None, None, None)

@@ -53,14 +53,6 @@ object Moments {
         sampleKurt(col("value")).as("kurtosis"))
       .orderBy("feature", "group_key")
 
-  /** G3 — per-feature rejection proportion of a p-value column
-    * (time_series_study.py:228-236): mean of 1{p < alpha}, nulls skipped. */
-  def rejectionProportion(results: DataFrame, pCol: String, alpha: Double = 0.05): DataFrame =
-    results
-      .groupBy("feature")
-      .agg(avg(when(col(pCol) < alpha, 1.0).otherwise(0.0)).as(s"prop_${pCol}_lt_alpha"))
-      .orderBy("feature")
-
   /** G4 — cross-sectional dispersion: per-date sample std of the per-group
     * values of one feature (time_series_study.py:437-472). The pandas
     * unstack-then-row-std is just a grouped aggregate in long format; ddof=1

@@ -724,47 +724,4 @@ object StreamOps {
   def readTermCountStore(spark: SparkSession, storeDir: String): DataFrame =
     spark.read.parquet(storeDir)
       .select(col("term"), col("cnt").cast("long").as("cnt"))
-
-  /** readStream → foreachBatch wiring for the term-count store.
-    * `partitionedStore = true` selects the [[termCountUpsertBatch]]
-    * hash-partitioned layout (open vocabularies; read back with
-    * [[readTermCountStore]]); the default is the single-file
-    * [[termCountUpdateBatch]] layout (dictionary-scale vocabularies). */
-  def termCountStream(
-      spark: SparkSession,
-      sourceDir: String,
-      schema: StructType,
-      storeDir: String,
-      textCol: String = "text",
-      partitionedStore: Boolean = false,
-      numBuckets: Int = 32): StreamingQuery = {
-    val stream = spark.readStream.schema(schema).parquet(sourceDir)
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          if (partitionedStore)
-            termCountUpsertBatch(batch.toDF(), textCol, storeDir, numBuckets)
-          else { termCountUpdateBatch(batch.toDF(), textCol, storeDir); () }
-        }
-      }
-      .start()
-  }
-
-  /** readStream → foreachBatch wiring for the CMS store: each arriving
-    * parquet file's documents fold into `storeDir`. */
-  def cmsStream(
-      spark: SparkSession,
-      sourceDir: String,
-      schema: StructType,
-      storeDir: String,
-      textCol: String = "text",
-      width: Int = 1024,
-      depth: Int = 4): StreamingQuery = {
-    val stream = spark.readStream.schema(schema).parquet(sourceDir)
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) { cmsUpdateBatch(batch.toDF(), textCol, storeDir, width, depth); () }
-      }
-      .start()
-  }
 }

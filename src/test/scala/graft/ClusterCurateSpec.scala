@@ -73,13 +73,13 @@ class ClusterCurateSpec extends SparkSpec {
     val n = 40
     val df = (0 until n).map(i =>
       (i.toLong, Array.tabulate(8)(d => math.sin(i * 7 + d).abs + 0.1))).toDF("vec_id", "embedding")
-    val kept = ClusterCurate.clusterBalancedKeepReplayable(df, quota = 3, dim = 8, nlist = 4)
+    val kept = ClusterCurate.clusterBalancedKeep(df, Similarity.integerPlanes(8, 4), quota = 3)
     val byCell = kept.groupBy("cell").agg(count(lit(1)).as("n"), max("rank").as("mr"))
       .collect().map(r => (r.getAs[Long]("n"), r.getAs[Int]("mr")))
     assert(byCell.nonEmpty && byCell.forall { case (cnt, mr) => cnt <= 3 && mr == cnt },
       s"got ${byCell.toSeq}")
     // deterministic: two runs agree exactly
-    assert(kept.collect().toSeq == ClusterCurate.clusterBalancedKeepReplayable(
-      df, quota = 3, dim = 8, nlist = 4).collect().toSeq)
+    assert(kept.collect().toSeq == ClusterCurate.clusterBalancedKeep(
+      df, Similarity.integerPlanes(8, 4), quota = 3).collect().toSeq)
   }
 }

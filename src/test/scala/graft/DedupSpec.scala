@@ -287,7 +287,7 @@ class DedupSpec extends SparkSpec {
       .select($"vec_id".as("query_id"), $"embedding".as("query_emb"))
     val brute = Similarity.bruteForceTopK(df, q, k = 5, idCol = "vec_id")
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSet
-    val approx = Similarity.lshTopK(df, q, k = 5, dim = 16, bits = 8)
+    val approx = Similarity.lshTopK(df, q, k = 5, Dedup.hyperplanes(16, 8, 42L))
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSet
     val recall = brute.intersect(approx).size.toDouble / brute.size
     assert(recall >= 0.8, s"recall $recall")
@@ -295,7 +295,7 @@ class DedupSpec extends SparkSpec {
     (0L until 5L).foreach(i => assert(approx.contains((i, i))))
     // the in-query recall column meets the documented fixture-scale floor
     val withRec = Similarity.withRecallAtK(
-      Similarity.lshTopK(df, q, k = 5, dim = 16, bits = 8),
+      Similarity.lshTopK(df, q, k = 5, Dedup.hyperplanes(16, 8, 42L)),
       Similarity.bruteForceTopK(df, q, k = 5))
     withRec.select("query_id", "recall_at_k").distinct().collect().foreach { r =>
       assert(r.getAs[Double]("recall_at_k") >= 0.8,
@@ -317,7 +317,7 @@ class DedupSpec extends SparkSpec {
       .select($"vec_id".as("query_id"), $"embedding".as("query_emb"))
     val brute = Similarity.bruteForceTopK(df, q, k = 5, idCol = "vec_id")
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSet
-    val approx = Similarity.lshTopKReplayable(df, q, k = 5, dim = 16, bits = 8)
+    val approx = Similarity.lshTopK(df, q, k = 5, Similarity.integerPlanes(16, 8))
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSet
     val recall = brute.intersect(approx).size.toDouble / brute.size
     assert(recall >= 0.8, s"recall $recall")
@@ -337,7 +337,7 @@ class DedupSpec extends SparkSpec {
       .select($"vec_id".as("query_id"), $"embedding".as("query_emb"))
     val brute = Similarity.bruteForceTopK(df, q, k = 5, idCol = "vec_id")
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSet
-    val approx = Similarity.ivfTopKReplayable(df, q, k = 5, dim = 16, nlist = 8, nprobe = 3)
+    val approx = Similarity.ivfTopK(df, q, k = 5, Similarity.integerPlanes(16, 8), nprobe = 3)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSet
     // self lives in its own cell, and that cell is always probed (rank-1
     // centroid of a vector is its own cell's centroid by definition)
@@ -388,7 +388,7 @@ class DedupSpec extends SparkSpec {
       .select($"vec_id".as("query_id"), $"embedding".as("query_emb"))
     val brute = Similarity.bruteForceTopK(df, q, k = 5, idCol = "vec_id")
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSet
-    val approx = Similarity.ivfTopKReplayable(df, q, k = 5, dim = 16, nlist = 24, nprobe = 6)
+    val approx = Similarity.ivfTopK(df, q, k = 5, Similarity.integerPlanes(16, 24), nprobe = 6)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSet
     (0L until 5L).foreach(i => assert(approx.contains((i, i))))
     val recall = brute.intersect(approx).size.toDouble / brute.size
@@ -398,7 +398,7 @@ class DedupSpec extends SparkSpec {
   test("pre-assigned IVF search equals direct search (amortized index path)") {
     // assignCells -> persist partitioned by cell -> ivfTopKPreAssigned:
     // the amortized deployment shape. Must rank identically to the
-    // direct ivfTopKWithCentroids pipeline on the same pinned quantizer.
+    // direct ivfTopK pipeline on the same pinned quantizer.
     val rng = new scala.util.Random(7)
     val df = (0L until 300L).map { i =>
       (i, Seq.fill(16)(rng.nextGaussian()))
@@ -406,7 +406,7 @@ class DedupSpec extends SparkSpec {
     val cents = Similarity.integerPlanes(16, 8)
     val q = df.filter($"vec_id" < 4)
       .select($"vec_id".as("query_id"), $"embedding".as("query_emb"))
-    val direct = Similarity.ivfTopKReplayable(df, q, k = 5, dim = 16, nlist = 8, nprobe = 3)
+    val direct = Similarity.ivfTopK(df, q, k = 5, cents, nprobe = 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     val dir = java.nio.file.Files.createTempDirectory("ivf_cells").toString
     Similarity.assignCells(df, cents).write.mode("overwrite").partitionBy("cell").parquet(dir)
@@ -457,7 +457,8 @@ class DedupSpec extends SparkSpec {
       .select($"vec_id".as("query_id"), $"embedding".as("query_emb"))
     val brute = Similarity.bruteForceTopK(df, q, k = 5)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSet
-    val approx = Similarity.ivfTopK(df, q, k = 5, nlist = 8, nprobe = 3)
+    val cents = Similarity.trainIvfCentroids(df, nlist = 8)
+    val approx = Similarity.ivfTopK(df, q, k = 5, cents, nprobe = 3)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSet
     val recall = brute.intersect(approx).size.toDouble / brute.size
     assert(recall >= 0.8, s"recall $recall")
@@ -465,7 +466,7 @@ class DedupSpec extends SparkSpec {
     (0L until 5L).foreach(i => assert(approx.contains((i, i))))
     // the in-query recall column meets the documented fixture-scale floor
     val withRec = Similarity.withRecallAtK(
-      Similarity.ivfTopK(df, q, k = 5, nlist = 8, nprobe = 3),
+      Similarity.ivfTopK(df, q, k = 5, cents, nprobe = 3),
       Similarity.bruteForceTopK(df, q, k = 5))
     withRec.select("query_id", "recall_at_k").distinct().collect().foreach { r =>
       assert(r.getAs[Double]("recall_at_k") >= 0.8,

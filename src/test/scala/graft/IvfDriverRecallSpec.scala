@@ -29,8 +29,7 @@ class IvfDriverRecallSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_emb"))
     val brute = Similarity.bruteForceTopK(emb, q, k = 5)
-    val pinned = Similarity.ivfTopKWithCentroids(emb, q, 5,
-      Similarity.integerPlanes(64, 16), 4, "vec_id", "embedding", "query_id", "query_emb")
+    val pinned = Similarity.ivfTopK(emb, q, 5, Similarity.integerPlanes(64, 16), 4)
     val recalls = Similarity.withRecallAtK(pinned, brute)
       .select("query_id", "recall_at_k").distinct()
       .collect().map(r => r.getAs[Long]("query_id") -> r.getAs[Double]("recall_at_k")).toMap
@@ -45,7 +44,8 @@ class IvfDriverRecallSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_emb"))
     val brute = Similarity.bruteForceTopK(emb, q, k = 5)
-    val trained = Similarity.ivfTopK(emb, q, k = 5, nlist = 16, nprobe = 4, trainSampleMod = 2)
+    val trained = Similarity.ivfTopK(emb, q, k = 5,
+      Similarity.trainIvfCentroids(emb, nlist = 16, sampleMod = 2), nprobe = 4)
     val recalls = Similarity.withRecallAtK(trained, brute)
       .select("query_id", "recall_at_k").distinct()
       .collect().map(_.getAs[Double]("recall_at_k"))

@@ -100,7 +100,8 @@ class NegativesSpec extends SparkSpec {
     // path approximates (self-join via the broadcast-anchor form)
     val brute = Negatives.hardNegatives(emb, emb, k)
       .select(col("query_id"), col("vec_id"))
-    val celled = Negatives.hardNegativesCelled(emb, k, nlist = 16, nprobe = 4)
+    val celled = Negatives.hardNegativesCelled(emb, k,
+      Similarity.trainIvfCentroids(emb, nlist = 16), nprobe = 4)
       .select(col("query_id"), col("vec_id"))
     val nAnchors = brute.select("query_id").distinct().count()
     val hits = brute.join(celled, Seq("query_id", "vec_id")).count()

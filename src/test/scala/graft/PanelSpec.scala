@@ -3,10 +3,11 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Encoders}
 import graft.core.Panel
-import graft.ops.UnitRoots
+import graft.ops.{CrossFeature, UnitRoots}
 
 /** The per-series policy of `Panel.perSeries`: which points reach a
-  * kernel, in which order, and which series get a row. */
+  * kernel, in which order, and which series get a row — and the same
+  * date order in CrossFeature's per-pair operators. */
 class PanelSpec extends SparkSpec {
   import spark.implicits._
 
@@ -67,5 +68,45 @@ class PanelSpec extends SparkSpec {
     val rows = UnitRoots.stationarityTests(melted(pts)).collect()
     assert(rows.length == 1)
     assert(!rows.head.isNullAt(rows.head.fieldIndex("adf_stat")))
+  }
+
+  /** CrossFeature's two kernels on (x, y) series already in order:
+    * pairCore's (eg_df0_stat, granger_chi2_lag1) and pairAnalysis's
+    * (coint_stat, granger_p) at the default maxLag. */
+  private def pairKernels(x: Array[Double], y: Array[Double]): Seq[Double] = {
+    val df0 = UnitRoots.adfuller(CrossFeature.egFit(x, y).resid.toArray, "n",
+      maxlagOverride = Some(0))._1
+    Seq(df0, CrossFeature.grangerChi2(x, y, 1), CrossFeature.coint(x, y)._1,
+      CrossFeature.grangerMinP(x, y, 5))
+  }
+
+  /** The same four numbers from the operators, on group "a" of `pts`. */
+  private def pairOperators(pts: Seq[(Option[Timestamp], Double, Double)]): Seq[Double] = {
+    val wide = pts.map { case (d, x, y) => (d, "a", x, y) }.toDF("date", "group_key", "x", "y")
+    val core = CrossFeature.pairCore(wide, "date", "group_key", "x", "y").head()
+    val full = CrossFeature.pairAnalysis(wide, "date", "group_key", "x", "y").head()
+    Seq(core.getAs[Double]("eg_df0_stat"), core.getAs[Double]("granger_chi2_lag1"),
+      full.getAs[Double]("coint_stat"), full.getAs[Double]("granger_p"))
+  }
+
+  test("CrossFeature pairCore and pairAnalysis order each pair series by Panel.DateOrder") {
+    val rng = new scala.util.Random(11)
+    val n = 40
+    val x = Array.fill(n)(rng.nextGaussian()).scanLeft(0.0)(_ + _).tail
+    val y = x.map(v => 0.8 * v + rng.nextGaussian())
+    val table: Seq[(String, Seq[(Option[Timestamp], Double, Double)])] = Seq(
+      ("points 100 µs apart arrive in time order, not value order",
+        (0 until n).map(i => (Some(at(i * 100L)), x(i), y(i)))),
+      ("a null date sorts first",
+        (0 until n).map(i => (if (i == 0) None else Some(at(i * 1000000L)), x(i), y(i)))))
+    table.foreach { case (name, pts) =>
+      // shuffled input: the operators must restore the order themselves
+      val got = pairOperators(new scala.util.Random(2).shuffle(pts))
+      assert(got == pairKernels(x, y), name)
+    }
+    // the time order matters at this spacing: ordered by (millisecond,
+    // value) the kernels see a different series
+    val byMilli = table.head._2.sortBy(p => (p._1.get.getTime, p._2, p._3))
+    assert(pairKernels(byMilli.map(_._2).toArray, byMilli.map(_._3).toArray) != pairKernels(x, y))
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.functions._
 import graft.ext.{Pq, Similarity}
 
@@ -72,8 +74,9 @@ class PqSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val queries = corpus.filter($"vec_id" < 2)
       .select($"vec_id".as("query_id"), $"embedding".as("query_emb"))
-    val a = Pq.pqTopKReplayable(corpus, queries, k = 5, dim = 8, m = 4, ksub = 4).collect()
-    val b = Pq.pqTopKReplayable(corpus, queries, k = 5, dim = 8, m = 4, ksub = 4).collect()
+    val cb = Pq.integerCodebooks(4, 4, 2)
+    val a = Pq.pqTopK(Pq.pqEncode(corpus, cb), queries, cb, k = 5).collect()
+    val b = Pq.pqTopK(Pq.pqEncode(corpus, cb), queries, cb, k = 5).collect()
     assert(a.toSeq == b.toSeq, "replayable twin must be run-deterministic")
     val byQ = a.groupBy(_.getAs[Any]("query_id"))
     assert(byQ.size == 2 && byQ.values.forall(_.length == 5))
@@ -111,8 +114,7 @@ class PqSpec extends SparkSpec {
 
   test("shape guards: dim % m, short vectors filtered") {
     intercept[IllegalArgumentException] {
-      Pq.pqTopKReplayable(Seq((1L, Seq(1.0))).toDF("vec_id", "embedding"),
-        Seq((1L, Seq(1.0))).toDF("query_id", "query_emb"), k = 1, dim = 10, m = 3)
+      Pq.trainPqCodebooks(Seq((1L, Seq(1.0))).toDF("vec_id", "embedding"), dim = 10, m = 3)
     }
     val cb = Pq.integerCodebooks(2, 2, 2)
     val mixed = Seq((1L, Seq(1.0, 2.0, 3.0, 4.0)), (2L, Seq(1.0, 2.0)))
@@ -200,14 +202,76 @@ class PqSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val q = df.filter($"vec_id" < 3)
       .select($"vec_id".as("query_id"), $"embedding".cast("array<double>").as("query_emb"))
-    val a = Pq.opqTopKReplayable(df, q, k = 4, dim = 16, m = 4, ksub = 4)
+    val a = Pq.opqTopK(Pq.opqEncode(df, rot, cb), q, rot, cb, k = 4)
       .collect().map(x => (x.getLong(0), x.getInt(1), x.getLong(2), x.getDouble(3))).toSeq
-    val b = Pq.opqTopKReplayable(df.repartition(5), q, k = 4, dim = 16, m = 4, ksub = 4)
+    val b = Pq.opqTopK(Pq.opqEncode(df.repartition(5), rot, cb), q, rot, cb, k = 4)
       .collect().map(x => (x.getLong(0), x.getInt(1), x.getLong(2), x.getDouble(3))).toSeq
     assert(a == b, "twin not deterministic under repartitioning")
     a.filter(_._2 == 1).foreach { case (qid, _, vid, cos) =>
       // multiple vectors may share codes; rank-1 must still score cos==1
       assert(math.abs(cos - 1.0) < 1e-12, s"query $qid rank-1 cos $cos (vec $vid)")
     }
+  }
+
+  /** ScalaUDF calls in a frame's analyzed plan (the optimizer folds
+    * projections over a local relation away). */
+  private def udfCalls(d: DataFrame): Int =
+    d.queryExecution.analyzed.collect { case p =>
+      p.expressions.map(_.collect { case u: ScalaUDF => u }.size).sum
+    }.sum
+
+  /** (query_id, rank, vec_id, cos) rows of a top-k frame. */
+  private def topRows(d: DataFrame): Seq[(Long, Int, Long, Double)] =
+    d.collect().map(x => (x.getLong(0), x.getInt(1), x.getLong(2), x.getDouble(3))).toSeq
+
+  /** (vec_id, codes) of an encoded frame, by id. */
+  private def codeRows(d: DataFrame): Seq[(Long, Seq[Int])] =
+    d.collect().map(x => (x.getLong(0), x.getSeq[Int](1).toSeq)).toSeq.sortBy(_._1)
+
+  test("opq: a signed permutation takes the fused branch and equals the dense rotation") {
+    val dim = 16
+    val rng = new scala.util.Random(31)
+    val df = (0L until 120L).map(i => (i, Seq.fill(dim)(rng.nextGaussian())))
+      .toDF("vec_id", "embedding")
+    val q = df.filter($"vec_id" < 4)
+      .select($"vec_id".as("query_id"), $"embedding".cast("array<double>").as("query_emb"))
+    val rot = Pq.signedPermutationRotation(dim)
+    val cb = Pq.trainPqCodebooks(df, dim, m = 4, ksub = 8, iters = 2)
+    val fused = Pq.opqEncode(df, rot, cb)
+    // the same rotation through the dense matrix-vector UDF, then plain PQ
+    val rotate = Pq.rotateUdf(rot)
+    val dense = Pq.pqEncode(
+      df.select($"vec_id", rotate($"embedding".cast("array<double>")).as("embedding")), cb)
+    assert(udfCalls(fused) == 1, "a signed permutation must fuse into the encode UDF")
+    assert(udfCalls(dense) == 2)
+    assert(codeRows(fused) == codeRows(dense))
+    val fusedTop = topRows(Pq.opqTopK(fused, q, rot, cb, k = 5))
+    val denseTop = topRows(Pq.pqTopK(dense,
+      q.select($"query_id", rotate($"query_emb").as("query_emb")), cb, k = 5))
+    assert(fusedTop.length == 20)
+    assert(fusedTop == denseTop, "fused and dense rotation must give the same top-k, bit for bit")
+  }
+
+  test("opq: a trained rotation runs the dense branch through opqEncode and opqTopK") {
+    val rng = new scala.util.Random(37)
+    val mix = Array.fill(8, 2)(rng.nextGaussian())
+    val df = (0L until 200L).map { i =>
+      val g = Array.fill(2)(rng.nextGaussian())
+      (i, mix.map(row => row(0) * g(0) + row(1) * g(1) + rng.nextGaussian() * 0.05).toSeq)
+    }.toDF("vec_id", "embedding")
+    val q = df.filter($"vec_id" < 3)
+      .select($"vec_id".as("query_id"), $"embedding".cast("array<double>").as("query_emb"))
+    val (r, cb) = Pq.trainOpq(df, dim = 8, m = 4, ksub = 8, iters = 2)
+    assert(r.flatten.count(_ != 0.0) > 8, "the trained rotation is not a signed permutation")
+    val enc = Pq.opqEncode(df, r, cb)
+    assert(udfCalls(enc) == 2, "a dense rotation must rotate, then encode")
+    val rotate = Pq.rotateUdf(r)
+    val dense = Pq.pqEncode(
+      df.select($"vec_id", rotate($"embedding".cast("array<double>")).as("embedding")), cb)
+    assert(codeRows(enc) == codeRows(dense))
+    val got = topRows(Pq.opqTopK(enc, q, r, cb, k = 5))
+    assert(got.length == 15)
+    assert(got == topRows(Pq.pqTopK(dense,
+      q.select($"query_id", rotate($"query_emb").as("query_emb")), cb, k = 5)))
   }
 }

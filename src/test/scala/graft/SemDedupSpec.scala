@@ -15,15 +15,18 @@ class SemDedupSpec extends SparkSpec {
     (5L, Array(0.0, 0.0, 0.0, 0.0))
   ).toDF("vec_id", "embedding")
 
+  /** A one-cell Lloyd-trained quantizer: every vector shares the cell. */
+  private def oneTrainedCell = Similarity.trainIvfCentroids(vecs, nlist = 1, iters = 1)
+
   test("planted near-identical pair found; orthogonal and zero-norm never pair") {
     // nlist=1 puts everything in one cell: the pair cut alone decides
-    val pairs = SemDedup.semanticNearDupPairs(vecs, threshold = 0.95, nlist = 1, iters = 1)
+    val pairs = SemDedup.semanticNearDupPairs(vecs, oneTrainedCell, threshold = 0.95)
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     assert(pairs == Set((1L, 2L)), s"got $pairs")
   }
 
   test("semanticDeduplicate keeps min-id representative and all non-dups") {
-    val kept = SemDedup.semanticDeduplicate(vecs, threshold = 0.95, nlist = 1, iters = 1)
+    val kept = SemDedup.semanticDeduplicate(vecs, oneTrainedCell, threshold = 0.95)
       .collect().map(_.getAs[Long]("vec_id")).sorted
     assert(kept.sameElements(Array(1L, 3L, 4L, 5L)), s"got ${kept.toSeq}")
   }
@@ -34,16 +37,16 @@ class SemDedupSpec extends SparkSpec {
     // clears the threshold, and the keep set is embeddings minus losers
     val assigned = Similarity.assignCells(vecs, Similarity.integerPlanes(4, 2))
       .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Int]("cell")).toMap
-    val pairs = SemDedup.semanticNearDupPairsReplayable(vecs, threshold = 0.95,
-        dim = 4, nlist = 2)
+    val pairs = SemDedup.semanticNearDupPairs(vecs, Similarity.integerPlanes(4, 2),
+        threshold = 0.95)
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
         r.getAs[Double]("cos")))
     pairs.foreach { case (a, b, c) =>
       assert(assigned(a) == assigned(b), s"cross-cell pair ($a,$b)")
       assert(c >= 0.95 && a < b)
     }
-    val kept = SemDedup.semanticDeduplicateReplayable(vecs, threshold = 0.95,
-        dim = 4, nlist = 2)
+    val kept = SemDedup.semanticDeduplicate(vecs, Similarity.integerPlanes(4, 2),
+        threshold = 0.95)
       .collect().map(_.getAs[Long]("vec_id")).toSet
     val losers = pairs.map(_._2).toSet // min-id keep on a single pair chain
     assert(kept == Set(1L, 2L, 3L, 4L, 5L) -- losers, s"kept $kept losers $losers")
@@ -61,9 +64,9 @@ class SemDedupSpec extends SparkSpec {
 
   test("threshold is respected exactly: lowering it admits more pairs") {
     // cos(1,2) = 1/(sqrt(1.0004)*sqrt(1.0001)) ~= 0.99975: above it, no pairs
-    val strict = SemDedup.semanticNearDupPairs(vecs, threshold = 0.9999, nlist = 1, iters = 1)
+    val strict = SemDedup.semanticNearDupPairs(vecs, oneTrainedCell, threshold = 0.9999)
       .count()
-    val loose = SemDedup.semanticNearDupPairs(vecs, threshold = -0.5, nlist = 1, iters = 1)
+    val loose = SemDedup.semanticNearDupPairs(vecs, oneTrainedCell, threshold = -0.5)
       .count()
     // 4 finite vectors in one cell -> 6 candidate pairs at the loose cut
     assert(strict == 0 && loose == 6L, s"strict=$strict loose=$loose")
